@@ -50,7 +50,12 @@ final class Graft(val spark: SparkSession, dir: String) {
 
   /** Serve a chunk store over the Prometheus remote read/write wire
     * (the reference's server front door). Returns the started
-    * endpoint; `.start()` was already called, stop() to shut down. */
+    * endpoint; `.start()` was already called, stop() to shut down.
+    * A write answering 200 is accepted and durable in the endpoint's
+    * spool; it becomes visible to reads after the endpoint's drain
+    * runs its next micro-batch (`drain.processAllAvailable()` waits for
+    * that). The drain writes the streaming layout, so the store takes
+    * no direct `append` — one ingest mode per store path. */
   def serveHttp(store: tsdb.ChunkStore, port: Int = 9090): sources.HttpEndpoint = {
     val e = new sources.HttpEndpoint(spark, store, port)
     e.start()

@@ -360,19 +360,12 @@ object SparkEntry {
       val port = ep.start()
       val outDir = java.nio.file.Files.createTempDirectory("graft_q_relay_out").toString
       try {
-        // relay tasks post to an endpoint whose handler runs its OWN
-        // Spark job on this same JVM — if the relay occupies every
-        // task slot, the append job starves and the post times out
-        // (the classic self-referential scheduler deadlock; a real
-        // deployment posts to a DIFFERENT cluster, where this cannot
-        // happen). Leave slots for the inner job at any local[N].
-        val relayTasks = math.max(1, math.min(4,
-          s.sparkContext.defaultParallelism - 2))
         val src = Series.samples(t(s, dir, "events"))
           .filter(col("event_type") === "signup" &&
             col("ts_us") >= T0 && col("ts_us") <= T1)
-          .repartition(relayTasks)
+          .repartition(4) // four concurrent writers, like a sharded remote-write client
         graft.sources.Federation.relay(src, s"http://127.0.0.1:$port/api/v1/write")
+        ep.drain.processAllAvailable() // accepted writes land on the drain's micro-batches
         store.queryAll(Nil, T0, T1)
           .select("series_id", "ts_us", "value")
           .write.mode("overwrite").parquet(outDir)

@@ -37,14 +37,15 @@ object Hybrid {
     * excluded. */
   def bm25TopK(docs: DataFrame, queryPred: Column, k: Int = 20,
                k1: Double = 1.2, b: Double = 0.75, roundTo: Int = 6): DataFrame = {
-    // the postings frame IS the shared unigram-count cache (r13):
-    // (doc_id, term) → count at exactly bm25's tf grain (source is
-    // doc-functional, so the extra grouping key changes nothing), and
-    // the persisted frame already serves the session's other unigram
+    // the postings frame IS the shared unigram-count cache (r13): the
+    // persisted frame already serves the session's other unigram
     // consumers — postings, doc-length and doc-frequency below all
-    // read that one cache instead of a second private tokenize+persist
+    // read that one cache instead of a second private tokenize+persist.
+    // With a `source` column the cache is keyed (doc_id, source, term),
+    // so fold it to bm25's (doc_id, term) tf grain: a doc_id under two
+    // sources counts once toward df and once per term in the postings
     val tf = TextOps.unigramCounts(docs)
-      .select(col("doc_id"), col("term"), col("c").as("tf"))
+      .groupBy(col("doc_id"), col("term")).agg(sum(col("c")).as("tf"))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val dfr = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = broadcast(dl.agg(count(lit(1)).as("n_docs"),

@@ -1,72 +1,62 @@
 package graft.sources
 
 import java.net.InetSocketAddress
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.tsdb.ChunkStore
 
-/** HTTP front door for the Prometheus remote read/write pair — the
-  * last uncovered reference behavior (reference src/server.rs:47-131:
-  * a tiny_http server + rayon worker pool that triages requests by
-  * URL path into a write branch and a read branch and answers
-  * snappy-compressed protobuf).
+/** HTTP front door for the Prometheus remote read/write pair (reference
+  * src/server.rs:47-131: a tiny_http server + rayon worker pool that
+  * triages requests by URL path into a write branch and a read branch
+  * and answers snappy-compressed protobuf), plus the Prometheus query,
+  * metadata, rules and admin APIs over the same store.
   *
-  * Spark-first placement: the listener is a thin wire boundary. A
-  * write request is decoded once ([[RemoteWrite.decode]]) and becomes
-  * a normal [[ChunkStore.append]] — clustering, chunk routing and the
-  * closed-chunk guard all run as the store's existing distributed
-  * plan. A read request runs [[RemoteRead.serve]] — matcher
-  * resolution, partition pruning and Gorilla decode are the store's
-  * federated query plan; only the bounded wire response materializes
-  * on the driver. No query logic lives in the handler.
+  * Spark-first placement: the listener is a thin wire boundary. A read
+  * request runs [[RemoteRead.serve]] — matcher resolution, partition
+  * pruning and Gorilla decode are the store's federated query plan;
+  * only the bounded wire response materializes on the driver. No query
+  * logic lives in a handler. JDK `com.sun.net.httpserver` keeps the
+  * dependency budget at zero (build constraint: no new
+  * libraryDependencies); like the reference, requests run on a fixed
+  * worker pool.
   *
-  * JDK `com.sun.net.httpserver` keeps the dependency budget at zero
-  * (build constraint: no new libraryDependencies). Like the
-  * reference, requests are handled on a fixed worker pool; UNLIKE the
-  * reference's sled backend, parquet appends to one store path must
-  * not race (two concurrent Spark append jobs share a staging
-  * protocol), so direct writes serialize on a store-level lock — the
-  * parallelism lives inside each append job (one task per
-  * (chunk, salt) cluster), not across HTTP requests. Reads are
-  * lock-free and concurrent.
+  * **Write path.** A remote-write request is decoded once at the
+  * boundary (a malformed payload answers 400 before anything durable
+  * happens), then its raw bytes are renamed atomically into the spool
+  * `<store.path>/_spool` — O(payload) per request, no Spark work, no
+  * lock. [[start]] launches [[drain]]
+  * ([[graft.streaming.StreamIngest.startSpoolRemoteWriteSink]],
+  * checkpoint `<store.path>/_spool_checkpoint`): ONE batch-scoped chunk
+  * append per micro-batch, whatever the request count. A 200 means the
+  * batch is accepted and durable in the spool; it becomes visible to
+  * reads after the drain's next micro-batch (a caller that needs
+  * read-after-write calls `drain.processAllAvailable()`). The
+  * checkpoint plus the replay-idempotent batch appends play the
+  * reference's WAL: a new endpoint on the same store resumes from the
+  * checkpoint and drains what an earlier one accepted exactly once.
+  * The drain writes the streaming layout, so a store that takes writes
+  * here takes no direct [[ChunkStore.append]] — one ingest mode per
+  * store path — and one endpoint at a time serves a store path.
   *
-  * **Two write modes.** Prometheus remote-write ships SMALL, FREQUENT
-  * payloads (a few hundred samples per request); one locked Spark
-  * append job per request is O(job) where the reference's in-memory
-  * chunk append (server.rs:56-60) is O(samples) — a real request rate
-  * would saturate on job overhead, not data. So the production mode is
-  * `spool = Some(dir)`: the handler validates the payload at the
-  * boundary (malformed still answers 400 before anything durable
-  * happens) and then only writes the raw bytes to a spool file via an
-  * atomic rename — O(payload) per request, no Spark work, no lock.
-  * [[graft.streaming.StreamIngest.startSpoolRemoteWriteSink]] drains
-  * the spool as a Structured-Streaming file source: ONE append job per
-  * micro-batch regardless of request count, exactly-once via the
-  * checkpoint + idempotent batch-scoped chunk appends, spool files
-  * deleted once committed. 200 then means "accepted and durable"
-  * (spool + checkpoint replay survive a crash), matching remote-write
-  * semantics where ingestion is acknowledged, not queryability.
-  * `spool = None` keeps the direct locked append — the right trade for
-  * low-rate deployments and the lossless-roundtrip drills.
-  *
-  * Status mapping: 200 read hit / write accepted, 400 malformed
-  * payload (the reference folds this into 500; a malformed payload is
-  * malformed on every retry, so the client error code is the honest
-  * one), 404 unknown path, 500 internal failure.
+  * Status mapping, in one place ([[route]]): 200 read hit / write
+  * accepted (204 for delete_series), 400 `bad_data` for bad client
+  * input (IllegalArgumentException or IllegalStateException: malformed
+  * payload, PromQL or parameter, or a verb the store's state refuses),
+  * 404 unknown path, 405 non-POST admin verb, 422 `too_many_series`
+  * when a read crosses its cap, and 500 for anything else — a server
+  * fault, logged to stderr with the method, path and cause, which a
+  * remote-write client retries instead of dropping the batch.
   */
 final class HttpEndpoint(
     spark: SparkSession,
     store: ChunkStore,
     port: Int = 0, // 0 = ephemeral (spec-friendly); fixed in production
-    readPath: String = "/api/v1/read",
-    writePath: String = "/api/v1/write",
-    queryPath: String = "/api/v1/query",
-    queryRangePath: String = "/api/v1/query_range",
     workerNum: Int = 4,
-    spool: Option[String] = None,
     // /federate materializes every matched series' current sample on
     // the driver to serialize the text page (the wire boundary, same
     // semantics as Prometheus federation) — this cap makes a match[]
@@ -83,15 +73,16 @@ final class HttpEndpoint(
     // driver), enforced as a distributed limit(cap+1)
     queryResultCap: Int = 1000000) {
 
-  private val writeLock = new Object
+  /** Where accepted writes wait for [[drain]]: under the store path, so
+    * the whole durable state moves as one directory. */
+  val spoolDir: String = s"${store.path}/_spool"
   private val spoolSeq = new java.util.concurrent.atomic.AtomicLong()
   // Hadoop FS, not java.nio: the spool rides the same filesystem
   // abstraction as the store, so an hdfs:///s3a:// spool dir works on
   // a real cluster (rename is atomic on HDFS/local; an object store
   // would want a direct-write-with-unique-name variant)
-  @transient private lazy val spoolFs = spool.map(d =>
-    new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration))
+  private lazy val spoolFs =
+    new Path(spoolDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Spool one validated payload: write to a dot-prefixed temp name
     * (hidden from Spark's file listing) then atomically rename into
@@ -99,15 +90,14 @@ final class HttpEndpoint(
     * Names are unique (time + sequence + random) and lexically
     * time-ordered for human debugging; the source tracks files by
     * path, so uniqueness is what prevents replay confusion. */
-  private def spoolWrite(dir: String, body: Array[Byte]): Unit = {
+  private def spoolWrite(body: Array[Byte]): Unit = {
     val name = f"w-${System.currentTimeMillis()}%013d-${spoolSeq.incrementAndGet()}%06d-" +
       java.util.UUID.randomUUID().toString.take(8)
-    val fs = spoolFs.get
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
+    val tmp = new Path(spoolDir, s".$name.tmp")
+    val out = spoolFs.create(tmp, true)
     try out.write(body) finally out.close()
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, s"$name.bin")))
-      throw new java.io.IOException(s"spool rename failed for $name under $dir")
+    if (!spoolFs.rename(tmp, new Path(spoolDir, s"$name.bin")))
+      throw new java.io.IOException(s"spool rename failed for $name under $spoolDir")
   }
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val workers = Executors.newFixedThreadPool(workerNum)
@@ -118,30 +108,50 @@ final class HttpEndpoint(
       finally ex.close()
   })
 
-  /** Bind and serve; returns the bound port (resolves port=0). */
-  def start(): Int = { server.start(); boundPort }
+  @volatile private var drainQuery: StreamingQuery = _
+
+  /** The streaming query that appends spooled writes to the store
+    * (running from [[start]] until [[stop]]). */
+  def drain: StreamingQuery = drainQuery
+
+  /** Start the drain, then bind and serve; returns the bound port
+    * (resolves port=0). */
+  def start(): Int = {
+    drainQuery = graft.streaming.StreamIngest.startSpoolRemoteWriteSink(
+      spark, spoolDir, store, s"${store.path}/_spool_checkpoint")
+    server.start()
+    boundPort
+  }
 
   /** The bound port (resolves an ephemeral port=0 request). */
   def boundPort: Int = server.getAddress.getPort
 
+  /** Stop serving, then stop the drain — writes it has not appended
+    * yet stay in the spool for the next endpoint on this store. */
   def stop(): Unit = {
     server.stop(0)
+    Option(drainQuery).foreach(_.stop())
     // HttpServer.stop does NOT shut down a user-provided executor; the
     // non-daemon workers would keep the JVM alive after main returns
     // (found the hard way: a probe main hung on exit with the pool's
     // threads parked)
     workers.shutdown()
+    workers.awaitTermination(10, TimeUnit.SECONDS)
   }
+
+  /** Whether [[stop]] has let every worker thread exit. */
+  private[graft] def workersTerminated: Boolean = workers.isTerminated
 
   private def route(ex: HttpExchange): Unit = {
     val body =
       try ex.getRequestBody.readAllBytes()
       catch { case _: Exception => ex.sendResponseHeaders(400, -1); return }
-    ex.getRequestURI.getPath match {
-      case p if p == writePath => handleWrite(ex, body)
-      case p if p == readPath => handleRead(ex, body)
-      case p if p == queryPath => handleQuery(ex, body)
-      case p if p == queryRangePath => handleQueryRange(ex, body)
+    val path = ex.getRequestURI.getPath
+    try path match {
+      case "/api/v1/write" => handleWrite(ex, body)
+      case "/api/v1/read" => handleRead(ex, body)
+      case "/api/v1/query" => handleQuery(ex, body)
+      case "/api/v1/query_range" => handleQueryRange(ex, body)
       case "/api/v1/labels" => handleLabels(ex)
       case "/api/v1/series" => handleSeries(ex)
       case "/api/v1/rules" => handleRules(ex)
@@ -158,6 +168,23 @@ final class HttpEndpoint(
         handleLabelValues(ex,
           p.stripPrefix("/api/v1/label/").stripSuffix("/values"))
       case _ => ex.sendResponseHeaders(404, -1)
+    } catch {
+      case e: Exception =>
+        // the status mapping of the class doc (TooManySeriesException
+        // subclasses IllegalArgumentException, so it matches first)
+        val (code, errorType) = e match {
+          case _: RemoteRead.TooManySeriesException => (422, "too_many_series")
+          case _: IllegalArgumentException | _: IllegalStateException => (400, "bad_data")
+          case _ =>
+            System.err.println(s"graft http: ${ex.getRequestMethod} $path -> 500: $e")
+            (500, "internal")
+        }
+        // a streamed read that already sent its headers can only be
+        // torn: closing the exchange (the handler's finally) is its
+        // whole answer
+        if (ex.getResponseCode == -1)
+          sendJson(ex, code, s"""{"status":"error","errorType":"$errorType","error":""" +
+            jstr(Option(e.getMessage).getOrElse("")) + "}")
     }
   }
 
@@ -240,11 +267,6 @@ final class HttpEndpoint(
       case other => throw new IllegalArgumentException(s"unknown tier '$other'")
     }
 
-  private def sendPromError(ex: HttpExchange, e: IllegalArgumentException): Unit =
-    sendJson(ex, 400,
-      "{\"status\":\"error\",\"errorType\":\"bad_data\",\"error\":" +
-        jstr(Option(e.getMessage).getOrElse("")) + "}")
-
   /** `step`/duration parameters accept Prometheus spellings: a float
     * second count ("15", "0.5") or a duration literal ("15s",
     * "1h30m", "500ms" — the shared PromQL duration grammar). */
@@ -252,40 +274,31 @@ final class HttpEndpoint(
     try graft.promql.PromQL.parseDuration(s)
     catch { case _: IllegalArgumentException => (s.toDouble * 1e6).toLong }
 
-  private def handleQuery(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      val params = paramsWithBody(ex, body).toMap
-      val q = params.getOrElse("query",
-        throw new IllegalArgumentException("missing query parameter"))
-      val atUs = params.get("time")
-        .map(t => (t.toDouble * 1e6).toLong)
-        .getOrElse(System.currentTimeMillis() * 1000L)
-      val df = tierOf(params) match {
-        case "rollup" => graft.promql.PromQL.evalStoreRollup(store, q, atUs)
-        case _ => graft.promql.PromQL.evalStore(store, q, atUs)
-      }
-      val labelCols = df.columns.filterNot(c => c == "value" || c == "series_id")
-      // cap+1 bounds the driver materialization even when the check
-      // fails (the /federate pattern): an instant vector is one row
-      // per series, so the row cap IS a series cap here
-      val capped = df.limit(queryResultCap + 1).collect()
-      if (capped.length > queryResultCap) { sendTooMany(ex, queryResultCap); return }
-      val rows = capped.map { r =>
-        val v = promVal(r.getAs[Any]("value"))
-        s"""{"metric":${metricJson(labelCols, r)},"value":[${atUs / 1e6},${jstr(v)}]}"""
-      }
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{"resultType":"vector","result":[${rows.mkString(",")}]}}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleQuery(ex: HttpExchange, body: Array[Byte]): Unit = {
+    val params = paramsWithBody(ex, body).toMap
+    val q = params.getOrElse("query",
+      throw new IllegalArgumentException("missing query parameter"))
+    val atUs = params.get("time")
+      .map(t => (t.toDouble * 1e6).toLong)
+      .getOrElse(System.currentTimeMillis() * 1000L)
+    val df = tierOf(params) match {
+      case "rollup" => graft.promql.PromQL.evalStoreRollup(store, q, atUs)
+      case _ => graft.promql.PromQL.evalStore(store, q, atUs)
     }
-
-  private def sendTooMany(ex: HttpExchange, cap: Int): Unit =
-    sendJson(ex, 422,
-      "{\"status\":\"error\",\"errorType\":\"too_many_series\",\"error\":" +
-        jstr(s"query would materialize more than $cap result rows on the " +
-          "server — narrow the selector, shrink the range, or raise the cap") + "}")
+    val labelCols = df.columns.filterNot(c => c == "value" || c == "series_id")
+    // cap+1 bounds the driver materialization even when the check
+    // fails (the /federate pattern): an instant vector is one row
+    // per series, so the row cap IS a series cap here
+    val capped = df.limit(queryResultCap + 1).collect()
+    if (capped.length > queryResultCap)
+      throw new RemoteRead.TooManySeriesException(queryResultCap, "query result")
+    val rows = capped.map { r =>
+      val v = promVal(r.getAs[Any]("value"))
+      s"""{"metric":${metricJson(labelCols, r)},"value":[${atUs / 1e6},${jstr(v)}]}"""
+    }
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{"resultType":"vector","result":[${rows.mkString(",")}]}}""")
+  }
 
   /** Prometheus HTTP range-query API (`GET /api/v1/query_range?query=…
     * &start=…&end=…&step=…`): the Grafana panel call. The WHOLE grid
@@ -295,55 +308,52 @@ final class HttpEndpoint(
     * a per-step loop of instant queries. Only the grid result
     * (series × points, the panel's own size) materializes on the
     * driver, grouped into the standard `resultType: matrix` JSON. */
-  private def handleQueryRange(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      val params = paramsWithBody(ex, body).toMap
-      def need(k: String) = params.getOrElse(k,
-        throw new IllegalArgumentException(s"missing $k parameter"))
-      val q = need("query")
-      val startUs = (need("start").toDouble * 1e6).toLong
-      val endUs = (need("end").toDouble * 1e6).toLong
-      val stepUs = durationUs(need("step"))
-      if (stepUs <= 0) throw new IllegalArgumentException("step must be positive")
-      if (endUs < startUs) throw new IllegalArgumentException("end < start")
-      // same guard as Prometheus: refuse grids that would materialize
-      // an unbounded driver-side result
-      if ((endUs - startUs) / stepUs >= 11000)
-        throw new IllegalArgumentException("grid exceeds 11000 points; widen the step")
-      val df = tierOf(params) match {
-        // the long-horizon panel path: decode-free pre-aggregated scan
-        case "rollup" =>
-          graft.promql.PromQL.evalStoreRangeRollup(store, q, startUs, endUs, stepUs)
-        case _ => graft.promql.PromQL.evalStoreRange(store, q, startUs, endUs, stepUs)
-      }
-      val labelCols = df.columns.filterNot(c =>
-        c == "value" || c == "series_id" || c == "ts_us")
-      // the 11000-point grid cap above bounds the per-series width;
-      // this bounds the series dimension too: cap+1 rows collect even
-      // when the check fails (the /federate pattern)
-      val capped = df.limit(queryResultCap + 1).collect()
-      if (capped.length > queryResultCap) { sendTooMany(ex, queryResultCap); return }
-      // group the bounded matrix by label set, values time-ascending
-      val grouped = new scala.collection.mutable.LinkedHashMap[
-        String, scala.collection.mutable.ArrayBuffer[(Long, String)]]()
-      capped.foreach { r =>
-        val key = metricJson(labelCols, r)
-        val t = r.getAs[Long]("ts_us")
-        val v = promVal(r.getAs[Any]("value"))
-        grouped.getOrElseUpdate(key,
-          new scala.collection.mutable.ArrayBuffer[(Long, String)]()) += ((t, v))
-      }
-      val series = grouped.map { case (metric, vs) =>
-        val values = vs.sortBy(_._1)
-          .map { case (t, v) => s"[${t / 1e6},${jstr(v)}]" }.mkString(",")
-        s"""{"metric":$metric,"values":[$values]}"""
-      }
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{"resultType":"matrix","result":[${series.mkString(",")}]}}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleQueryRange(ex: HttpExchange, body: Array[Byte]): Unit = {
+    val params = paramsWithBody(ex, body).toMap
+    def need(k: String) = params.getOrElse(k,
+      throw new IllegalArgumentException(s"missing $k parameter"))
+    val q = need("query")
+    val startUs = (need("start").toDouble * 1e6).toLong
+    val endUs = (need("end").toDouble * 1e6).toLong
+    val stepUs = durationUs(need("step"))
+    if (stepUs <= 0) throw new IllegalArgumentException("step must be positive")
+    if (endUs < startUs) throw new IllegalArgumentException("end < start")
+    // same guard as Prometheus: refuse grids that would materialize
+    // an unbounded driver-side result
+    if ((endUs - startUs) / stepUs >= 11000)
+      throw new IllegalArgumentException("grid exceeds 11000 points; widen the step")
+    val df = tierOf(params) match {
+      // the long-horizon panel path: decode-free pre-aggregated scan
+      case "rollup" =>
+        graft.promql.PromQL.evalStoreRangeRollup(store, q, startUs, endUs, stepUs)
+      case _ => graft.promql.PromQL.evalStoreRange(store, q, startUs, endUs, stepUs)
     }
+    val labelCols = df.columns.filterNot(c =>
+      c == "value" || c == "series_id" || c == "ts_us")
+    // the 11000-point grid cap above bounds the per-series width;
+    // this bounds the series dimension too: cap+1 rows collect even
+    // when the check fails (the /federate pattern)
+    val capped = df.limit(queryResultCap + 1).collect()
+    if (capped.length > queryResultCap)
+      throw new RemoteRead.TooManySeriesException(queryResultCap, "query result")
+    // group the bounded matrix by label set, values time-ascending
+    val grouped = new scala.collection.mutable.LinkedHashMap[
+      String, scala.collection.mutable.ArrayBuffer[(Long, String)]]()
+    capped.foreach { r =>
+      val key = metricJson(labelCols, r)
+      val t = r.getAs[Long]("ts_us")
+      val v = promVal(r.getAs[Any]("value"))
+      grouped.getOrElseUpdate(key,
+        new scala.collection.mutable.ArrayBuffer[(Long, String)]()) += ((t, v))
+    }
+    val series = grouped.map { case (metric, vs) =>
+      val values = vs.sortBy(_._1)
+        .map { case (t, v) => s"[${t / 1e6},${jstr(v)}]" }.mkString(",")
+      s"""{"metric":$metric,"values":[$values]}"""
+    }
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{"resultType":"matrix","result":[${series.mkString(",")}]}}""")
+  }
 
   // ── Prometheus metadata API (Grafana's autocomplete calls) ──
   // GET /api/v1/labels, /api/v1/label/<name>/values, /api/v1/series —
@@ -381,77 +391,49 @@ final class HttpEndpoint(
     else sels.map(ms => cat.filter(graft.tsdb.Matcher.all(ms))).reduce(_ unionByName _).distinct()
   }
 
-  private def handleLabels(ex: HttpExchange): Unit =
-    try {
-      val cat = metaCatalog(queryParamsMulti(ex))
-      // label NAMES of the matched in-range series — every catalog
-      // label is present on every series, so nonempty ⇒ all columns,
-      // empty ⇒ [] (Prometheus semantics, not the static schema)
-      val names =
-        if (cat.limit(1).count() == 0) Array.empty[String]
-        else cat.columns.filterNot(_ == "series_id").sorted
+  private def handleLabels(ex: HttpExchange): Unit = {
+    val cat = metaCatalog(queryParamsMulti(ex))
+    // label NAMES of the matched in-range series — every catalog
+    // label is present on every series, so nonempty ⇒ all columns,
+    // empty ⇒ [] (Prometheus semantics, not the static schema)
+    val names =
+      if (cat.limit(1).count() == 0) Array.empty[String]
+      else cat.columns.filterNot(_ == "series_id").sorted
+    sendJson(ex, 200,
+      s"""{"status":"success","data":[${names.map(jstr).mkString(",")}]}""")
+  }
+
+  private def handleLabelValues(ex: HttpExchange, label: String): Unit = {
+    val cat = metaCatalog(queryParamsMulti(ex))
+    if (!cat.columns.contains(label) || label == "series_id")
+      sendJson(ex, 200, """{"status":"success","data":[]}""")
+    else {
+      val values = cat.select(org.apache.spark.sql.functions.col(label).cast("string"))
+        .distinct().collect().map(_.getString(0)).sorted
       sendJson(ex, 200,
-        s"""{"status":"success","data":[${names.map(jstr).mkString(",")}]}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+        s"""{"status":"success","data":[${values.map(jstr).mkString(",")}]}""")
     }
+  }
 
-  private def handleLabelValues(ex: HttpExchange, label: String): Unit =
-    try {
-      val cat = metaCatalog(queryParamsMulti(ex))
-      if (!cat.columns.contains(label) || label == "series_id")
-        sendJson(ex, 200, """{"status":"success","data":[]}""")
-      else {
-        val values = cat.select(org.apache.spark.sql.functions.col(label).cast("string"))
-          .distinct().collect().map(_.getString(0)).sorted
-        sendJson(ex, 200,
-          s"""{"status":"success","data":[${values.map(jstr).mkString(",")}]}""")
-      }
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+  private def handleSeries(ex: HttpExchange): Unit = {
+    val cat = metaCatalog(queryParamsMulti(ex))
+    val labelCols = cat.columns.filterNot(_ == "series_id").sorted
+    val rows = cat.select(labelCols.map(org.apache.spark.sql.functions.col): _*)
+      .distinct().collect()
+      .map(r => metricJson(labelCols, r)).sorted
+    sendJson(ex, 200,
+      s"""{"status":"success","data":[${rows.mkString(",")}]}""")
+  }
 
-  private def handleSeries(ex: HttpExchange): Unit =
-    try {
-      val cat = metaCatalog(queryParamsMulti(ex))
-      val labelCols = cat.columns.filterNot(_ == "series_id").sorted
-      val rows = cat.select(labelCols.map(org.apache.spark.sql.functions.col): _*)
-        .distinct().collect()
-        .map(r => metricJson(labelCols, r)).sorted
-      sendJson(ex, 200,
-        s"""{"status":"success","data":[${rows.mkString(",")}]}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
-
-  private def handleWrite(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      import spark.implicits._
-      // decode validity is checked at the boundary (a malformed
-      // payload answers 400 BEFORE any Spark job starts); the
-      // DataFrame path re-decodes inside the job where the real
-      // columnar explode happens
-      if (RemoteWrite.decode(body).isEmpty) { ex.sendResponseHeaders(400, -1); return }
-      spool match {
-        case Some(dir) =>
-          // enqueue-only: O(payload) bytes to the spool, zero Spark
-          // work in the request path; the streaming sink micro-batches
-          spoolWrite(dir, body)
-        case None =>
-          val payloads = Seq(body).toDF("payload")
-          writeLock.synchronized {
-            store.append(RemoteWrite.toEventSamples(payloads))
-          }
-      }
-      ex.sendResponseHeaders(200, -1)
-    } catch {
-      case _: IllegalArgumentException | _: java.io.IOException =>
-        ex.sendResponseHeaders(400, -1)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+  /** Remote write: decode once to validate (a malformed or empty
+    * payload answers 400 before anything is spooled), then enqueue the
+    * raw bytes; the drain re-decodes inside its micro-batch job, where
+    * the columnar explode happens. */
+  private def handleWrite(ex: HttpExchange, body: Array[Byte]): Unit = {
+    require(RemoteWrite.decode(body).nonEmpty, "empty remote-write request")
+    spoolWrite(body)
+    ex.sendResponseHeaders(200, -1)
+  }
 
   // ── Prometheus rules/alerts API (the Grafana/alertmanager READ
   // side of alerting — the inverse of the role server.rs plays for
@@ -519,40 +501,32 @@ final class HttpEndpoint(
       .getOrElse(throw new IllegalArgumentException(
         "store holds no data and no ?time= given — nothing to evaluate rules at"))
 
-  private def handleRules(ex: HttpExchange): Unit =
-    try {
-      val at = evalInstantUs(queryParams(ex))
-      import scala.jdk.CollectionConverters._
-      val ruleJsons = ruleRegistry.values.asScala.toSeq.sortBy(_.name).map { r =>
-        val alerts = currentAlerts(r, at)
-        // rule state = worst of its alerts (firing > pending > inactive)
-        val state =
-          if (alerts.exists(_._2 == "firing")) "firing"
-          else if (alerts.nonEmpty) "pending"
-          else "inactive"
-        s"""{"state":${jstr(state)},"name":${jstr(r.name)},"query":${jstr(r.query)},""" +
-          s""""duration":${r.forUs / 1000000.0},"labels":{},"annotations":{},""" +
-          s""""alerts":[${alerts.map(_._1).mkString(",")}],"health":"ok","type":"alerting"}"""
-      }
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{"groups":[{"name":"graft","file":"","rules":[${ruleJsons.mkString(",")}]}]}}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleRules(ex: HttpExchange): Unit = {
+    val at = evalInstantUs(queryParams(ex))
+    import scala.jdk.CollectionConverters._
+    val ruleJsons = ruleRegistry.values.asScala.toSeq.sortBy(_.name).map { r =>
+      val alerts = currentAlerts(r, at)
+      // rule state = worst of its alerts (firing > pending > inactive)
+      val state =
+        if (alerts.exists(_._2 == "firing")) "firing"
+        else if (alerts.nonEmpty) "pending"
+        else "inactive"
+      s"""{"state":${jstr(state)},"name":${jstr(r.name)},"query":${jstr(r.query)},""" +
+        s""""duration":${r.forUs / 1000000.0},"labels":{},"annotations":{},""" +
+        s""""alerts":[${alerts.map(_._1).mkString(",")}],"health":"ok","type":"alerting"}"""
     }
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{"groups":[{"name":"graft","file":"","rules":[${ruleJsons.mkString(",")}]}]}}""")
+  }
 
-  private def handleAlerts(ex: HttpExchange): Unit =
-    try {
-      val at = evalInstantUs(queryParams(ex))
-      import scala.jdk.CollectionConverters._
-      val alerts = ruleRegistry.values.asScala.toSeq.sortBy(_.name)
-        .flatMap(r => currentAlerts(r, at).map(_._1))
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{"alerts":[${alerts.mkString(",")}]}}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+  private def handleAlerts(ex: HttpExchange): Unit = {
+    val at = evalInstantUs(queryParams(ex))
+    import scala.jdk.CollectionConverters._
+    val alerts = ruleRegistry.values.asScala.toSeq.sortBy(_.name)
+      .flatMap(r => currentAlerts(r, at).map(_._1))
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{"alerts":[${alerts.mkString(",")}]}}""")
+  }
 
   /** Prometheus's admin deletion API (`POST /api/v1/admin/tsdb/
     * delete_series?match[]=…[&start=…&end=…]`): drops the matched
@@ -561,32 +535,24 @@ final class HttpEndpoint(
     * Missing bounds default to everything up to the data horizon;
     * success answers 204 like Prometheus. A range touching live
     * chunks answers 400 with the close-first direction. */
-  private def handleDeleteSeries(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      if (!"POST".equalsIgnoreCase(ex.getRequestMethod)) {
-        ex.sendResponseHeaders(405, -1); return
-      }
-      val params = paramsWithBody(ex, body)
-      val pmap = params.toMap
-      val sels = params.collect { case (k, v) if k == "match[]" || k == "match" => v }
-      if (sels.isEmpty)
-        throw new IllegalArgumentException("delete_series needs at least one match[] selector")
-      val startUs = pmap.get("start").map(s => (s.toDouble * 1e6).toLong).getOrElse(0L)
-      val endUs = pmap.get("end").map(e => (e.toDouble * 1e6).toLong)
-        .orElse(store.dataHorizonUs).getOrElse(0L)
-      sels.foreach { s =>
-        val sel = graft.promql.PromQL.parseSelector(s, startUs, endUs)
-        store.deleteSeries(sel.matchers, startUs, endUs)
-      }
-      ex.sendResponseHeaders(204, -1)
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case e: IllegalStateException =>
-        sendJson(ex, 400,
-          "{\"status\":\"error\",\"errorType\":\"bad_data\",\"error\":" +
-            jstr(Option(e.getMessage).getOrElse("")) + "}")
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleDeleteSeries(ex: HttpExchange, body: Array[Byte]): Unit = {
+    if (!"POST".equalsIgnoreCase(ex.getRequestMethod)) {
+      ex.sendResponseHeaders(405, -1); return
     }
+    val params = paramsWithBody(ex, body)
+    val pmap = params.toMap
+    val sels = params.collect { case (k, v) if k == "match[]" || k == "match" => v }
+    if (sels.isEmpty)
+      throw new IllegalArgumentException("delete_series needs at least one match[] selector")
+    val startUs = pmap.get("start").map(s => (s.toDouble * 1e6).toLong).getOrElse(0L)
+    val endUs = pmap.get("end").map(e => (e.toDouble * 1e6).toLong)
+      .orElse(store.dataHorizonUs).getOrElse(0L)
+    sels.foreach { s =>
+      val sel = graft.promql.PromQL.parseSelector(s, startUs, endUs)
+      store.deleteSeries(sel.matchers, startUs, endUs)
+    }
+    ex.sendResponseHeaders(204, -1)
+  }
 
   /** `GET /api/v1/status/buildinfo` — the version handshake Grafana
     * performs before enabling feature-gated panels. Static JSON in
@@ -603,53 +569,43 @@ final class HttpEndpoint(
     * (PromqlFormatSpec, fuzz-driven) is parse∘format == identity on
     * the AST, so the canonical spelling never drifts from the
     * grammar. Malformed input answers the 400 bad_data envelope. */
-  private def handleFormatQuery(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      val q = paramsWithBody(ex, body).collectFirst { case ("query", v) => v }
-        .getOrElse(throw new IllegalArgumentException("format_query needs a query= parameter"))
-      sendJson(ex, 200,
-        s"""{"status":"success","data":${jstr(graft.promql.PromQL.formatQuery(q))}}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+  private def handleFormatQuery(ex: HttpExchange, body: Array[Byte]): Unit = {
+    val q = paramsWithBody(ex, body).collectFirst { case ("query", v) => v }
+      .getOrElse(throw new IllegalArgumentException("format_query needs a query= parameter"))
+    sendJson(ex, 200,
+      s"""{"status":"success","data":${jstr(graft.promql.PromQL.formatQuery(q))}}""")
+  }
 
   /** `GET /api/v1/status/flags` — the operative engine configuration
     * in Prometheus's flag-map shape: the chunk grain, the retention
     * horizons (from the store's persisted horizon files, us-precise),
     * and the federation cardinality cap. Directory-listing grain,
     * never a Spark job. */
-  private def handleStatusFlags(ex: HttpExchange): Unit =
-    try {
-      val (minT, maxT) = store.dataBoundsMs
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{""" +
-          s""""storage.tsdb.chunk-duration":${jstr(graft.promql.PromQL.fmtDur(store.chunkUs))},""" +
-          s""""storage.tsdb.path":${jstr(store.path)},""" +
-          s""""web.federate.series-cap":"$federateSeriesCap",""" +
-          s""""web.remote-read.series-cap":"$remoteReadSeriesCap",""" +
-          s""""web.query.result-row-cap":"$queryResultCap",""" +
-          s""""storage.tsdb.min-time-ms":"$minT","storage.tsdb.max-time-ms":"$maxT"}}""")
-    } catch {
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+  private def handleStatusFlags(ex: HttpExchange): Unit = {
+    val (minT, maxT) = store.dataBoundsMs
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{""" +
+        s""""storage.tsdb.chunk-duration":${jstr(graft.promql.PromQL.fmtDur(store.chunkUs))},""" +
+        s""""storage.tsdb.path":${jstr(store.path)},""" +
+        s""""web.federate.series-cap":"$federateSeriesCap",""" +
+        s""""web.remote-read.series-cap":"$remoteReadSeriesCap",""" +
+        s""""web.query.result-row-cap":"$queryResultCap",""" +
+        s""""storage.tsdb.min-time-ms":"$minT","storage.tsdb.max-time-ms":"$maxT"}}""")
+  }
 
   /** `GET /api/v1/status/runtimeinfo` — the liveness/uptime handshake
     * (Grafana's datasource test page reads it): server start time,
     * chunk/series shape of the store. Catalog-free: every field is a
     * directory listing or a constant. */
-  private def handleRuntimeInfo(ex: HttpExchange): Unit =
-    try {
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{""" +
-          s""""startTime":${jstr(startedAtIso)},""" +
-          s""""CWD":${jstr(System.getProperty("user.dir", ""))},""" +
-          s""""reloadConfigSuccess":true,""" +
-          s""""chunkDuration":${jstr(graft.promql.PromQL.fmtDur(store.chunkUs))},""" +
-          s""""chunkCount":${store.chunkCount}}}""")
-    } catch {
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+  private def handleRuntimeInfo(ex: HttpExchange): Unit = {
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{""" +
+        s""""startTime":${jstr(startedAtIso)},""" +
+        s""""CWD":${jstr(System.getProperty("user.dir", ""))},""" +
+        s""""reloadConfigSuccess":true,""" +
+        s""""chunkDuration":${jstr(graft.promql.PromQL.fmtDur(store.chunkUs))},""" +
+        s""""chunkCount":${store.chunkCount}}}""")
+  }
 
   private val startedAtIso: String =
     java.time.Instant.ofEpochMilli(System.currentTimeMillis()).toString
@@ -661,34 +617,30 @@ final class HttpEndpoint(
     * sample grain); chunk counts and time bounds are directory
     * listings. The numbers describe THIS store's whole retained
     * range — the engine's analog of Prometheus's head block. */
-  private def handleStatusTsdb(ex: HttpExchange): Unit =
+  private def handleStatusTsdb(ex: HttpExchange): Unit = {
+    import org.apache.spark.sql.functions.{col, countDistinct, count, lit}
+    val cat = store.catalog().persist()
     try {
-      import org.apache.spark.sql.functions.{col, countDistinct, count, lit}
-      val cat = store.catalog().persist()
-      try {
-        val numSeries = cat.count()
-        val byMetric = cat.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("event_type").asc)
-          .limit(10).collect()
-          .map(r => s"""{"name":${jstr(r.getString(0))},"value":${r.getLong(1)}}""")
-        val labelCounts = cat.agg(
-          countDistinct(col("event_type")).as("et"),
-          countDistinct(col("user_id")).as("uid")).collect()(0)
-        val chunkCount = store.chunkCount
-        val (minT, maxT) = store.dataBoundsMs
-        sendJson(ex, 200,
-          s"""{"status":"success","data":{"headStats":{"numSeries":$numSeries,""" +
-            s""""chunkCount":$chunkCount,"minTime":$minT,"maxTime":$maxT},""" +
-            s""""seriesCountByMetricName":[${byMetric.mkString(",")}],""" +
-            s""""labelValueCountByLabelName":[""" +
-            s"""{"name":"event_type","value":${labelCounts.getLong(0)}},""" +
-            s"""{"name":"user_id","value":${labelCounts.getLong(1)}}]}}""")
-      } finally cat.unpersist(blocking = false)
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
-    }
+      val numSeries = cat.count()
+      val byMetric = cat.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("event_type").asc)
+        .limit(10).collect()
+        .map(r => s"""{"name":${jstr(r.getString(0))},"value":${r.getLong(1)}}""")
+      val labelCounts = cat.agg(
+        countDistinct(col("event_type")).as("et"),
+        countDistinct(col("user_id")).as("uid")).collect()(0)
+      val chunkCount = store.chunkCount
+      val (minT, maxT) = store.dataBoundsMs
+      sendJson(ex, 200,
+        s"""{"status":"success","data":{"headStats":{"numSeries":$numSeries,""" +
+          s""""chunkCount":$chunkCount,"minTime":$minT,"maxTime":$maxT},""" +
+          s""""seriesCountByMetricName":[${byMetric.mkString(",")}],""" +
+          s""""labelValueCountByLabelName":[""" +
+          s"""{"name":"event_type","value":${labelCounts.getLong(0)}},""" +
+          s"""{"name":"user_id","value":${labelCounts.getLong(1)}}]}}""")
+    } finally cat.unpersist(blocking = false)
+  }
 
   /** Prometheus's admin snapshot verb (`POST /api/v1/admin/tsdb/
     * snapshot[?name=…]`): point-in-time copy of the closed tier into
@@ -696,19 +648,15 @@ final class HttpEndpoint(
     * immutable parquet, no Spark job). Answers the Prometheus shape
     * `{"status":"success","data":{"name":…}}`. An empty store (nothing
     * closed) answers 400 with the close-first direction. */
-  private def handleSnapshot(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      if (!"POST".equalsIgnoreCase(ex.getRequestMethod)) {
-        ex.sendResponseHeaders(405, -1); return
-      }
-      val name = paramsWithBody(ex, body).toMap.get("name")
-      val snap = store.snapshot(name)
-      sendJson(ex, 200,
-        s"""{"status":"success","data":{"name":${jstr(snap)}}}""")
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleSnapshot(ex: HttpExchange, body: Array[Byte]): Unit = {
+    if (!"POST".equalsIgnoreCase(ex.getRequestMethod)) {
+      ex.sendResponseHeaders(405, -1); return
     }
+    val name = paramsWithBody(ex, body).toMap.get("name")
+    val snap = store.snapshot(name)
+    sendJson(ex, 200,
+      s"""{"status":"success","data":{"name":${jstr(snap)}}}""")
+  }
 
   /** Prometheus FEDERATION endpoint (`GET /federate?match[]=…`): the
     * current sample of every matched series in the text exposition
@@ -721,107 +669,87 @@ final class HttpEndpoint(
     * inverted), remaining labels ride in the braces, timestamps in
     * milliseconds — the exposition contract. Only the bounded
     * per-series vector materializes on the driver. */
-  private def handleFederate(ex: HttpExchange): Unit =
-    try {
-      import org.apache.spark.sql.functions.{col, max, struct}
-      val params = queryParamsMulti(ex)
-      val at = evalInstantUs(params.toMap)
-      // ?lookback= mirrors Prometheus's --query.lookback-delta (which
-      // /federate honors): how far back a series may have last
-      // reported and still count as current
-      val lookbackUs = params.toMap.get("lookback").map(durationUs)
-        .getOrElse(5L * 60L * 1000000L)
-      val sels = params.collect { case (k, v) if k == "match[]" || k == "match" => v }
-      if (sels.isEmpty)
-        throw new IllegalArgumentException("federate needs at least one match[] selector")
-      val frames = sels.map { s =>
-        val sel = graft.promql.PromQL.parseSelector(s, at, at)
-        val eff = sel.atUs.getOrElse(at) - sel.offsetUs
-        store.queryAll(sel.matchers, eff - lookbackUs, eff)
-          .groupBy(col("series_id"))
-          .agg(max(struct(col("ts_us"), col("value"))).as("l"))
-          .join(store.catalog(), "series_id") // labels live in the catalog
-          .select(col("event_type"), col("user_id"),
-            col("l.ts_us").as("ts_us"), col("l.value").as("value"))
-      }
-      // cap + 1 bounds the driver materialization even when the check
-      // fails — the overflow row proves the cap was crossed without
-      // collecting the whole vector
-      val capped = frames.reduce(_ unionByName _).distinct()
-        .limit(federateSeriesCap + 1).collect()
-      if (capped.length > federateSeriesCap) {
-        sendJson(ex, 422,
-          "{\"status\":\"error\",\"errorType\":\"too_many_series\",\"error\":" +
-            jstr(s"federate match[] selects more than $federateSeriesCap series — " +
-              "narrow the selector or raise federateSeriesCap") + "}")
-        return
-      }
-      val rows = capped
-        .sortBy(r => (r.getAs[String]("event_type"), r.getAs[Any]("user_id").toString))
-      def esc(s: String): String =
-        s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
-      val sb = new StringBuilder
-      var lastName = ""
-      rows.foreach { r =>
-        val name = r.getAs[String]("event_type")
-        if (name != lastName) { sb ++= s"# TYPE ${esc(name)} untyped\n"; lastName = name }
-        sb ++= esc(name)
-        sb ++= s"""{user_id="${esc(r.getAs[Any]("user_id").toString)}"} """
-        sb ++= promVal(r.getAs[Any]("value"))
-        sb ++= s" ${r.getAs[Long]("ts_us") / 1000}\n"
-      }
-      val bytes = sb.toString.getBytes("UTF-8")
-      ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4; charset=utf-8")
-      ex.sendResponseHeaders(200, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
-    } catch {
-      case e: IllegalArgumentException => sendPromError(ex, e)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleFederate(ex: HttpExchange): Unit = {
+    import org.apache.spark.sql.functions.{col, max, struct}
+    val params = queryParamsMulti(ex)
+    val at = evalInstantUs(params.toMap)
+    // ?lookback= mirrors Prometheus's --query.lookback-delta (which
+    // /federate honors): how far back a series may have last
+    // reported and still count as current
+    val lookbackUs = params.toMap.get("lookback").map(durationUs)
+      .getOrElse(5L * 60L * 1000000L)
+    val sels = params.collect { case (k, v) if k == "match[]" || k == "match" => v }
+    if (sels.isEmpty)
+      throw new IllegalArgumentException("federate needs at least one match[] selector")
+    val frames = sels.map { s =>
+      val sel = graft.promql.PromQL.parseSelector(s, at, at)
+      val eff = sel.atUs.getOrElse(at) - sel.offsetUs
+      store.queryAll(sel.matchers, eff - lookbackUs, eff)
+        .groupBy(col("series_id"))
+        .agg(max(struct(col("ts_us"), col("value"))).as("l"))
+        .join(store.catalog(), "series_id") // labels live in the catalog
+        .select(col("event_type"), col("user_id"),
+          col("l.ts_us").as("ts_us"), col("l.value").as("value"))
     }
+    // cap + 1 bounds the driver materialization even when the check
+    // fails — the overflow row proves the cap was crossed without
+    // collecting the whole vector
+    val capped = frames.reduce(_ unionByName _).distinct()
+      .limit(federateSeriesCap + 1).collect()
+    if (capped.length > federateSeriesCap)
+      throw new RemoteRead.TooManySeriesException(federateSeriesCap, "federate match[]")
+    val rows = capped
+      .sortBy(r => (r.getAs[String]("event_type"), r.getAs[Any]("user_id").toString))
+    def esc(s: String): String =
+      s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
+    val sb = new StringBuilder
+    var lastName = ""
+    rows.foreach { r =>
+      val name = r.getAs[String]("event_type")
+      if (name != lastName) { sb ++= s"# TYPE ${esc(name)} untyped\n"; lastName = name }
+      sb ++= esc(name)
+      sb ++= s"""{user_id="${esc(r.getAs[Any]("user_id").toString)}"} """
+      sb ++= promVal(r.getAs[Any]("value"))
+      sb ++= s" ${r.getAs[Long]("ts_us") / 1000}\n"
+    }
+    val bytes = sb.toString.getBytes("UTF-8")
+    ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4; charset=utf-8")
+    ex.sendResponseHeaders(200, bytes.length.toLong)
+    ex.getResponseBody.write(bytes)
+  }
 
-  private def handleRead(ex: HttpExchange, body: Array[Byte]): Unit =
-    try {
-      val (_, accepted) = RemoteRead.decodeRequestFull(body)
-      if (accepted.contains(RemoteRead.ResponseTypeStreamed)) {
-        // NEGOTIATED STREAM: framed ChunkedReadResponse messages, one
-        // per series, Gorilla payloads straight from the at-rest tier.
-        // No seriesCap — memory is bounded per frame, so the wide
-        // selector that 422s on the sampled path streams fine here.
-        // The FIRST frame is forced before headers go out: matcher /
-        // store errors still answer as typed 4xx; an error after the
-        // status line can only truncate the stream (the protocol's
-        // own failure mode — the client's CRC/length framing catches
-        // the tear).
-        val frames = RemoteRead.serveStreamed(store, body)
-        val first = if (frames.hasNext) Some(frames.next()) else None
-        ex.getResponseHeaders.set("Content-Type",
-          "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
-        ex.sendResponseHeaders(200, 0L) // length unknown: chunked transfer
-        val os = ex.getResponseBody
-        // flush PER FRAME: each series frame leaves as its own
-        // chunked-transfer write, so server memory stays one frame
-        // deep and a slow reader back-pressures the store iterator
-        // instead of growing a response buffer
-        first.foreach { f => os.write(f); os.flush() }
-        frames.foreach { f => os.write(f); os.flush() }
-        return
-      }
-      val resp = RemoteRead.serve(store, body, remoteReadSeriesCap)
-      ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-      ex.getResponseHeaders.set("Content-Encoding", "snappy")
-      ex.sendResponseHeaders(200, resp.length.toLong)
-      ex.getResponseBody.write(resp)
-    } catch {
-      // the cap must answer 422 with the typed envelope, not a bare
-      // 400 — it subclasses IllegalArgumentException, so match first
-      case e: RemoteRead.TooManySeriesException =>
-        sendJson(ex, 422,
-          "{\"status\":\"error\",\"errorType\":\"too_many_series\",\"error\":" +
-            jstr(Option(e.getMessage).getOrElse("")) + "}")
-      case _: IllegalArgumentException | _: java.io.IOException =>
-        ex.sendResponseHeaders(400, -1)
-      case _: Exception => ex.sendResponseHeaders(500, -1)
+  private def handleRead(ex: HttpExchange, body: Array[Byte]): Unit = {
+    val (_, accepted) = RemoteRead.decodeRequestFull(body)
+    if (accepted.contains(RemoteRead.ResponseTypeStreamed)) {
+      // NEGOTIATED STREAM: framed ChunkedReadResponse messages, one
+      // per series, Gorilla payloads straight from the at-rest tier.
+      // No seriesCap — memory is bounded per frame, so the wide
+      // selector that 422s on the sampled path streams fine here.
+      // The FIRST frame is forced before headers go out: matcher /
+      // store errors still answer with a status; an error after the
+      // status line can only truncate the stream (the protocol's
+      // own failure mode — the client's CRC/length framing catches
+      // the tear).
+      val frames = RemoteRead.serveStreamed(store, body)
+      val first = if (frames.hasNext) Some(frames.next()) else None
+      ex.getResponseHeaders.set("Content-Type",
+        "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
+      ex.sendResponseHeaders(200, 0L) // length unknown: chunked transfer
+      val os = ex.getResponseBody
+      // flush PER FRAME: each series frame leaves as its own
+      // chunked-transfer write, so server memory stays one frame
+      // deep and a slow reader back-pressures the store iterator
+      // instead of growing a response buffer
+      first.foreach { f => os.write(f); os.flush() }
+      frames.foreach { f => os.write(f); os.flush() }
+      return
     }
+    val resp = RemoteRead.serve(store, body, remoteReadSeriesCap)
+    ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
+    ex.getResponseHeaders.set("Content-Encoding", "snappy")
+    ex.sendResponseHeaders(200, resp.length.toLong)
+    ex.getResponseBody.write(resp)
+  }
 }
 
 /** Launchable server — the reference ships its engine AS a server
@@ -831,9 +759,10 @@ final class HttpEndpoint(
   *   sbt "runMain graft.sources.HttpServerMain /path/to/store 9090"
   *
   * Env knobs mirror Bench/Verify conventions (SPARK_GRAFT_CPUS). The
-  * process serves until killed; the store directory persists across
-  * restarts (the ChunkStore's layout IS the durable state — a restart
-  * re-reads the same chunk partitions, nothing to replay). */
+  * process serves until killed; the store directory is the whole
+  * durable state (chunks, spool and drain checkpoint), so a restart on
+  * the same path serves the same chunks and drains whatever was
+  * accepted but not yet appended. */
 object HttpServerMain {
   def main(args: Array[String]): Unit = {
     val path = if (args.nonEmpty) args(0)
@@ -847,18 +776,10 @@ object HttpServerMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val store = new ChunkStore(spark, path)
-    // production shape: spooled writes + the streaming drain — the
-    // request path is an enqueue, appends are one job per micro-batch
-    // (see the class scaladoc). Spool + checkpoint live under the
-    // store path so the whole durable state moves as one directory.
-    val spool = s"$path/_spool"
-    val endpoint = new HttpEndpoint(spark, store, port, spool = Some(spool))
-    graft.streaming.StreamIngest.startSpoolRemoteWriteSink(
-      spark, spool, store, s"$path/_spool_checkpoint")
+    val endpoint = new HttpEndpoint(spark, new ChunkStore(spark, path), port)
     val bound = endpoint.start()
     // stdout contract like Bench/Verify: one parse-friendly line
-    println(s"""{"serving":"http://127.0.0.1:$bound","store":"$path","spool":"$spool"}""")
+    println(s"""{"serving":"http://127.0.0.1:$bound","store":"$path","spool":"${endpoint.spoolDir}"}""")
     Thread.currentThread.join() // serve until the process is killed
   }
 }

@@ -121,6 +121,7 @@ class FederationSpec extends SparkSpec {
       val sent = Federation.relay(src.repartition(3),
         s"http://127.0.0.1:$port/api/v1/write", maxSamplesPerRequest = 2)
       assert(sent == src.count())
+      ep.drain.processAllAvailable()
       val got = b.live().select("series_id", "ts_us", "value")
         .as[(String, Long, Double)].collect().toSet
       val expect = src

@@ -37,7 +37,8 @@ class GraftFacadeSpec extends SparkSpec {
   test("serveHttp: the facade front door answers a wire write+read") {
     val g = Graft(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_facade_http").toString
-    val endpoint = g.serveHttp(g.chunkStore(dir), port = 0)
+    val store = g.chunkStore(dir)
+    val endpoint = g.serveHttp(store, port = 0)
     try {
       val payload = graft.sources.RemoteWrite.encode(Seq(
         (Map("event_type" -> "click", "user_id" -> "3"),
@@ -49,6 +50,10 @@ class GraftFacadeSpec extends SparkSpec {
       conn.getOutputStream.write(payload); conn.getOutputStream.close()
       assert(conn.getResponseCode == 200)
       conn.disconnect()
+      // the write is durable in the spool; the drain makes it readable
+      endpoint.drain.processAllAvailable()
+      assert(store.queryAll(Nil, 1704067200000000L, 1704070800000000L)
+        .select("value").as[Double].collect().sorted.toSeq == Seq(1.5, 2.5))
     } finally endpoint.stop()
   }
 

@@ -7,10 +7,11 @@ import graft.sources.{HttpEndpoint, RemoteRead, RemoteWrite}
 import graft.tsdb.{ChunkStore, MatchEq}
 
 /** End-to-end HTTP drill against a LIVE port: remote-write a payload
-  * through the listener into a ChunkStore, then remote-read it back
-  * over the same socket and compare decoded samples — the reference's
-  * serve() loop (src/server.rs:47-131) behavior, including the
-  * path-triage 404 and the malformed-payload rejection. */
+  * through the listener, let the endpoint's drain append it to the
+  * ChunkStore, then remote-read it back over the same socket and
+  * compare decoded samples — the reference's serve() loop
+  * (src/server.rs:47-131) behavior, including the path-triage 404 and
+  * the malformed-payload rejection. */
 class HttpEndpointSpec extends SparkSpec {
 
   private val t0 = 1704067200000L // 2024-01-01 00:00 UTC, ms
@@ -44,6 +45,8 @@ class HttpEndpointSpec extends SparkSpec {
           (0 until 4).map(i => (t0 + 30000L + i * 60000L, i * 2.0))))
       val (wCode, _) = post(port, "/api/v1/write", RemoteWrite.encode(in))
       assert(wCode == 200)
+      // accepted = durable in the spool; readable once the drain appends it
+      endpoint.drain.processAllAvailable()
 
       // the write really landed in the store's distributed layout
       val us0 = t0 * 1000
@@ -79,6 +82,7 @@ class HttpEndpointSpec extends SparkSpec {
         (Map("event_type" -> "purchase", "user_id" -> "1"),
           Seq((t0 + 60000L, 100.0))))
       assert(post(port, "/api/v1/write", RemoteWrite.encode(in))._1 == 200)
+      endpoint.drain.processAllAvailable()
 
       def get(path: String): (Int, String) = {
         val conn = URI.create(s"http://127.0.0.1:$port$path").toURL
@@ -228,6 +232,7 @@ class HttpEndpointSpec extends SparkSpec {
         (Map("event_type" -> "purchase", "user_id" -> "1"),
           Seq((t0 + 3500000L, 4.0))))
       assert(post(port, "/api/v1/write", RemoteWrite.encode(in))._1 == 200)
+      endpoint.drain.processAllAvailable()
       def get(path: String): (Int, String) = {
         val conn = URI.create(s"http://127.0.0.1:$port$path").toURL
           .openConnection().asInstanceOf[HttpURLConnection]
@@ -272,6 +277,7 @@ class HttpEndpointSpec extends SparkSpec {
         (Map("event_type" -> "purchase", "user_id" -> "1"),
           Seq((t0 + 60000L, 4.0))))
       assert(post(port, "/api/v1/write", RemoteWrite.encode(in))._1 == 200)
+      endpoint.drain.processAllAvailable()
       def get(path: String): (Int, String) = {
         val conn = URI.create(s"http://127.0.0.1:$port$path").toURL
           .openConnection().asInstanceOf[HttpURLConnection]
@@ -340,6 +346,7 @@ class HttpEndpointSpec extends SparkSpec {
       val in: Seq[RemoteWrite.Series] = Seq(
         (Map("event_type" -> "click", "user_id" -> "1"), samples))
       assert(post(port, "/api/v1/write", RemoteWrite.encode(in))._1 == 200)
+      endpoint.drain.processAllAvailable()
       // empty registry answers the valid empty envelope
       assert(get("/api/v1/alerts")._2 ==
         """{"status":"success","data":{"alerts":[]}}""")
@@ -387,6 +394,7 @@ class HttpEndpointSpec extends SparkSpec {
         (Map("event_type" -> "purchase", "user_id" -> "1"),
           Seq((t0, 100.0))))
       assert(post(port, "/api/v1/write", RemoteWrite.encode(in))._1 == 200)
+      endpoint.drain.processAllAvailable()
       def postForm(path: String, form: String): Int = {
         val conn = URI.create(s"http://127.0.0.1:$port$path").toURL
           .openConnection().asInstanceOf[HttpURLConnection]
@@ -435,109 +443,76 @@ class HttpEndpointSpec extends SparkSpec {
     } finally endpoint.stop()
   }
 
-  test("concurrent writes serialize onto one store without loss") {
-    val storeDir = Files.createTempDirectory("graft_http_conc").toString
-    val store = new ChunkStore(spark, storeDir)
-    val endpoint = new HttpEndpoint(spark, store, workerNum = 4)
-    val port = endpoint.start()
-    try {
-      // four parallel posts, distinct users so every sample is countable;
-      // the parquet append path must serialize (staging protocol) while
-      // each append's internal parallelism is untouched
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      val results = Await.result(Future.sequence((1 to 4).toList.map { u =>
-        Future(post(port, "/api/v1/write", RemoteWrite.encode(Seq(
-          (Map("event_type" -> "click", "user_id" -> u.toString),
-            (0 until 25).map(i => (t0 + i * 60000L, i * 1.0 + u))))))._1)
-      }), 120.seconds)
-      assert(results.forall(_ == 200), results.toString)
-      val us0 = t0 * 1000
-      assert(store.queryAll(Seq(MatchEq("event_type", "click")),
-        us0, us0 + 3600L * 1000000).count() == 100)
-    } finally endpoint.stop()
-  }
-
   test("spooled write path: enqueue-only handler, one append job per micro-batch") {
     val storeDir = Files.createTempDirectory("graft_http_spstore").toString
-    val spoolDir = Files.createTempDirectory("graft_http_spool").toString
-    val checkpoint = Files.createTempDirectory("graft_http_spchk").toString
     val store = new ChunkStore(spark, storeDir)
-    val endpoint = new HttpEndpoint(spark, store, workerNum = 8, spool = Some(spoolDir))
+    val endpoint = new HttpEndpoint(spark, store, workerNum = 8)
     val port = endpoint.start()
-    var sink: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      // 24 concurrent small writes BEFORE any streaming query exists:
-      // each request can only be an enqueue (validate + atomic spool
-      // rename) — there is no consumer running, so a handler that did
-      // Spark work would show up as rows in the store below
-      val results = Await.result(Future.sequence((1 to 24).toList.map { u =>
-        Future(post(port, "/api/v1/write", RemoteWrite.encode(Seq(
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def fire(p: Int, users: Range): List[Int] =
+      Await.result(Future.sequence(users.toList.map { u =>
+        Future(post(p, "/api/v1/write", RemoteWrite.encode(Seq(
           (Map("event_type" -> "click", "user_id" -> u.toString),
             (0 until 5).map(i => (t0 + i * 60000L, i * 1.0 + u))))))._1)
       }), 120.seconds)
+    def spooled() = new java.io.File(endpoint.spoolDir).listFiles().count(_.getName.endsWith(".bin"))
+    try {
+      // 24 concurrent small writes with no consumer running: each
+      // request can only be an enqueue (validate + atomic spool
+      // rename) — a handler that did Spark work would show up as rows
+      // in the store below
+      endpoint.drain.stop()
+      val results = fire(port, 1 to 24)
       assert(results.forall(_ == 200), results.toString)
-      // durable (spooled) but not yet appended — no Spark work ran
-      assert(new java.io.File(spoolDir).listFiles().count(_.getName.endsWith(".bin")) == 24)
+      // durable (spooled) but not yet appended
+      assert(spooled() == 24)
       assert(!new java.io.File(s"$storeDir/live").exists())
       // malformed payloads are still rejected at the boundary, never spooled
       assert(post(port, "/api/v1/write", Array[Byte](9, 9, 9))._1 == 400)
+      assert(spooled() == 24)
+    } finally endpoint.stop()
+    // stop() leaves no query or worker thread behind
+    assert(!spark.streams.active.exists(_.id == endpoint.drain.id))
+    assert(endpoint.workersTerminated)
 
-      sink = graft.streaming.StreamIngest
-        .startSpoolRemoteWriteSink(spark, spoolDir, store, checkpoint)
-      sink.processAllAvailable()
+    val resumed = new HttpEndpoint(spark, store, workerNum = 8)
+    val port2 = resumed.start()
+    try {
+      resumed.drain.processAllAvailable()
       val us0 = t0 * 1000
-      assert(store.queryAll(Seq(MatchEq("event_type", "click")),
-        us0, us0 + 3600L * 1000000).count() == 120)
+      def clicks() = store.queryAll(Seq(MatchEq("event_type", "click")),
+        us0, us0 + 3600L * 1000000).count()
+      assert(clicks() == 120)
       // THE scale claim: 24 requests drained as a bounded number of
       // micro-batches (all spooled files were present at start → one
       // or two), each one appendBatch job — visible as batch-scoped
       // live dirs, NOT 24 of them
-      def batchDirs() = {
-        val live = new java.io.File(s"$storeDir/live")
-        if (!live.exists()) Array.empty[String]
-        else live.list().filter(_.startsWith("batch="))
-      }
+      def batchDirs() = new java.io.File(s"$storeDir/live").list().filter(_.startsWith("batch="))
       assert(batchDirs().length <= 2, batchDirs().mkString(","))
 
-      // late traffic while the sink runs: lands too, still batched
-      val more = Await.result(Future.sequence((25 to 32).toList.map { u =>
-        Future(post(port, "/api/v1/write", RemoteWrite.encode(Seq(
-          (Map("event_type" -> "click", "user_id" -> u.toString),
-            (0 until 5).map(i => (t0 + i * 60000L, i * 1.0 + u))))))._1)
-      }), 120.seconds)
-      assert(more.forall(_ == 200))
-      sink.processAllAvailable()
-      assert(store.queryAll(Seq(MatchEq("event_type", "click")),
-        us0, us0 + 3600L * 1000000).count() == 160)
+      // late traffic while the drain runs: lands too, still batched
+      assert(fire(port2, 25 to 32).forall(_ == 200))
+      resumed.drain.processAllAvailable()
+      assert(clicks() == 160)
       assert(batchDirs().length <= 10) // 32 requests, ≤10 append jobs
       // cleanSource=delete keeps the spool bounded: committed files go
       // away (deletion rides batch commit, so allow the tail to lag)
       val deadline = System.currentTimeMillis() + 30000
-      def spooled() = new java.io.File(spoolDir).listFiles().count(_.getName.endsWith(".bin"))
       while (spooled() > 8 && System.currentTimeMillis() < deadline) Thread.sleep(250)
       assert(spooled() <= 8, s"spool not draining: ${spooled()} files left")
-    } finally {
-      if (sink != null) sink.stop()
-      endpoint.stop()
-    }
+    } finally resumed.stop()
   }
 
   test("sustained-rate drill: 300 concurrent writes, jobs scale with batches not requests, mid-drill restart loses nothing") {
     val storeDir = Files.createTempDirectory("graft_http_drill_store").toString
-    val spoolDir = Files.createTempDirectory("graft_http_drill_spool").toString
-    val checkpoint = Files.createTempDirectory("graft_http_drill_chk").toString
     val store = new ChunkStore(spark, storeDir)
-    val endpoint = new HttpEndpoint(spark, store, workerNum = 8, spool = Some(spoolDir))
-    val port = endpoint.start()
+    var endpoint = new HttpEndpoint(spark, store, workerNum = 8)
+    var port = endpoint.start()
     val nReq = 300
     val samplesPerReq = 3
-    var sink: org.apache.spark.sql.streaming.StreamingQuery = null
-    // every Spark job started while the sink drains — the scale claim
+    // every Spark job started while the drain runs — the scale claim
     // is that this number tracks MICRO-BATCHES, not the request count
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -555,30 +530,28 @@ class HttpEndpointSpec extends SparkSpec {
             (0 until samplesPerReq).map(i => (t0 + i * 60000L, i * 1.0 + u))))))._1)
       })
 
-      // phase 1: sink running while the first half of the load arrives
-      sink = graft.streaming.StreamIngest
-        .startSpoolRemoteWriteSink(spark, spoolDir, store, checkpoint)
+      // phase 1: drain running while the first half of the load arrives
       spark.sparkContext.addSparkListener(listener)
       val half1 = Await.result(fire(0 until nReq / 2), 120.seconds)
       assert(half1.forall(_ == 200))
-      sink.processAllAvailable()
-      val batchesLife1 = sink.recentProgress.count(_.numInputRows > 0)
+      endpoint.drain.processAllAvailable()
+      val batchesLife1 = endpoint.drain.recentProgress.count(_.numInputRows > 0)
 
-      // mid-drill restart: stop the consumer; the front door keeps
-      // accepting (spool is durable without a consumer), then a new
-      // sink on the SAME checkpoint finishes the job
-      sink.stop()
+      // mid-drill restart: a new endpoint on the SAME store resumes the
+      // drain from its checkpoint (a fresh one would restart batch ids
+      // at 0 and overwrite the first half's batch directories)
+      endpoint.stop()
+      endpoint = new HttpEndpoint(spark, store, workerNum = 8)
+      port = endpoint.start()
       val half2 = Await.result(fire(nReq / 2 until nReq), 120.seconds)
       assert(half2.forall(_ == 200))
-      sink = graft.streaming.StreamIngest
-        .startSpoolRemoteWriteSink(spark, spoolDir, store, checkpoint)
-      sink.processAllAvailable()
+      endpoint.drain.processAllAvailable()
 
       Thread.sleep(1500) // listener events are delivered async
       spark.sparkContext.removeSparkListener(listener)
       val totalJobs = jobs.get()
       val drainedBatches =
-        sink.recentProgress.count(_.numInputRows > 0) + batchesLife1
+        endpoint.drain.recentProgress.count(_.numInputRows > 0) + batchesLife1
       // zero loss, exactly once: every (user, ts) sample of all 300
       // requests present exactly one time
       val rows = store.live()
@@ -597,16 +570,37 @@ class HttpEndpointSpec extends SparkSpec {
       // at most that nudge (+ cleaner lag)
       val nudge = Await.result(fire(nReq until nReq + 4), 120.seconds)
       assert(nudge.forall(_ == 200))
-      sink.processAllAvailable()
+      endpoint.drain.processAllAvailable()
       val deadline = System.currentTimeMillis() + 30000
-      def spooled() = new java.io.File(spoolDir).listFiles().count(_.getName.endsWith(".bin"))
+      def spooled() = new java.io.File(endpoint.spoolDir).listFiles().count(_.getName.endsWith(".bin"))
       while (spooled() > 8 && System.currentTimeMillis() < deadline) Thread.sleep(250)
       assert(spooled() <= 8, s"spool not draining: ${spooled()} files left")
       assert(store.live().count() == (nReq + 4).toLong * samplesPerReq)
-    } finally {
-      if (sink != null) sink.stop()
-      endpoint.stop()
-    }
+    } finally endpoint.stop()
+  }
+
+  test("a spool that cannot take a write answers 500 and logs it, so the client retries; garbage still answers 400") {
+    val storeDir = Files.createTempDirectory("graft_http_spoolfault").toString
+    val endpoint = new HttpEndpoint(spark, new ChunkStore(spark, storeDir))
+    val port = endpoint.start()
+    try {
+      // the spool path turns into a regular file: creating the spooled
+      // payload fails with an IOException — a server fault, not bad input
+      endpoint.drain.stop()
+      val spoolPath = new java.io.File(endpoint.spoolDir)
+      spoolPath.listFiles().foreach(_.delete())
+      assert(spoolPath.delete())
+      Files.write(spoolPath.toPath, Array[Byte](0))
+      val valid = RemoteWrite.encode(Seq(
+        (Map("event_type" -> "click", "user_id" -> "1"), Seq((t0, 1.0)))))
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val code = try post(port, "/api/v1/write", valid)._1 finally System.setErr(stderr)
+      assert(code == 500, code)
+      assert(err.toString.contains("POST /api/v1/write"), err.toString)
+      assert(post(port, "/api/v1/write", Array[Byte](1, 2, 3))._1 == 400)
+    } finally endpoint.stop()
   }
 
   test("format_query pretty-prints; status flags/runtimeinfo answer the handshake shapes") {
@@ -676,6 +670,7 @@ class HttpEndpointSpec extends SparkSpec {
         (Map("event_type" -> "purchase", "user_id" -> "3"),
           Seq((t0 + 30000L, 2.5))))
       assert(post(port, "/api/v1/write", RemoteWrite.encode(in))._1 == 200)
+      endpoint.drain.processAllAvailable()
       store.closeChunksBelow((t0 + 3600000L) * 1000)
 
       val queries: Seq[RemoteRead.Query] = Seq(

@@ -32,6 +32,26 @@ class HybridSpec extends SparkSpec {
     assert(r.toSeq == expect, s"got ${r.toSeq}, want $expect")
   }
 
+  test("bm25TopK: a doc_id under two sources scores as one doc (source never splits tf or df)") {
+    // doc 1 arrives from two sources, both rows carrying "apple"; keyed
+    // by source it would count twice toward df(apple) and fan its
+    // postings out twice
+    val withSource = Seq(
+      (0L, "web", "apple banana"),
+      (1L, "web", "apple cherry"),
+      (1L, "books", "apple durian"),
+      (2L, "web", "banana"),
+      (3L, "books", "cherry"))
+      .toDF("doc_id", "source", "text")
+    def top(docs: org.apache.spark.sql.DataFrame) =
+      Hybrid.bm25TopK(docs, col("doc_id") < 1, k = 10)
+        .select("q_id", "doc_id", "bm25", "rank")
+        .as[(Long, Long, Double, Long)].collect().sortBy(_._4).toSeq
+    val got = top(withSource)
+    assert(got.map(_._2) == Seq(1L, 2L) || got.map(_._2) == Seq(2L, 1L), got)
+    assert(got == top(withSource.drop("source")), got)
+  }
+
   test("rrfFuse: reciprocal ranks add across channels, missing side contributes zero") {
     val bm = Seq((0L, 1L, 1L), (0L, 2L, 2L)).toDF("q_id", "doc_id", "rank")
     val cos = Seq((0L, 2L, 1L), (0L, 3L, 2L)).toDF("q_id", "vec_id", "rank")

@@ -425,6 +425,62 @@ class TsOpsSpec extends SparkSpec {
       s"mass ${real.sum}")
   }
 
+  test("markovStationary regime split: driver and distributed sweeps are bit-identical on both sides of each cap") {
+    // the driver replica the split promises to match, in plain Long
+    // arithmetic over the collected edge frame
+    def replica(ev: org.apache.spark.sql.DataFrame): Seq[(String, Long)] = {
+      val edges = TsOps.transitions(ev).select("from_type", "to_type", "n", "out_n")
+        .as[(String, String, Long, Long)].collect()
+      val sts = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted.toSeq
+      val base = 150000000L / sts.size
+      var pi = sts.map(_ -> 1000000000L / sts.size).toMap
+      for (_ <- 1 to 8) {
+        val in = edges.groupMapReduce(_._2)(e => pi(e._1) * e._3 / e._4)(_ + _)
+        pi = sts.map(s => s -> in.get(s).map(base + 85L * _ / 100L).getOrElse(base)).toMap
+      }
+      sts.map(s => s -> pi(s))
+    }
+    def run(ev: org.apache.spark.sql.DataFrame, maxStates: Int) =
+      TsOps.markovStationary(ev, driverMaxStates = maxStates)
+        .select("event_type", "pi_nano", "pi")
+        .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
+
+    // two-event users: user k walks s(k div width) -> s(k mod width);
+    // every 7th edge gets a second walker so the weights are uneven
+    def walks(nEdges: Long, width: Long) = {
+      val users = spark.range(nEdges).select(col("id").as("k"), col("id").as("user_id"))
+        .unionByName(spark.range(0, nEdges, 7)
+          .select(col("id").as("k"), (col("id") + nEdges).as("user_id")))
+      def state(c: org.apache.spark.sql.Column) = format_string("s%04d", c)
+      users.select(col("user_id"), lit(1L).as("step"), state(expr(s"k div $width")).as("event_type"))
+        .unionByName(users.select(col("user_id"), lit(2L).as("step"),
+          state(col("k") % width).as("event_type")))
+        .select((col("user_id") * 2 + col("step")).as("event_id"),
+          (col("step") * 1000000000L).as("ts"), col("user_id"), col("event_type"),
+          lit(1.0).as("value"))
+    }
+
+    // state cap: 12 states run on the driver at driverMaxStates = 12
+    // and distributed at 11
+    val small = walks(60L, 12L)
+    val driver = run(small, 12)
+    assert(driver.size == 12)
+    assert(driver == run(small, 11), driver)
+    // the replica is the driver path, so it can stand in for it where
+    // the edge cap forbids that path
+    assert(driver.map(r => (r._1, r._2)) == replica(small))
+
+    // edge cap: 65,600 distinct edges exceed the 65,536-edge collect
+    // even though 300 states fit driverMaxStates, so this runs
+    // distributed and must still equal the driver arithmetic
+    val wide = walks(65600L, 300L)
+    assert(TsOps.transitions(wide).count() == 65600L)
+    val dist = run(wide, 300)
+    assert(dist.size == 300)
+    assert(dist.map(r => (r._1, r._2)) == replica(wide))
+    assert(dist.forall(r => r._3 == r._2 / 1e9))
+  }
+
   test("topPaths: consecutive trigrams per user, two-event users emit none") {
     val out = TsOps.topPaths(toyEvents)
       .as[(String, Long)].collect().toSeq
