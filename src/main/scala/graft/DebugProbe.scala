@@ -715,11 +715,10 @@ object DebugProbe {
         println(f"[probe] fed ${"append(once)"}%-28s min=${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
       val ms = Seq(MatchRe("event_type", "click|view"))
-      tt("catalog.count") { store.catalog().count() }
       tt("queryAll.count") { store.queryAll(ms, T0, T1).count() }
       tt("grouped.collect(1 slice)") {
         import org.apache.spark.sql.functions._
-        store.queryAll(ms, T0, T1).join(store.catalog(), "series_id")
+        store.queryAll(ms, T0, T1)
           .groupBy(col("series_id"), col("event_type"), col("user_id"))
           .agg(sort_array(collect_list(struct(col("ts_us"), col("value")))).as("pts"))
           .orderBy(col("series_id")).limit(100001).collect().length.toLong

@@ -1151,8 +1151,8 @@ object PromQL {
     * behind the HTTP /api/v1/query endpoint. The store read is
     * bounded to the expression's widest window, single-selector
     * matchers push into the federated chunk query (partition pruning
-    * does the reference's chunk-overlap check), and labels re-attach
-    * from the store catalog exactly as the remote-read path does.
+    * does the reference's chunk-overlap check), and every sample row
+    * arrives with its labels, exactly as on the remote-read path.
     * Store samples carry no event_id (the wire drops it); a constant
     * surrogate keeps the evaluator's total orders — duplicate
     * (series, ts) points are already merged by ingest. */
@@ -1177,9 +1177,7 @@ object PromQL {
                            startUs: Long, endUs: Long, lookbackUs: Long): DataFrame = {
     val (lo, hi) = readBounds(ast, startUs, endUs, lookbackUs)
     val ms = soleMatchers(ast).getOrElse(Nil)
-    store.queryAll(ms, lo, hi)
-      .join(store.catalog(), "series_id")
-      .withColumn("event_id", lit(0L))
+    store.queryAll(ms, lo, hi).withColumn("event_id", lit(0L))
   }
 
   /** A Prometheus RECORDING RULE: evaluate `query` on an epoch-grid
@@ -1416,9 +1414,7 @@ object PromQL {
                           startUs: Long, endUs: Long, lookbackUs: Long): DataFrame = {
     val (lo, hi) = readBounds(ast, startUs, endUs, lookbackUs)
     val ms = soleMatchers(ast).getOrElse(Nil)
-    store.queryRollup(ms, lo, hi)
-      .join(store.catalog(), "series_id")
-      .withColumn("ts_us", col("bucket_ms") * 1000)
+    store.queryRollup(ms, lo, hi).withColumn("ts_us", col("bucket_ms") * 1000)
   }
 
   private def evalRollup(rollups: DataFrame, e: Expr, g: Grid,

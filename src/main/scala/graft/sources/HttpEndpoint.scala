@@ -685,9 +685,8 @@ final class HttpEndpoint(
       val sel = graft.promql.PromQL.parseSelector(s, at, at)
       val eff = sel.atUs.getOrElse(at) - sel.offsetUs
       store.queryAll(sel.matchers, eff - lookbackUs, eff)
-        .groupBy(col("series_id"))
+        .groupBy(col("series_id"), col("event_type"), col("user_id"))
         .agg(max(struct(col("ts_us"), col("value"))).as("l"))
-        .join(store.catalog(), "series_id") // labels live in the catalog
         .select(col("event_type"), col("user_id"),
           col("l.ts_us").as("ts_us"), col("l.value").as("value"))
     }

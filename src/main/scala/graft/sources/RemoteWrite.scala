@@ -446,8 +446,8 @@ object RemoteRead {
   /** Serve a remote-read payload against a [[ChunkStore]]: decode the
     * request, run every query through the store's federated
     * matcher+range plan (partition pruning, closed-chunk Gorilla
-    * decode — all distributed), re-attach the label set from the
-    * store's catalog, and encode the wire response. Sample order
+    * decode — all distributed; each row carries its labels), group
+    * per series, and encode the wire response. Sample order
     * within a series is time-ascending, as Prometheus requires.
     *
     * `seriesCap` bounds the driver materialization PER QUERY: the
@@ -459,23 +459,8 @@ object RemoteRead {
     * production cardinality is an unbounded driver array. */
   def serve(store: ChunkStore, payload: Array[Byte],
             seriesCap: Int = 100000): Array[Byte] = {
-    import org.apache.spark.sql.functions._
-    // one catalog per request, not per query: a federation-style
-    // ReadRequest batches many queries and the catalog scan is the
-    // same for all of them
-    val cat = store.catalog()
-    val results = decodeRequest(payload).map { case (sMs, eMs, ms) =>
-      // the wire is ms-grain: [sMs, eMs] covers those WHOLE
-      // milliseconds, so the us-grain store query extends to the last
-      // us of eMs — otherwise sub-ms sample tails fall between two
-      // adjacent federation slices (lost by both)
-      val rows = store.queryAll(ms, sMs * 1000, eMs * 1000 + 999)
-      val capped = rows.join(cat, "series_id")
-        .groupBy(col("series_id"), col("event_type"), col("user_id"))
-        .agg(sort_array(collect_list(struct(col("ts_us"), col("value")))).as("pts"))
-        .orderBy(col("series_id"))
-        .limit(seriesCap + 1)
-        .collect()
+    val results = decodeRequest(payload).map { q =>
+      val capped = seriesFrame(store, q).limit(seriesCap + 1).collect()
       if (capped.length > seriesCap)
         throw new TooManySeriesException(seriesCap, "remote-read query")
       capped
@@ -489,6 +474,21 @@ object RemoteRead {
         }.toSeq
     }
     encodeResponse(results)
+  }
+
+  /** One sampled remote-read query's answer as a frame: one row per
+    * series (series_id, event_type, user_id, pts), pts the
+    * time-ascending (ts_us, value) points, ordered by series_id. */
+  private[graft] def seriesFrame(store: ChunkStore, q: Query): DataFrame = {
+    val (sMs, eMs, ms) = q
+    // the wire is ms-grain: [sMs, eMs] covers those WHOLE
+    // milliseconds, so the us-grain store query extends to the last
+    // us of eMs — otherwise sub-ms sample tails fall between two
+    // adjacent federation slices (lost by both)
+    store.queryAll(ms, sMs * 1000, eMs * 1000 + 999)
+      .groupBy(col("series_id"), col("event_type"), col("user_id"))
+      .agg(sort_array(collect_list(struct(col("ts_us"), col("value")))).as("pts"))
+      .orderBy(col("series_id"))
   }
 
   // ──────────── streamed responses (accepted_response_types) ────────────
@@ -559,11 +559,9 @@ object RemoteRead {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     val (queries, _) = decodeRequestFull(payload)
-    val cat = store.catalog()
     val chunkMs = store.chunkUs / 1000
     queries.iterator.zipWithIndex.flatMap { case ((sMs, eMs, ms), qi) =>
       val perSeries = store.queryEncoded(ms, sMs * 1000, eMs * 1000 + 999)
-        .join(cat, "series_id")
         .groupBy(col("series_id"), col("event_type"), col("user_id"))
         .agg(sort_array(collect_list(struct(col("chunk"), col("payload")))).as("chunks"))
         .orderBy(col("series_id"))

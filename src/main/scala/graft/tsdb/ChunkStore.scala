@@ -1,7 +1,9 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType,
+  StructField, StructType}
 
 /** Time-chunked sample storage — the reference's chunk lifecycle
   * (src/db.rs:100-110 chunk dirs, :265-303 swap, src/chunk/chunk.rs)
@@ -76,7 +78,10 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * the per-chunk catalog, and no payload decode at all — the serving
     * path for dashboard/alert ranges where per-sample resolution is
     * not needed. Bucket bounds are inclusive of any bucket overlapping
-    * [startUs, endUs]. */
+    * [startUs, endUs]. Output: the rollup columns (series_id,
+    * bucket_ms, n_points, min/max/sum_value, first_point, last_point,
+    * avg_value) then the labels (event_type, user_id), which ride the
+    * matcher join with the per-chunk catalog. */
   def queryRollup(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap()
     require(exists(rollupPath),
@@ -97,17 +102,35 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
         s"ChunkStore at $path: closed chunks ${missing.toSeq.sorted.mkString(",")} " +
           "in the query range have no rollups (closed before rollupOnClose was " +
           "enabled) — run backfillRollups() once, or query raw via queryAll")
-    val inRange = (df: DataFrame) =>
-      df.filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs)
-    val cat = inRange(readChunked(catalogPath))
-      .filter(Matcher.all(ms))
-      .select("chunk", "series_id")
-    inRange(readChunked(rollupPath))
-      .join(cat, Seq("chunk", "series_id"), "left_semi")
+    inRange(readChunked(rollupPath), startUs, endUs)
+      .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
       .filter(col("bucket_ms") * 1000 >= (startUs / 3600000000L) * 3600000000L &&
         col("bucket_ms") * 1000 <= endUs)
       .drop("chunk")
   }
+
+  /** Rows of a chunk-partitioned tier in chunks overlapping
+    * [startUs, endUs] — a partition-column filter, so Catalyst prunes
+    * the other chunk directories. */
+  private def inRange(df: DataFrame, startUs: Long, endUs: Long): DataFrame =
+    df.filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs)
+
+  /** The in-range per-chunk catalog rows whose labels satisfy `ms`:
+    * (chunk, series_id, event_type, user_id). Every writer of the
+    * catalog (close, backfill, delete, restore) keeps one row per
+    * (chunk, series_id), so an inner join on that pair filters a
+    * closed tier exactly as a semi-join would while carrying the
+    * labels along. */
+  private def matchedCatalog(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
+    inRange(readChunked(catalogPath), startUs, endUs)
+      .filter(Matcher.all(ms))
+      .select("chunk", "series_id", "event_type", "user_id")
+
+  /** Closed payloads of the series [[matchedCatalog]] selects, with
+    * their labels: (chunk, series_id, payload, event_type, user_id). */
+  private def matchedPayloads(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
+    inRange(readChunked(closedPath), startUs, endUs)
+      .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
 
   /** All store METADATA probes (layout guard, closed-id set, raw-dir
     * cleanup) go through the Hadoop FileSystem of `path`, never
@@ -186,34 +209,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   // every mutating verb that can move the newest sample clears it
   @volatile private var newestTsCache: Option[Option[Long]] = None
 
-  /** Memoized [[catalog]] frame — the label index a resident TSDB keeps
-    * hot next to the data. Every remote-read/scrape request re-derived
-    * the store-wide distinct (~0.6 s per HTTP request at sf0.1, ×4
-    * federation slices per read); one persisted frame per instance
-    * serves them all. MUST be dropped on any mutation: beyond staleness,
-    * the cached plan pins a live-file listing, so a close/compact that
-    * deletes those directories would make a stale handle unreadable.
-    * Bench's family-boundary clearCache() only drops the cached DATA —
-    * the storageLevel==NONE re-mark on next use repopulates one entry
-    * (the attachMediaMemo discipline).
-    *
-    * SINGLE-WRITER ASSUMPTION (r13; VERDICT r12 #8): the cache is
-    * per-INSTANCE, so a mutation through a *second* ChunkStore
-    * constructed on the same path is invisible to this instance's
-    * cached catalog until this instance itself mutates. Every gated
-    * flow honors this — cloneTo/snapshot targets get fresh instances
-    * whose first catalog() builds fresh, and no declared path routes
-    * writes to one store through two live handles. A multi-writer
-    * deployment must key invalidation on a path-scoped epoch instead
-    * (compare an epoch file's mtime before serving the memo). */
-  @volatile private var catalogCache: Option[DataFrame] = None
-
-  private def invalidateCatalog(): Unit = {
-    catalogCache.foreach(df =>
-      try df.unpersist(false) catch { case _: Throwable => () })
-    catalogCache = None
-  }
-
   /** Live chunk ids from the partition DIRECTORY NAMES (both
     * layouts) — a metadata listing, never a Spark job. */
   private def liveChunkIdsListed(): Set[Long] = {
@@ -227,12 +222,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   }
 
   /** Delete the RAW live directories of the given chunks (both
-    * layouts) — the final step of compaction. Invalidates the
-    * memoized catalog itself: closeChunksBelow's HEAL branch calls
-    * this directly (closeChunks returns early on an empty set and
-    * never reaches its own invalidation), and a cached catalog plan
-    * pinning the just-deleted live files would fail any later
-    * recompute with FileNotFoundException. */
+    * layouts) — the final step of compaction. */
   private def deleteLiveChunkDirs(chunks: Set[Long]): Unit = {
     if (chunks.isEmpty) return
     val fs = hfs
@@ -242,12 +232,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       if (tops.exists(_.startsWith("batch=")))
         tops.filter(_.startsWith("batch=")).flatMap(b => names.map(n => s"$livePath/$b/$n"))
       else names.map(n => s"$livePath/$n").toSeq
-    var deleted = false
-    targets.foreach { t =>
-      val hp = new org.apache.hadoop.fs.Path(t)
-      if (fs.exists(hp)) { fs.delete(hp, true); deleted = true }
-    }
-    if (deleted) invalidateCatalog()
+    targets.foreach(t => fs.delete(new org.apache.hadoop.fs.Path(t), true))
   }
 
   /** Append samples (from [[Series.samples]]), routed to their chunk.
@@ -264,7 +249,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     clustered(guardedRouted(samples))
       .write.mode("append").partitionBy("chunk").parquet(livePath)
     newestTsCache = None
-    invalidateCatalog()
   }
 
   /** Direct appends write `live/chunk=…`, streaming batch appends
@@ -415,7 +399,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     }
     closedIdsCache = None // retired ids must leave the ingest guard
     newestTsCache = None
-    invalidateCatalog()
     closedBelow ++ liveBelow
   }
 
@@ -464,7 +447,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       fs.delete(new org.apache.hadoop.fs.Path(closedPath), true)
     closedIdsCache = None
     newestTsCache = None
-    invalidateCatalog()
     closedBelow
   }
 
@@ -494,7 +476,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
           .parquet(s"$livePath/batch=$batchId")
     } finally guarded.unpersist(blocking = false)
     newestTsCache = None
-    invalidateCatalog()
   }
 
   /** Cluster on (chunk, salt-of-series) before a partitioned write:
@@ -576,7 +557,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     }
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     fs.delete(marker, false)
-    invalidateCatalog() // live directories were just swapped out
   }
 
   /** Compact the STREAMING live tier: merge every `batch=<id>`
@@ -649,43 +629,16 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
         throw new java.io.IOException(s"batch-compact swap failed for $target")
     }
     fs.delete(marker, false)
-    invalidateCatalog() // live directories were just swapped out
   }
 
-  /** Store-wide series catalog (series_id → label set): live rows'
-    * labels ∪ the closed chunks' per-chunk catalogs — the reference
-    * indexer's id→labels mapping across both tiers. */
-  def catalog(): DataFrame = catalogCache match {
-    case Some(df) =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    case None =>
-      val df = buildCatalog()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      catalogCache = Some(df)
-      df
-  }
-
-  private def buildCatalog(): DataFrame = {
-    val liveCat =
-      if (liveChunkIdsListed().isEmpty) None // fully compacted: no raw files left
-      else Some(live().select("series_id", "event_type", "user_id"))
-    val closedCat =
-      if (!exists(catalogPath)) None
-      else Some(readChunked(catalogPath).select("series_id", "event_type", "user_id"))
-    (liveCat, closedCat) match {
-      case (Some(a), Some(b)) => a.unionByName(b).distinct()
-      case (Some(a), None) => a.distinct()
-      case (None, Some(b)) => b.distinct()
-      case _ => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("series_id", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType))))
-    }
-  }
+  /** Store-wide series catalog (series_id, event_type, user_id): live
+    * rows' labels ∪ the closed chunks' per-chunk catalogs — the
+    * reference indexer's id→labels mapping across both tiers. For the
+    * metadata APIs only (label names and values, series listings,
+    * tsdb status): data reads carry their labels already. Built on
+    * each call, so it shows what is on disk whichever handle wrote
+    * it. */
+  def catalog(): DataFrame = labelSets(identity)
 
   /** The catalog restricted to series with data in chunks overlapping
     * [startUs, endUs] — the Prometheus series/labels metadata APIs'
@@ -693,23 +646,28 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * partition pruning on each side; chunk grain is the resolution
     * (a series is "active" if its CHUNK overlaps, as in Prometheus's
     * block-grain series listing). */
-  def catalogInRange(startUs: Long, endUs: Long): DataFrame = {
-    val lo = startUs / chunkUs
-    val hi = endUs / chunkUs
-    val inRange = (df: DataFrame) => df.filter(col("chunk") >= lo && col("chunk") <= hi)
-    val liveCat =
-      if (liveChunkIdsListed().isEmpty) None
-      else Some(inRange(live()).select("series_id", "event_type", "user_id"))
-    val closedCat =
-      if (!exists(catalogPath)) None
-      else Some(inRange(readChunked(catalogPath)).select("series_id", "event_type", "user_id"))
-    (liveCat, closedCat) match {
-      case (Some(a), Some(b)) => a.unionByName(b).distinct()
-      case (Some(a), None) => a.distinct()
-      case (None, Some(b)) => b.distinct()
-      case _ => catalog().limit(0)
-    }
+  def catalogInRange(startUs: Long, endUs: Long): DataFrame =
+    labelSets(inRange(_, startUs, endUs))
+
+  private def labelSets(scope: DataFrame => DataFrame): DataFrame = {
+    // a fully compacted store has no raw files left to read
+    val tiers = (if (liveChunkIdsListed().isEmpty) Nil else Seq(live())) ++
+      (if (exists(catalogPath)) Seq(readChunked(catalogPath)) else Nil)
+    tiers.map(t => scope(t).select("series_id", "event_type", "user_id"))
+      .reduceOption(_ unionByName _)
+      .fold(emptyOf("series_id" -> StringType, "event_type" -> StringType,
+        "user_id" -> LongType))(_.distinct())
   }
+
+  /** An empty answer with the given schema. A store without rows has
+    * no user_id type on disk; the read verbs' empty answers use long,
+    * the corpus type. */
+  private def emptyOf(fields: (String, DataType)*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+
+  /** Output columns of the sample read verbs. */
+  private val SampleCols = Seq("series_id", "ts_us", "value", "event_type", "user_id")
 
   private def hasClosed: Boolean = exists(closedPath)
 
@@ -729,14 +687,27 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     ids
   }
 
-  /** Matcher + range query over live chunks only. The chunk bounds
-    * filter is on the partition column → partition pruning (the
-    * reference's `is_with_range` scan skip); the ts filter pushes
-    * into parquet. */
+  /** Matcher + range query over live chunks only. Output:
+    * (series_id, ts_us, value, event_type, user_id), the labels read
+    * from the live rows themselves. The chunk bounds filter is on the
+    * partition column → partition pruning (the reference's
+    * `is_with_range` scan skip); the ts filter pushes into parquet. A
+    * store with no live chunk answers an empty frame. */
   def query(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
-    TsOps.rangeQuery(
-      live().filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs),
-      ms, startUs, endUs)
+    if (liveChunkIdsListed().isEmpty)
+      emptyOf("series_id" -> StringType, "ts_us" -> LongType, "value" -> DoubleType,
+        "event_type" -> StringType, "user_id" -> LongType)
+    else liveMatched(ms, startUs, endUs, Set.empty).select(SampleCols.map(col): _*)
+
+  /** Live rows in range whose labels satisfy `ms`, outside the chunks
+    * in `closedIds` (a closed chunk serves from its payloads; raw dirs
+    * of it that outlived a crash are superseded). All live columns. */
+  private def liveMatched(ms: Seq[Matcher], startUs: Long, endUs: Long,
+                          closedIds: Set[Long]): DataFrame = {
+    val rows = inRange(live(), startUs, endUs)
+    val open = if (closedIds.isEmpty) rows else rows.filter(!col("chunk").isInCollection(closedIds))
+    TsOps.rangeBound(open.filter(Matcher.all(ms)), startUs, endUs)
+  }
 
   /** Close one chunk: Gorilla-pack its series into the closed store
     * and record the chunk's series catalog (id → labels) so closed
@@ -756,7 +727,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     // CATALOG first, payload second: the closed-id set (and queryAll's
     // live-branch exclusion) keys on the PAYLOAD directories, so a
     // crash between the two writes leaves a catalog without payloads —
-    // harmless (the semi-join finds no payload rows, the raw rows
+    // harmless (the catalog join finds no payload rows, the raw rows
     // still serve from live) and self-healing (the chunk is still a
     // close candidate and the dynamic overwrite rewrites both).
     // Payload-first would instead hide the raw rows while the catalog
@@ -781,7 +752,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("chunk").parquet(closedPath)
     closedIdsCache = None // the guard must see the newly closed ids
-    invalidateCatalog() // the cached plan pins the pre-close live files
     // compaction COMPLETES by dropping the raw rows: without this the
     // store keeps raw + compressed copies of all history forever. A
     // crash before the delete only wastes space (closed ids exclude
@@ -1098,7 +1068,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     fs.delete(marker, false)
     closedIdsCache = None
     newestTsCache = None
-    invalidateCatalog()
     retentionCache = None
     rawRetentionCache = None
   }
@@ -1108,18 +1077,17 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   /** Matcher + range query over CLOSED chunks: prune by chunk range,
     * resolve matchers against the per-chunk catalog (label filters run
     * on the small catalog, never on decoded samples), decode only the
-    * payloads of matching series. */
+    * payloads of matching series. Output: (series_id, ts_us, value,
+    * event_type, user_id), the labels carried from the per-chunk
+    * catalog through the decode. */
   def queryClosed(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertRawServable(startUs)
     assertNoPendingClosedSwap()
-    val inRange = (df: DataFrame) =>
-      df.filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs)
-    val cat = inRange(readChunked(catalogPath))
-      .filter(Matcher.all(ms))
-      .select("chunk", "series_id")
-    val payloads = inRange(readChunked(closedPath))
-      .join(cat, Seq("chunk", "series_id"), "left_semi")
-    Gorilla.unpack(payloads)
+    matchedPayloads(ms, startUs, endUs)
+      .select(col("series_id"), explode(Gorilla.decodeUdf(col("payload"))).as("p"),
+        col("event_type"), col("user_id"))
+      .select(col("series_id"), col("p._1").as("ts_us"), col("p._2").as("value"),
+        col("event_type"), col("user_id"))
       .filter(col("ts_us") >= startUs && col("ts_us") <= endUs)
   }
 
@@ -1130,50 +1098,29 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * Thanos-style chunked answer to it). Closed Gorilla payloads ship
     * EXACTLY as they sit at rest — zero decode, zero re-encode, the
     * whole point of streaming from a chunked store — and live raw
-    * rows pack per (series, chunk) on the executors with the same
-    * codec a close would apply. CLOSED boundary chunks may carry
+    * rows pack per (series, labels, chunk) on the executors with the
+    * same codec a close would apply. CLOSED boundary chunks may carry
     * samples outside [startUs, endUs]: chunk grain is the wire
     * contract and the client trims after decode (the Prometheus
     * streamed-read rule — servers send whole chunks). Output:
-    * (series_id, chunk, payload). */
+    * (series_id, chunk, payload, event_type, user_id), the labels
+    * from the live rows or from the per-chunk catalog; an empty store
+    * answers an empty frame. */
   def queryEncoded(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap()
     assertRawServable(startUs)
-    val inRange = (df: DataFrame) =>
-      df.filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs)
+    val cols = Seq("series_id", "chunk", "payload", "event_type", "user_id").map(col)
     val closedIds = closedChunkIds()
-    val closedPart: Option[DataFrame] =
+    val closedPart =
       if (!hasClosed) None
-      else {
-        val cat = inRange(readChunked(catalogPath))
-          .filter(Matcher.all(ms))
-          .select("chunk", "series_id")
-        Some(inRange(readChunked(closedPath))
-          .join(cat, Seq("chunk", "series_id"), "left_semi")
-          .select("series_id", "chunk", "payload"))
-      }
-    val livePart: Option[DataFrame] =
+      else Some(matchedPayloads(ms, startUs, endUs).select(cols: _*))
+    val livePart =
       if (liveChunkIdsListed().forall(closedIds)) None
-      else Some(Gorilla.packWithChunk(
-        TsOps.rangeQuery(
-            inRange(live()).filter(!col("chunk").isInCollection(closedIds)),
-            ms, startUs, endUs)
-          .select(col("series_id"), col("ts_us"), col("value"),
-            expr(s"ts_us div $chunkUs").as("chunk"))))
-    (closedPart, livePart) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("series_id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("chunk",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("payload",
-            org.apache.spark.sql.types.BinaryType))))
-    }
+      else Some(Gorilla.packBy(liveMatched(ms, startUs, endUs, closedIds),
+        "series_id", "event_type", "user_id", "chunk").select(cols: _*))
+    (closedPart ++ livePart).reduceOption(_ unionByName _).getOrElse(
+      emptyOf("series_id" -> StringType, "chunk" -> LongType, "payload" -> BinaryType,
+        "event_type" -> StringType, "user_id" -> LongType))
   }
 
   /** Prometheus's admin deletion verb (POST /api/v1/admin/tsdb/
@@ -1349,7 +1296,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     fs.delete(marker, false)
     closedIdsCache = None
     newestTsCache = None
-    invalidateCatalog()
   }
 
   /** Prometheus-style BACKFILL / out-of-order ingest (the capability
@@ -1395,7 +1341,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     clustered(fresh)
       .write.mode("append").partitionBy("chunk").parquet(livePath)
     newestTsCache = None
-    invalidateCatalog()
     if (closedIds.isEmpty) return
     // persisted for the verb's duration: the affected-chunk collect,
     // the touched semi/anti joins and both unions below each re-ran
@@ -1466,7 +1411,10 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
 
   /** Federated query: closed chunks (compressed) ∪ live chunks not
     * yet closed — the reference's merge across current + secondary
-    * chunks. */
+    * chunks. Output: (series_id, ts_us, value, event_type, user_id);
+    * live rows carry their own labels and closed rows take theirs
+    * from the per-chunk catalog, so no store-wide catalog is read. An
+    * empty store answers an empty frame. */
   def queryAll(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap() // before hasClosed — a mid-swap crash can
     // leave the whole closed dir in staging, which would misread as live-only
@@ -1476,13 +1424,8 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     // fully compacted stores have no raw files left — reading the
     // empty live root would fail schema inference, and lingering raw
     // dirs of closed chunks are excluded anyway
-    val liveIds = liveChunkIdsListed()
-    if (liveIds.forall(closedIds)) return queryClosed(ms, startUs, endUs)
-    val liveOnly = TsOps.rangeQuery(
-      live()
-        .filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs)
-        .filter(!col("chunk").isInCollection(closedIds)),
-      ms, startUs, endUs)
-    liveOnly.unionByName(queryClosed(ms, startUs, endUs))
+    if (liveChunkIdsListed().forall(closedIds)) return queryClosed(ms, startUs, endUs)
+    liveMatched(ms, startUs, endUs, closedIds).select(SampleCols.map(col): _*)
+      .unionByName(queryClosed(ms, startUs, endUs))
   }
 }

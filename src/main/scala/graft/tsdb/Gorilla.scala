@@ -153,11 +153,7 @@ object Gorilla {
     * time-ordered points packed into a Gorilla `payload` binary.
     * sort_array on (ts_us, value) structs gives the required ordering
     * without a window shuffle. */
-  def pack(samples: DataFrame): DataFrame =
-    samples
-      .groupBy(col("series_id"))
-      .agg(sort_array(collect_list(struct(col("ts_us"), col("value")))).as("pts"))
-      .select(col("series_id"), encodeUdf(col("pts")).as("payload"))
+  def pack(samples: DataFrame): DataFrame = packBy(samples, "series_id")
 
   /** [[pack]] scoped to time chunks: one payload per (series, chunk),
     * so the per-group collect is bounded by chunk duration instead of
@@ -169,11 +165,14 @@ object Gorilla {
 
   /** [[packChunked]] for rows that already carry a `chunk` column
     * (e.g. the live store): one payload per (series, chunk). */
-  def packWithChunk(samples: DataFrame): DataFrame =
+  def packWithChunk(samples: DataFrame): DataFrame = packBy(samples, "series_id", "chunk")
+
+  /** One payload per distinct `keys` tuple: (keys…, payload). */
+  def packBy(samples: DataFrame, keys: String*): DataFrame =
     samples
-      .groupBy(col("series_id"), col("chunk"))
+      .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(col("ts_us"), col("value")))).as("pts"))
-      .select(col("series_id"), col("chunk"), encodeUdf(col("pts")).as("payload"))
+      .select(keys.map(col) :+ encodeUdf(col("pts")).as("payload"): _*)
 
   /** Inverse of [[pack]]: payload → exploded (series_id, ts_us, value). */
   def unpack(packed: DataFrame): DataFrame =

@@ -653,4 +653,130 @@ class ChunkStoreSpec extends SparkSpec {
       assertHealthy(dir, store)
     }
   }
+
+  // ─────────── labels ride the read plan ───────────
+
+  private val dayUs = 86400000000L
+  private val day0 = 1704067200000000L // 2024-01-01 00:00 UTC, us
+
+  /** Events over five daily chunks: click/u1 and purchase/u1 span days
+    * 0-4, view/u2 days 0-2, click/u3 only day 4. */
+  private def labeledEvents = {
+    val h = 3600000000000L // ns
+    val t0n = day0 * 1000L
+    Seq(
+      (1L, t0n + 1L * h, 1L, "click", 10.0),
+      (2L, t0n + 25L * h, 1L, "click", 20.0),
+      (3L, t0n + 97L * h, 1L, "click", 30.0),
+      (4L, t0n + 26L * h, 1L, "purchase", 100.0),
+      (5L, t0n + 100L * h, 1L, "purchase", 110.0),
+      (6L, t0n + 3L * h, 2L, "view", 5.0),
+      (7L, t0n + 50L * h, 2L, "view", 6.0),
+      (8L, t0n + 98L * h, 3L, "click", 7.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+  }
+
+  /** A daily-chunk rollup store holding [[labeledEvents]], with every
+    * chunk below `closeBelowDay` closed. */
+  private def labeledStore(name: String, closeBelowDay: Int): ChunkStore = {
+    val store = new ChunkStore(spark, Files.createTempDirectory(name).toString,
+      chunkMs = 86400000L, rollupOnClose = true)
+    store.append(Series.samples(labeledEvents))
+    if (closeBelowDay > 0) store.closeChunksBelow(day0 + closeBelowDay * dayUs)
+    store
+  }
+
+  private def assertSameRows(got: org.apache.spark.sql.DataFrame,
+                             want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).isEmpty, "rows missing from the reference")
+    assert(want.exceptAll(got).isEmpty, "reference rows missing")
+  }
+
+  test("labeled reads equal the old catalog join on live, closed, mixed and backfilled+deleted stores") {
+    val liveOnly = labeledStore("graft_lbl_live", 0)
+    val closedOnly = labeledStore("graft_lbl_closed", 5)
+    val mixed = labeledStore("graft_lbl_mixed", 3) // days 0-2 closed, day 4 live
+    val revised = labeledStore("graft_lbl_revised", 3)
+    val t0n = day0 * 1000L
+    val h = 3600000000000L
+    val late = Seq(
+      (20L, t0n + 30L * h, 1L, "click", 21.0), // existing series, closed day 1
+      (21L, t0n + 2L * h, 4L, "view", 8.0))    // new series into closed day 0
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    revised.backfill(Series.samples(late))
+    revised.deleteSeries(Seq(MatchEq("event_type", "click")), day0 + dayUs, day0 + 2 * dayUs - 1)
+    val revisedTruth = Series.samples(labeledEvents.unionByName(late))
+      .filter(!($"event_type" === "click" &&
+        $"ts_us".between(day0 + dayUs, day0 + 2 * dayUs - 1)))
+    val reads = Seq(
+      (Seq.empty[Matcher], day0, day0 + 10 * dayUs),
+      (Seq[Matcher](MatchRe("event_type", "click|view")), day0 + dayUs / 2, day0 + 5 * dayUs))
+    for ((store, truth) <- Seq(liveOnly -> Series.samples(labeledEvents),
+           closedOnly -> Series.samples(labeledEvents),
+           mixed -> Series.samples(labeledEvents), revised -> revisedTruth);
+         (ms, lo, hi) <- reads) {
+      val cat = store.catalog()
+      val all = store.queryAll(ms, lo, hi)
+      assertSameRows(all, all.select("series_id", "ts_us", "value").join(cat, "series_id"))
+      // and the rows themselves are the written truth, labels included
+      assertSameRows(all, TsOps.rangeQuery(truth, ms, lo, hi).join(cat, "series_id"))
+      val enc = store.queryEncoded(ms, lo, hi)
+      assertSameRows(enc, enc.select("series_id", "chunk", "payload").join(cat, "series_id"))
+      if (store ne liveOnly) { // rollups exist once a chunk closes
+        val roll = store.queryRollup(ms, lo, hi)
+        assert(roll.count() > 0)
+        assertSameRows(roll, roll.drop("event_type", "user_id").join(cat, "series_id"))
+      }
+    }
+    // the mixed store really federates one series across both tiers
+    val a = mixed.queryAll(Seq(MatchEq("event_type", "click"), MatchEq("user_id", "1")),
+      day0, day0 + 10 * dayUs).select("value").as[Double].collect().sorted.toSeq
+    assert(a == Seq(10.0, 20.0, 30.0), a)
+  }
+
+  test("remote-read and range-query plans scan the live root once on a mixed store") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
+    }
+    def liveScans(df: org.apache.spark.sql.DataFrame): Int = {
+      assert(df.collect().nonEmpty)
+      scans(df.queryExecution.executedPlan)
+        .count(_.relation.location.rootPaths.exists(_.getName == "live"))
+    }
+    val store = labeledStore("graft_lbl_plan", 3)
+    val read = graft.sources.RemoteRead.seriesFrame(store,
+      (day0 / 1000, (day0 + 10 * dayUs) / 1000, Seq.empty))
+    assert(liveScans(read) == 1)
+    val range = graft.promql.PromQL.evalStoreRange(store,
+      """sum by (event_type) (sum_over_time({event_type=~"click|purchase"}[1d]))""",
+      day0 + dayUs, day0 + 5 * dayUs, dayUs)
+    assert(liveScans(range) == 1)
+  }
+
+  test("a second handle's append and close show in this handle's catalog and queryAll") {
+    val dir = Files.createTempDirectory("graft_two_handles").toString
+    val a = new ChunkStore(spark, dir, chunkMs = 86400000L)
+    val b = new ChunkStore(spark, dir, chunkMs = 86400000L)
+    val events = labeledEvents
+    a.append(Series.samples(events.filter($"event_type" === "view")))
+    assert(a.catalog().count() == 1)
+    assert(a.queryAll(Nil, day0, day0 + 10 * dayUs).count() == 2)
+    b.append(Series.samples(events.filter($"event_type" =!= "view")))
+    b.closeChunksBelow(day0 + 3 * dayUs)
+    assert(a.catalog().select("event_type", "user_id").as[(String, Long)].collect().toSet ==
+      Set(("view", 2L), ("click", 1L), ("purchase", 1L), ("click", 3L)))
+    val got = a.queryAll(Nil, day0, day0 + 10 * dayUs)
+      .select("event_type", "user_id", "value").as[(String, Long, Double)].collect().toSet
+    assert(got == events.select("event_type", "user_id", "value")
+      .as[(String, Long, Double)].collect().toSet, got)
+  }
 }

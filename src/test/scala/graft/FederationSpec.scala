@@ -185,7 +185,6 @@ class FederationSpec extends SparkSpec {
           (b.dataHorizonUs.isEmpty || b.query(Nil, t0, at).count() < 3)) Thread.sleep(200)
       } finally q.stop()
       val viaB = b.query(Nil, t0, at)
-        .join(b.catalog(), "series_id")
         .select("event_type", "user_id", "value")
         .as[(String, String, Double)].collect().toSet
       assert(viaB == Set(("click", "1", 40.0), ("click", "2", 7.0), ("view", "11", 1.0)), viaB)

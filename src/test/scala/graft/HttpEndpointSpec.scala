@@ -729,4 +729,26 @@ class HttpEndpointSpec extends SparkSpec {
         tear.getMessage)
     } finally endpoint.stop()
   }
+
+  test("a fresh endpoint answers reads with 200 and empty results before the first write") {
+    val store = new ChunkStore(spark, Files.createTempDirectory("graft_http_fresh").toString)
+    val endpoint = new HttpEndpoint(spark, store)
+    val port = endpoint.start()
+    try {
+      val queries: Seq[RemoteRead.Query] = Seq(
+        (t0, t0 + 3600000L, Seq(MatchEq("event_type", "click"))))
+      val (code, body) = post(port, "/api/v1/read", RemoteRead.encodeRequest(queries))
+      assert(code == 200, new String(body, "UTF-8"))
+      assert(RemoteRead.decodeResponse(body) == Seq(Seq.empty))
+      val (sCode, sBody) = post(port, "/api/v1/read",
+        RemoteRead.encodeRequest(queries, acceptStreamed = true))
+      assert(sCode == 200, new String(sBody, "UTF-8"))
+      assert(RemoteRead.decodeStreamedResponse(sBody).isEmpty)
+      val (qCode, qBody) = post(port, s"/api/v1/query?query=click&time=${t0 / 1000}",
+        Array.empty[Byte])
+      val qText = new String(qBody, "UTF-8")
+      assert(qCode == 200, qText)
+      assert(qText == """{"status":"success","data":{"resultType":"vector","result":[]}}""", qText)
+    } finally endpoint.stop()
+  }
 }
