@@ -54,8 +54,9 @@ final class Graft(val spark: SparkSession, dir: String) {
     * A write answering 200 is accepted and durable in the endpoint's
     * spool; it becomes visible to reads after the endpoint's drain
     * runs its next micro-batch (`drain.processAllAvailable()` waits for
-    * that). The drain writes the streaming layout, so the store takes
-    * no direct `append` — one ingest mode per store path. */
+    * that). One streaming checkpoint and one writer at a time per
+    * store path: direct `append` and `backfill` wait until the
+    * endpoint has stopped. */
   def serveHttp(store: tsdb.ChunkStore, port: Int = 9090): sources.HttpEndpoint = {
     val e = new sources.HttpEndpoint(spark, store, port)
     e.start()

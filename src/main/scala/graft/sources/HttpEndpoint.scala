@@ -39,9 +39,10 @@ import graft.tsdb.ChunkStore
   * checkpoint plus the replay-idempotent batch appends play the
   * reference's WAL: a new endpoint on the same store resumes from the
   * checkpoint and drains what an earlier one accepted exactly once.
-  * The drain writes the streaming layout, so a store that takes writes
-  * here takes no direct [[ChunkStore.append]] — one ingest mode per
-  * store path — and one endpoint at a time serves a store path.
+  * One streaming checkpoint and one writer at a time per store path:
+  * while an endpoint serves a store, nothing else writes it; once the
+  * endpoint has stopped, the store takes direct [[ChunkStore.append]]
+  * and [[ChunkStore.backfill]] calls.
   *
   * Status mapping, in one place ([[route]]): 200 read hit / write
   * accepted (204 for delete_series), 400 `bad_data` for bad client

@@ -22,8 +22,14 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, S
   *    the reference's read path walks the current chunk then the
   *    secondary chunks and merges by label set (db.rs:205-263).
   *
-  * Appends are per-chunk parquet writes: on a cluster each micro-batch
-  * lands in its hour partition and never rewrites history.
+  * The live tier has one layout, `live/batch=<id>/chunk=<c>`: every
+  * write is a batch directory. A streaming micro-batch takes its batch
+  * id ([[appendBatch]]); a direct [[append]] takes a negative id below
+  * every listed one, so it never collides with a streaming batch and is
+  * a source of the next [[compactBatches]]. Writes never rewrite
+  * history. One streaming checkpoint and one writer at a time per store
+  * path; every handle reads the store's state from disk on each call,
+  * so a second handle on the same path never acts on stale state.
   */
 final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 3600000L,
                        filesPerChunkPerAppend: Int = 8,
@@ -132,7 +138,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     inRange(readChunked(closedPath), startUs, endUs)
       .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
 
-  /** All store METADATA probes (layout guard, closed-id set, raw-dir
+  /** All store METADATA probes (batch and closed-id listings, raw-dir
     * cleanup) go through the Hadoop FileSystem of `path`, never
     * java.io.File — a java.io probe silently answers "nothing there"
     * for s3a:///hdfs:// paths, which would disable the guards exactly
@@ -185,54 +191,38 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * empty page. Endpoints that need "the data's now" use this
     * instead; cost is one chunk's scan (decode only if that chunk is
     * closed), acceptable at request rate. */
-  def newestSampleTsUs: Option[Long] = newestTsCache.getOrElse {
+  def newestSampleTsUs: Option[Long] = {
     val closedIds = closedChunkIds()
     val liveIds = liveChunkIdsListed()
     val ids = closedIds ++ liveIds
-    val v =
-      if (ids.isEmpty) None
-      else {
-        val c = ids.max
-        val rows =
-          if (liveIds.contains(c) && !closedIds.contains(c))
-            live().filter(col("chunk") === c)
-          else readClosed(c)
-        val m = rows.agg(max(col("ts_us"))).collect()(0)
-        if (m.isNullAt(0)) dataHorizonUs else Some(m.getLong(0))
-      }
-    newestTsCache = Some(v)
-    v
+    if (ids.isEmpty) None
+    else {
+      val c = ids.max
+      val rows =
+        if (liveIds.contains(c) && !closedIds.contains(c))
+          live().filter(col("chunk") === c)
+        else readClosed(c)
+      val m = rows.agg(max(col("ts_us"))).collect()(0)
+      if (m.isNullAt(0)) dataHorizonUs else Some(m.getLong(0))
+    }
   }
 
-  // cached newest-sample answer (review fix: an uncached scan made
-  // every ?time=-less serving request pay a newest-chunk decode);
-  // every mutating verb that can move the newest sample clears it
-  @volatile private var newestTsCache: Option[Option[Long]] = None
+  /** The `batch=<id>` directory names under `live/`. */
+  private def batchDirs(): Seq[String] = listNames(livePath).filter(_.startsWith("batch="))
 
-  /** Live chunk ids from the partition DIRECTORY NAMES (both
-    * layouts) — a metadata listing, never a Spark job. */
-  private def liveChunkIdsListed(): Set[Long] = {
-    val tops = listNames(livePath)
-    val chunkDirs =
-      if (tops.exists(_.startsWith("batch=")))
-        tops.filter(_.startsWith("batch=")).flatMap(b => listNames(s"$livePath/$b"))
-      else tops
-    chunkDirs.filter(_.startsWith("chunk="))
+  /** Live chunk ids from the partition DIRECTORY NAMES — a metadata
+    * listing, never a Spark job. */
+  private def liveChunkIdsListed(): Set[Long] =
+    batchDirs().flatMap(b => listNames(s"$livePath/$b")).filter(_.startsWith("chunk="))
       .map(_.stripPrefix("chunk=").toLong).toSet
-  }
 
-  /** Delete the RAW live directories of the given chunks (both
-    * layouts) — the final step of compaction. */
+  /** Delete the RAW live directories of the given chunks from every
+    * batch directory — the final step of compaction. */
   private def deleteLiveChunkDirs(chunks: Set[Long]): Unit = {
     if (chunks.isEmpty) return
     val fs = hfs
-    val names = chunks.map(c => s"chunk=$c")
-    val tops = listNames(livePath)
-    val targets =
-      if (tops.exists(_.startsWith("batch=")))
-        tops.filter(_.startsWith("batch=")).flatMap(b => names.map(n => s"$livePath/$b/$n"))
-      else names.map(n => s"$livePath/$n").toSeq
-    targets.foreach(t => fs.delete(new org.apache.hadoop.fs.Path(t), true))
+    for (b <- batchDirs(); c <- chunks)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$livePath/$b/chunk=$c"), true)
   }
 
   /** Append samples (from [[Series.samples]]), routed to their chunk.
@@ -243,29 +233,12 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * was Gorilla-packed would be invisible to queryAll (which reads
     * the closed payload for those chunk ids) — the reference rejects
     * out-of-chunk appends at ingest for the same reason; streaming
-    * callers bound this case with a close lag ≥ their watermark. */
-  def append(samples: DataFrame): Unit = {
-    assertLayout(batchScoped = false)
-    clustered(guardedRouted(samples))
-      .write.mode("append").partitionBy("chunk").parquet(livePath)
-    newestTsCache = None
-  }
-
-  /** Direct appends write `live/chunk=…`, streaming batch appends
-    * write `live/batch=…/chunk=…` — parquet partition discovery
-    * cannot mix directory depths under one root, so the first read
-    * after mixing them would fail confusingly. Refuse at write time
-    * instead, with a message that names the rule: one ingest mode per
-    * store path. */
-  private def assertLayout(batchScoped: Boolean): Unit = {
-    val tops = listNames(livePath)
-    val clash = if (batchScoped) "chunk=" else "batch="
-    if (tops.exists(_.startsWith(clash)))
-      throw new IllegalStateException(
-        s"ChunkStore at $path already has ${clash.dropRight(1)}-rooted live data: " +
-          "direct append() and streaming appendBatch() cannot share one store " +
-          "(mixed partition-directory depths are unreadable); use one ingest mode per path")
-  }
+    * callers bound this case with a close lag ≥ their watermark.
+    * The rows land in a new batch directory whose id is one below the
+    * smallest listed id and never above -1: streaming batch ids are
+    * never negative, so the two cannot collide. */
+  def append(samples: DataFrame): Unit =
+    appendBatch(samples, (0L +: batchDirs().map(_.stripPrefix("batch=").toLong)).min - 1)
 
   /** Shared ingest guard + chunk routing (see [[append]] scaladoc).
     * Chunks below the retention horizon are dropped at ingest too: a
@@ -301,40 +274,24 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
 
   /** First retained chunk id (exclusive retention horizon), persisted
     * as one-line store metadata so the guard survives restarts. */
-  @volatile private var retentionCache: Option[Option[Long]] = None
-
-  private def retainedFrom(): Option[Long] = retentionCache.getOrElse {
-    val v =
-      if (!exists(retentionPath)) None
-      else {
-        val in = hfs.open(new org.apache.hadoop.fs.Path(retentionPath))
-        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    retentionCache = Some(v)
-    v
-  }
+  private def retainedFrom(): Option[Long] = readHorizon(retentionPath)
 
   /** First chunk id that still has RAW payloads (exclusive raw-tier
     * retention horizon — [[retireRaw]]); same one-line persistence. */
-  @volatile private var rawRetentionCache: Option[Option[Long]] = None
+  private def rawRetainedFrom(): Option[Long] = readHorizon(rawRetentionPath)
 
-  private def rawRetainedFrom(): Option[Long] = rawRetentionCache.getOrElse {
-    val v =
-      if (!exists(rawRetentionPath)) None
-      else {
-        val in = hfs.open(new org.apache.hadoop.fs.Path(rawRetentionPath))
-        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    rawRetentionCache = Some(v)
-    v
-  }
+  private def readHorizon(p: String): Option[Long] =
+    if (!exists(p)) None
+    else {
+      val in = hfs.open(new org.apache.hadoop.fs.Path(p))
+      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
+      finally in.close()
+    }
 
   /** Closed-tier reads refuse while an interrupted delete/restore
     * swap is pending — partitions may be mid-move; re-running the
-    * interrupted verb heals (the live-tier `_compact_pending` rule,
-    * applied to the closed tier). */
+    * interrupted verb heals (the live-tier `_batch_compact_pending`
+    * rule, applied to the closed tier). */
   private def assertNoPendingClosedSwap(): Unit = {
     require(!exists(s"$path/$DeletePendingMarker"),
       s"ChunkStore at $path: a series deletion was interrupted mid-swap — " +
@@ -371,7 +328,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val fs = hfs
     val out = fs.create(new org.apache.hadoop.fs.Path(retentionPath), true)
     try out.write(newLimit.toString.getBytes("UTF-8")) finally out.close()
-    retentionCache = Some(Some(newLimit))
     // raw-retired chunks are absent from the closed-id set but still
     // hold catalog/rollup partitions — full retirement must drop those
     // too, so the id set unions the rollup-tier listing
@@ -388,17 +344,15 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     // roots left without any chunk partition are removed entirely: an
     // empty parquet root fails schema inference on the next read, and
     // a fully-retired store must read like a fresh one
-    listNames(livePath).filter(_.startsWith("batch=")).foreach { b =>
+    batchDirs().foreach { b =>
       if (!listNames(s"$livePath/$b").exists(_.startsWith("chunk=")))
         fs.delete(new org.apache.hadoop.fs.Path(s"$livePath/$b"), true)
     }
-    Seq(closedPath, catalogPath, rollupPath, livePath).foreach { dir =>
-      if (exists(dir) && !listNames(dir).exists(n =>
-        n.startsWith("chunk=") || n.startsWith("batch=")))
+    Seq(closedPath -> "chunk=", catalogPath -> "chunk=", rollupPath -> "chunk=",
+      livePath -> "batch=").foreach { case (dir, child) =>
+      if (exists(dir) && !listNames(dir).exists(_.startsWith(child)))
         fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
-    closedIdsCache = None // retired ids must leave the ingest guard
-    newestTsCache = None
     closedBelow ++ liveBelow
   }
 
@@ -438,15 +392,12 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val fs = hfs
     val out = fs.create(new org.apache.hadoop.fs.Path(rawRetentionPath), true)
     try out.write(newLimit.toString.getBytes("UTF-8")) finally out.close()
-    rawRetentionCache = Some(Some(newLimit))
     closedBelow.foreach { c =>
       val hp = new org.apache.hadoop.fs.Path(s"$closedPath/chunk=$c")
       if (fs.exists(hp)) fs.delete(hp, true)
     }
     if (exists(closedPath) && !listNames(closedPath).exists(_.startsWith("chunk=")))
       fs.delete(new org.apache.hadoop.fs.Path(closedPath), true)
-    closedIdsCache = None
-    newestTsCache = None
     closedBelow
   }
 
@@ -459,9 +410,9 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * identical directory instead of double-appending, which is what
     * makes the checkpoint the WAL: replay converges to exactly-once.
     * One streaming query (one checkpoint) per store path — a fresh
-    * checkpoint restarts batch ids at 0 and would overwrite history. */
+    * checkpoint restarts batch ids at 0 and would overwrite history.
+    * Negative ids belong to direct appends and compaction output. */
   def appendBatch(samples: DataFrame, batchId: Long): Unit = {
-    assertLayout(batchScoped = true)
     // persisted: the emptiness probe and the write share one
     // evaluation of the batch's upstream (which may include e.g. the
     // remote-write proto decode) instead of running it twice
@@ -475,7 +426,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
           .write.mode("overwrite").partitionBy("chunk")
           .parquet(s"$livePath/batch=$batchId")
     } finally guarded.unpersist(blocking = false)
-    newestTsCache = None
   }
 
   /** Cluster on (chunk, salt-of-series) before a partitioned write:
@@ -495,72 +445,18 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   private def readChunked(p: String): DataFrame =
     spark.read.parquet(p).withColumn("chunk", col("chunk").cast("long"))
 
-  /** Live rows. Under the streaming layout rows sit in
-    * `batch=<id>/chunk=<id>` partitions; the batch id is a sink
-    * bookkeeping column, dropped here so both layouts query alike
-    * (chunk stays a partition column either way — pruning holds). */
+  /** Live rows from `live/batch=<id>/chunk=<c>`; the batch id is
+    * write bookkeeping, dropped here (chunk stays a partition column,
+    * so pruning holds). */
   def live(): DataFrame = {
-    require(!exists(s"$path/_compact_pending"),
-      s"ChunkStore at $path: a live compaction was interrupted mid-swap — " +
-        "chunk directories may be missing rows; run compactLive() again to heal")
     require(!exists(s"$path/_batch_compact_pending"),
       s"ChunkStore at $path: a batch compaction was interrupted mid-swap — " +
         "batch directories may be missing rows; run compactBatches() again to heal")
     readChunked(livePath).drop("batch")
   }
 
-  /** Compact the LIVE tier: every append leaves up to
-    * `filesPerChunkPerAppend` files per chunk, so at daily-ingest
-    * cadence a not-yet-closed chunk accumulates appends × that many
-    * small parquet files — the classic ingest tax. This rewrites each
-    * live chunk directory down to ONE append's worth of files (the
-    * same `clustered` salt discipline, so write parallelism per chunk
-    * is preserved), leaving query results unchanged. Direct-append
-    * layout only: the streaming layout's batch=<id> scoping IS the
-    * checkpoint's replay idempotence (a replayed batch overwrites its
-    * own directory), so merging those directories would turn an
-    * at-least-once replay into duplicated rows — streaming stores
-    * compact via the close path instead, which Gorilla-packs whole
-    * chunks out of the live tier. The staged-swap protocol mirrors
-    * IvfStore.rebuild: reads refuse while `_compact_pending` exists
-    * (a crash mid-swap can leave a chunk directory mid-rename), and
-    * re-running compactLive() first completes the interrupted swap
-    * from the intact staging copy. */
-  def compactLive(): Unit = {
-    assertLayout(batchScoped = false)
-    val staging = s"$path/live_compact"
-    val marker = new org.apache.hadoop.fs.Path(path, "_compact_pending")
-    val fs = hfs
-    if (fs.exists(marker)) { completeCompactSwap(fs, staging, marker); return }
-    if (liveChunkIdsListed().isEmpty) return
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    clustered(live())
-      .write.mode("overwrite").partitionBy("chunk").parquet(staging)
-    fs.create(marker, true).close()
-    completeCompactSwap(fs, staging, marker)
-  }
-
-  /** Idempotent-resumable second half of [[compactLive]]: swap every
-    * staged chunk directory into the live tier, then clear staging and
-    * the marker. Safe to re-run from any crash point — a staged dir
-    * still present means its swap has not completed (the compacted
-    * copy and the original hold identical rows, so completing is
-    * always correct). */
-  private def completeCompactSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                  staging: String,
-                                  marker: org.apache.hadoop.fs.Path): Unit = {
-    listNames(staging).filter(_.startsWith("chunk=")).foreach { d =>
-      val liveDir = new org.apache.hadoop.fs.Path(s"$livePath/$d")
-      fs.delete(liveDir, true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(s"$staging/$d"), liveDir))
-        throw new java.io.IOException(s"compact swap failed for $d")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    fs.delete(marker, false)
-  }
-
-  /** Compact the STREAMING live tier: merge every `batch=<id>`
-    * directory with id strictly below `upToBatchId` — including the
+  /** Compact the live tier: merge every `batch=<id>` directory with id
+    * strictly below `upToBatchId` — including direct appends and the
     * output of earlier compactions, which carry NEGATIVE ids — into
     * one consolidated `batch=-<upToBatchId>` directory (≤ salts files
     * per chunk, the same `clustered` write discipline as an append).
@@ -574,20 +470,18 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * A replayed batch that re-triggers the same horizon finds a single
     * mergeable directory and no-ops.
     *
-    * Crash protocol (the IvfStore/compactLive staged-swap family): the
+    * Crash protocol (the IvfStore.rebuild staged-swap family): the
     * consolidated copy is fully written to staging first; the
     * `_batch_compact_pending` marker records the source directories +
     * target name; reads refuse while the marker exists; re-running
     * completes the interrupted swap (delete remaining sources, rename
     * staging to target) from the intact staging copy. */
   def compactBatches(upToBatchId: Long): Unit = {
-    assertLayout(batchScoped = true)
     val fs = hfs
     val staging = s"$path/batch_compact"
     val marker = new org.apache.hadoop.fs.Path(path, "_batch_compact_pending")
     if (fs.exists(marker)) { completeBatchCompactSwap(fs, staging, marker); return }
-    val sources = listNames(livePath).filter(_.startsWith("batch="))
-      .filter(_.stripPrefix("batch=").toLong < upToBatchId).sorted
+    val sources = batchDirs().filter(_.stripPrefix("batch=").toLong < upToBatchId).sorted
     if (sources.size <= 1) return // nothing to merge (or already compacted)
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     val rows = spark.read.option("basePath", livePath)
@@ -672,20 +566,11 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   private def hasClosed: Boolean = exists(closedPath)
 
   /** Closed-chunk id set, from the partition DIRECTORY NAMES (a
-    * single metadata listing — never a parquet scan) and cached on
-    * the instance: the ingest guard consults it on every append, and
-    * a streaming sink appends continuously. Invalidated by
-    * closeChunks; one writer per store path (the streaming sink's
-    * contract already), so external closers aren't a concern. */
-  @volatile private var closedIdsCache: Option[Set[Long]] = None
-
-  private def closedChunkIds(): Set[Long] = closedIdsCache.getOrElse {
-    val ids = listNames(closedPath)
-      .filter(_.startsWith("chunk="))
+    * single metadata listing — never a parquet scan), listed on each
+    * call so a chunk another handle closed is seen at once. */
+  private def closedChunkIds(): Set[Long] =
+    listNames(closedPath).filter(_.startsWith("chunk="))
       .map(_.stripPrefix("chunk=").toLong).toSet
-    closedIdsCache = Some(ids)
-    ids
-  }
 
   /** Matcher + range query over live chunks only. Output:
     * (series_id, ts_us, value, event_type, user_id), the labels read
@@ -751,7 +636,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     Gorilla.packWithChunk(rows)
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("chunk").parquet(closedPath)
-    closedIdsCache = None // the guard must see the newly closed ids
     // compaction COMPLETES by dropping the raw rows: without this the
     // store keeps raw + compressed copies of all history forever. A
     // crash before the delete only wastes space (closed ids exclude
@@ -941,7 +825,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * a clone of a half-swapped store would freeze the corruption. */
   def cloneTo(destPath: String): ChunkStore = {
     assertNoPendingClosedSwap()
-    require(!exists(s"$path/_compact_pending") && !exists(s"$path/_batch_compact_pending"),
+    require(!exists(s"$path/_batch_compact_pending"),
       s"ChunkStore at $path: a compaction was interrupted mid-swap — heal before cloning")
     val fs = hfs
     val dest = new org.apache.hadoop.fs.Path(destPath)
@@ -1044,7 +928,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * [[completeDeleteSwap]] shape at whole-tier grain): staged tiers
     * and retention markers swap in with checked renames, the marker's
     * remove list drops what the snapshot does not carry, then staging
-    * and the marker clear and every serving cache resets. */
+    * and the marker clear. */
   private def completeRestoreSwap(fs: org.apache.hadoop.fs.FileSystem,
                                   marker: org.apache.hadoop.fs.Path): Unit = {
     val staging = s"$path/_restore_staging"
@@ -1066,10 +950,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/$e"), true))
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     fs.delete(marker, false)
-    closedIdsCache = None
-    newestTsCache = None
-    retentionCache = None
-    rawRetentionCache = None
   }
 
   private val RestorePendingMarker = "_restore_pending"
@@ -1240,7 +1120,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
           .withColumn("event_id", lit(0L)))
         .write.partitionBy("chunk").parquet(stagedRollup)
     }
-    // COMMIT MARKER then SWAP (the compactLive `_pending` protocol —
+    // COMMIT MARKER then SWAP (the compactBatches `_pending` protocol —
     // review fix: the bare delete-then-rename loop had a per-chunk
     // crash window where the only copy of a partition sat in staging,
     // which the next attempt's stale-staging discard would destroy).
@@ -1264,8 +1144,9 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
 
   private val DeletePendingMarker = "_delete_pending"
 
-  /** Idempotent-resumable second half of [[deleteSeries]] (the
-    * [[compactLive]] completion shape): staged partition dirs swap in
+  /** Idempotent-resumable second half of [[deleteSeries]] and
+    * [[backfill]] (the [[compactBatches]] completion shape, per
+    * partition): staged partition dirs swap in
     * (payloads before catalog — a crash between them leaves the
     * catalog still naming the doomed series so a re-run can
     * re-match; the reverse order would orphan payload rows), the
@@ -1294,8 +1175,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), true))
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     fs.delete(marker, false)
-    closedIdsCache = None
-    newestTsCache = None
   }
 
   /** Prometheus-style BACKFILL / out-of-order ingest (the capability
@@ -1332,15 +1211,9 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       val pending = new org.apache.hadoop.fs.Path(path, DeletePendingMarker)
       if (fs0.exists(pending)) completeDeleteSwap(fs0, pending)
     }
-    assertLayout(batchScoped = false)
+    append(samples) // drops exactly the rows routed to closed chunks
     val routed = routedAboveHorizon(samples)
     val closedIds = closedChunkIds()
-    val fresh =
-      if (closedIds.isEmpty) routed
-      else routed.filter(!col("chunk").isInCollection(closedIds))
-    clustered(fresh)
-      .write.mode("append").partitionBy("chunk").parquet(livePath)
-    newestTsCache = None
     if (closedIds.isEmpty) return
     // persisted for the verb's duration: the affected-chunk collect,
     // the touched semi/anti joins and both unions below each re-ran

@@ -7,6 +7,12 @@ import java.nio.file.Files
 class ChunkStoreSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The `chunk=<c>` directories under every `live/batch=<id>` of the store at `dir`. */
+  private def liveChunkDirs(dir: String, chunk: Long): Seq[java.io.File] =
+    Option(new java.io.File(s"$dir/live").listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("batch="))
+      .map(new java.io.File(_, s"chunk=$chunk")).filter(_.exists())
+
   test("append → query prunes partitions and trims range; close → gorilla readback") {
     val dir = Files.createTempDirectory("graft_chunks").toString
     val store = new ChunkStore(spark, dir)
@@ -42,7 +48,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
     // the raw copy is GONE (no raw+compressed double storage), and
     // the federated query still serves every sample exactly once
-    assert(!new java.io.File(s"$dir/live/chunk=$someChunk").exists())
+    assert(liveChunkDirs(dir, someChunk).isEmpty)
     assert(store.live().filter($"chunk" === someChunk).count() == 0)
   }
 
@@ -148,8 +154,7 @@ class ChunkStoreSpec extends SparkSpec {
       ($"id" * 1.0).as("value"),
       $"id".as("event_id"))
     store.append(s)
-    val chunkDir = new java.io.File(s"$dir/live/chunk=${base / 3600000000L}")
-    assert(chunkDir.exists(), s"missing ${chunkDir}")
+    val Seq(chunkDir) = liveChunkDirs(dir, base / 3600000000L)
     val files = chunkDir.listFiles().count(_.getName.endsWith(".parquet"))
     // parallel (salted) write, still bounded small-files discipline
     assert(files > 1, s"one-task write: $files file(s)")
@@ -179,20 +184,24 @@ class ChunkStoreSpec extends SparkSpec {
     assert(got == Seq(1.0, 2.0, 4.0), s"got $got")
   }
 
-  test("mixing direct and batch-scoped appends on one store is refused at write time") {
+  test("direct, streaming and replay appends share one store and one compaction") {
     val dir = Files.createTempDirectory("graft_chunks_mix").toString
     val store = new ChunkStore(spark, dir)
-    val s = Seq(("sA", "click", 1L, 1704067200000001L, 1.0, 1L))
-      .toDF("series_id", "event_type", "user_id", "ts_us", "value", "event_id")
-    store.append(s)
-    // the two layouts put chunk= at different directory depths —
-    // partition discovery cannot read the union, so refuse up front
-    val e = intercept[IllegalStateException] { store.appendBatch(s, 0L) }
-    assert(e.getMessage.contains("one ingest mode"))
-    val dir2 = Files.createTempDirectory("graft_chunks_mix2").toString
-    val store2 = new ChunkStore(spark, dir2)
-    store2.appendBatch(s, 0L)
-    intercept[IllegalStateException] { store2.append(s) }
+    def rows(ids: Range) =
+      ids.map(i => (s"s${i % 4}", "click", (i % 4).toLong, 1704067200000000L + i * 60000000L,
+        i.toDouble, i.toLong))
+        .toDF("series_id", "event_type", "user_id", "ts_us", "value", "event_id")
+    def children() = new java.io.File(s"$dir/live").list().toSeq.sorted
+    store.append(rows(0 until 10))
+    store.appendBatch(rows(10 until 20), 0L)
+    store.appendBatch(rows(10 until 20), 0L) // a replay overwrites its own directory
+    store.append(rows(20 until 30))
+    // direct appends take ids below every listed one, never a streaming id
+    assert(children() == Seq("batch=-1", "batch=-2", "batch=0"), children())
+    store.compactBatches(1L)
+    assert(children() == Seq("batch=-1"), children())
+    assert(store.live().select("value").as[Double].collect().sorted.toSeq ==
+      (0 until 30).map(_.toDouble))
   }
 
   test("federated queryAll == live-only answer after a chunk is closed") {
@@ -221,42 +230,6 @@ class ChunkStoreSpec extends SparkSpec {
     // matcher filtering happens on the closed catalog: a non-matching
     // label returns nothing from closed chunks
     assert(store.queryClosed(Seq(MatchEq("event_type", "nope")), t1, t2).count() == 0)
-  }
-
-  test("compactLive bounds files per chunk, results unchanged; interrupted swap heals") {
-    val dir = Files.createTempDirectory("graft_chunks_cpt").toString
-    val store = new ChunkStore(spark, dir, filesPerChunkPerAppend = 2)
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val t1 = 1704067200000000L
-    val samples = Series.samples(events)
-      .filter($"ts_us" >= t1 && $"ts_us" < t1 + 6L * 3600 * 1000000)
-    // five appends into the same hour chunks: files accumulate per append
-    (0 until 5).foreach(i => store.append(samples.filter($"user_id" % 5 === i)))
-    def filesPerChunk(): Map[String, Int] =
-      new java.io.File(s"$dir/live").listFiles().filter(_.getName.startsWith("chunk="))
-        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-        .toMap
-    val before = filesPerChunk()
-    assert(before.values.max > 2, s"expected accumulation, got $before")
-    val rowsBefore = store.live().orderBy("series_id", "ts_us")
-      .select("series_id", "ts_us", "value")
-      .as[(String, Long, Double)].collect().toSeq
-    store.compactLive()
-    // one append's worth of files per chunk, identical rows
-    val after = filesPerChunk()
-    assert(after.keySet == before.keySet && after.values.max <= 2,
-      s"$before -> $after")
-    val rowsAfter = store.live().orderBy("series_id", "ts_us")
-      .select("series_id", "ts_us", "value")
-      .as[(String, Long, Double)].collect().toSeq
-    assert(rowsAfter == rowsBefore)
-    // interrupted-swap drill: with the marker on disk every raw read
-    // refuses; re-running compactLive completes the swap and heals
-    new java.io.File(dir, "_compact_pending").createNewFile()
-    val err = intercept[IllegalArgumentException] { store.live().count() }
-    assert(err.getMessage.contains("compact"), err.getMessage)
-    store.compactLive()
-    assert(store.live().count() == rowsBefore.size)
   }
 
   test("deleteSeries: range-scoped closed-tier deletion rewrites payloads/catalog/rollups; empty chunks vanish; live refuses") {
@@ -342,7 +315,7 @@ class ChunkStoreSpec extends SparkSpec {
     reopened.append(Seq((9L, t0n + 2L * h, 1L, "click", 99.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .transform(Series.samples))
-    assert(!new java.io.File(s"$dir/live/chunk=$c0").exists(),
+    assert(liveChunkDirs(dir, c0).isEmpty,
       "a late raw row below the raw horizon must not resurface")
     // snapshot of a tiered store carries the rollup-only chunks and
     // the raw horizon; the opened snapshot refuses raw reads the same
@@ -533,7 +506,7 @@ class ChunkStoreSpec extends SparkSpec {
     // catalog grew the new series in its closed chunk
     assert(store.catalog().filter(col("user_id") === 2L).count() == 1)
     // fresh row sits in LIVE (day5 chunk dir), not a rewritten closed chunk
-    assert(new java.io.File(s"$dir/live/chunk=${(t0 + 121L * hUs) / dayUs}").exists())
+    assert(liveChunkDirs(dir, (t0 + 121L * hUs) / dayUs).nonEmpty)
     // rollups of the affected chunks rebuilt: full-range sum includes late rows once
     val roll = store.queryRollup(Nil, t0, t0 + 3 * dayUs - 1)
     assert(roll.agg(sum(col("sum_value"))).collect()(0).getDouble(0) == 198.0)
@@ -778,5 +751,46 @@ class ChunkStoreSpec extends SparkSpec {
       .select("event_type", "user_id", "value").as[(String, Long, Double)].collect().toSet
     assert(got == events.select("event_type", "user_id", "value")
       .as[(String, Long, Double)].collect().toSet, got)
+  }
+
+  test("a second handle's close and retire drop this handle's late appends") {
+    val dir = Files.createTempDirectory("graft_two_writers").toString
+    val a = new ChunkStore(spark, dir, chunkMs = 86400000L)
+    val b = new ChunkStore(spark, dir, chunkMs = 86400000L)
+    a.append(Series.samples(labeledEvents))
+    b.closeChunk(day0 / dayUs + 2)
+    b.retire(day0 + dayUs)
+    val t0n = day0 * 1000L
+    val h = 3600000000000L
+    a.append(Series.samples(Seq(
+      (30L, t0n + 51L * h, 1L, "click", 99.0), // into the chunk b closed
+      (31L, t0n + 5L * h, 1L, "click", 98.0))  // below b's retention horizon
+      .toDF("event_id", "ts", "user_id", "event_type", "value")))
+    val got = a.queryAll(Nil, day0, day0 + 10 * dayUs)
+    // day 0 (5.0, 10.0) is retired; neither late row lands
+    assert(got.select("value").as[Double].collect().sorted.toSeq ==
+      Seq(6.0, 7.0, 20.0, 30.0, 100.0, 110.0))
+    assertSameRows(got, new ChunkStore(spark, dir, chunkMs = 86400000L)
+      .queryAll(Nil, day0, day0 + 10 * dayUs))
+  }
+
+  test("backfill merges late rows into a store written by streaming batches") {
+    val dir = Files.createTempDirectory("graft_stream_backfill").toString
+    val store = new ChunkStore(spark, dir, chunkMs = 86400000L)
+    val written = Series.samples(labeledEvents)
+    store.appendBatch(written.filter($"event_id" % 2 === 0), 0L)
+    store.appendBatch(written.filter($"event_id" % 2 === 1), 1L)
+    store.closeChunksBelow(day0 + 3 * dayUs) // days 0-2 closed, day 4 live
+    val t0n = day0 * 1000L
+    val h = 3600000000000L
+    val late = Seq(
+      (20L, t0n + 30L * h, 1L, "click", 21.0), // existing series, closed day 1
+      (21L, t0n + 2L * h, 4L, "view", 8.0),    // new series, closed day 0
+      (22L, t0n + 99L * h, 2L, "view", 9.0))   // live day 4
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    store.backfill(Series.samples(late))
+    assertSameRows(store.queryAll(Nil, day0, day0 + 10 * dayUs),
+      Series.samples(labeledEvents.unionByName(late))
+        .select("series_id", "ts_us", "value", "event_type", "user_id"))
   }
 }
