@@ -100,14 +100,20 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     // (the same silent-partial-answer class the MinhashStore parameter
     // stamp exists to prevent). Both id sets are directory listings,
     // never a Spark job, so the check is O(chunks) metadata.
-    val missing = closedChunkIds()
+    val rolled = chunkIds(rollupPath)
+    val missing = chunkIds(closedPath)
       .filter(c => c >= startUs / chunkUs && c <= endUs / chunkUs)
-      .diff(rollupChunkIdsListed())
+      .diff(rolled)
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"ChunkStore at $path: closed chunks ${missing.toSeq.sorted.mkString(",")} " +
           "in the query range have no rollups (closed before rollupOnClose was " +
           "enabled) — run backfillRollups() once, or query raw via queryAll")
+    if (rolled.isEmpty) // every closed chunk deleted: no rows
+      return rollup1h(emptyOf("chunk" -> LongType, "series_id" -> StringType,
+          "ts_us" -> LongType, "value" -> DoubleType, "event_id" -> LongType))
+        .drop("chunk").withColumn("event_type", lit(null).cast(StringType))
+        .withColumn("user_id", lit(null).cast(LongType))
     inRange(readChunked(rollupPath), startUs, endUs)
       .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
       .filter(col("bucket_ms") * 1000 >= (startUs / 3600000000L) * 3600000000L &&
@@ -164,21 +170,21 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * driven (the closeChunksBelow design decision, applied to
     * serving). */
   def dataHorizonUs: Option[Long] = {
-    val ids = closedChunkIds() ++ liveChunkIdsListed()
+    val ids = chunkIds(closedPath) ++ liveChunkIdsListed()
     if (ids.isEmpty) None else Some((ids.max + 1) * chunkUs)
   }
 
   /** Chunk-partition count across live ∪ closed ∪ rollup-only — a
     * directory listing (the tsdb-status surface). */
   def chunkCount: Long =
-    (closedChunkIds() ++ liveChunkIdsListed() ++ rollupChunkIdsListed()).size.toLong
+    (chunkIds(closedPath) ++ liveChunkIdsListed() ++ chunkIds(rollupPath)).size.toLong
 
   /** Chunk-grain data bounds in MILLISECONDS (the Prometheus
     * tsdb-status shape): start of the oldest chunk, exclusive end of
     * the newest; (0, 0) when empty. Rollup-only chunks (tiered
     * retention) count — their history still serves. */
   def dataBoundsMs: (Long, Long) = {
-    val ids = closedChunkIds() ++ liveChunkIdsListed() ++ rollupChunkIdsListed()
+    val ids = chunkIds(closedPath) ++ liveChunkIdsListed() ++ chunkIds(rollupPath)
     if (ids.isEmpty) (0L, 0L)
     else (ids.min * chunkUs / 1000, (ids.max + 1) * chunkUs / 1000)
   }
@@ -192,7 +198,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * instead; cost is one chunk's scan (decode only if that chunk is
     * closed), acceptable at request rate. */
   def newestSampleTsUs: Option[Long] = {
-    val closedIds = closedChunkIds()
+    val closedIds = chunkIds(closedPath)
     val liveIds = liveChunkIdsListed()
     val ids = closedIds ++ liveIds
     if (ids.isEmpty) None
@@ -213,8 +219,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   /** Live chunk ids from the partition DIRECTORY NAMES — a metadata
     * listing, never a Spark job. */
   private def liveChunkIdsListed(): Set[Long] =
-    batchDirs().flatMap(b => listNames(s"$livePath/$b")).filter(_.startsWith("chunk="))
-      .map(_.stripPrefix("chunk=").toLong).toSet
+    batchDirs().flatMap(b => chunkIds(s"$livePath/$b")).toSet
 
   /** Delete the RAW live directories of the given chunks from every
     * batch directory — the final step of compaction. */
@@ -246,7 +251,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * in live and linger forever (the retired chunk is no longer in the
     * closed-id set, so only the horizon can exclude it). */
   private def guardedRouted(samples: DataFrame): DataFrame = {
-    val closed = closedChunkIds()
+    val closed = chunkIds(closedPath)
     val aboveHorizon = routedAboveHorizon(samples)
     if (closed.isEmpty) aboveHorizon
     else aboveHorizon.filter(!col("chunk").isInCollection(closed))
@@ -288,16 +293,38 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       finally in.close()
     }
 
+  private def writeHorizon(p: String, limit: Long): Unit = {
+    val out = hfs.create(new org.apache.hadoop.fs.Path(p), true)
+    try out.write(limit.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The store's staged swaps ([[graft.StagedSwap]]), one per verb
+    * family, each with its own marker and staging directory: live-tier
+    * batch compaction; delete and backfill; restore. The drain's
+    * compaction runs while an endpoint serves deletes and snapshots, so
+    * the families never share staging. */
+  private def swap(name: String) =
+    new graft.StagedSwap(spark.sparkContext.hadoopConfiguration, path, name)
+  private def batchCompactSwap = swap("batch_compact")
+  private def deleteSwap = swap("delete")
+  private def restoreSwap = swap("restore")
+
+  /** Complete any interrupted closed-tier plan, delete then restore.
+    * Every closed-tier writer runs this before it lists anything: a
+    * verb that worked around another's pending swap would rewrite a
+    * half-swapped tier, and the later heal would rename that swap's
+    * staged copies over the result. */
+  private def healClosedTier(): Unit = { deleteSwap.complete(); restoreSwap.complete() }
+
   /** Closed-tier reads refuse while an interrupted delete/restore
-    * swap is pending — partitions may be mid-move; re-running the
-    * interrupted verb heals (the live-tier `_batch_compact_pending`
-    * rule, applied to the closed tier). */
+    * swap is pending — partitions may be mid-move; any closed-tier
+    * writer heals ([[healClosedTier]]). */
   private def assertNoPendingClosedSwap(): Unit = {
-    require(!exists(s"$path/$DeletePendingMarker"),
+    require(!deleteSwap.pending,
       s"ChunkStore at $path: a series deletion was interrupted mid-swap — " +
         "re-run deleteSeries (any arguments) or touch the store with the same " +
         "verb to heal before reading the closed tier")
-    require(!exists(s"$path/$RestorePendingMarker"),
+    require(!restoreSwap.pending,
       s"ChunkStore at $path: a snapshot restore was interrupted mid-swap — " +
         "re-run restoreSnapshot to heal before reading the closed tier")
   }
@@ -320,18 +347,19 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * the same property that makes pruning free. Closed chunks drop
     * payload + catalog partitions; raw live dirs below the horizon
     * drop too. The horizon persists (`_retention`, monotone max) so
-    * the ingest guard keeps retired history out across restarts.
+    * the ingest guard keeps retired history out across restarts. A
+    * pending closed-tier plan completes first ([[healClosedTier]]).
     * Returns the retired chunk ids. */
   def retire(beforeUs: Long): Set[Long] = {
+    healClosedTier()
     val limit = beforeUs / chunkUs // chunks < limit end at or below beforeUs
     val newLimit = retainedFrom().fold(limit)(math.max(_, limit))
     val fs = hfs
-    val out = fs.create(new org.apache.hadoop.fs.Path(retentionPath), true)
-    try out.write(newLimit.toString.getBytes("UTF-8")) finally out.close()
+    writeHorizon(retentionPath, newLimit)
     // raw-retired chunks are absent from the closed-id set but still
     // hold catalog/rollup partitions — full retirement must drop those
     // too, so the id set unions the rollup-tier listing
-    val closedBelow = (closedChunkIds() ++ rollupChunkIdsListed()).filter(_ < newLimit)
+    val closedBelow = (chunkIds(closedPath) ++ chunkIds(rollupPath)).filter(_ < newLimit)
     closedBelow.foreach { c =>
       Seq(s"$closedPath/chunk=$c", s"$catalogPath/chunk=$c",
         s"$rollupPath/chunk=$c").foreach { p =>
@@ -369,29 +397,30 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * with a rollup of just itself). Refuses when the range covers
     * live chunks (close first) or chunks without rollups (backfill
     * first) — dropping raw without a rollup would be data LOSS, not
-    * tiering. Horizon persists (`_raw_retention`, monotone max).
+    * tiering. Horizon persists (`_raw_retention`, monotone max). A
+    * pending closed-tier plan completes first ([[healClosedTier]]).
     * Returns the raw-retired chunk ids. */
   def retireRaw(beforeUs: Long): Set[Long] = {
+    healClosedTier()
     require(rollupOnClose || exists(rollupPath),
       "retireRaw needs the rollup tier — build the store with rollupOnClose=true " +
         "(or backfillRollups) so the history stays servable")
     val limit = beforeUs / chunkUs
     val newLimit = rawRetainedFrom().fold(limit)(math.max(_, limit))
-    val closedIds = closedChunkIds()
+    val closedIds = chunkIds(closedPath)
     val liveBelow = liveChunkIdsListed().diff(closedIds).filter(_ < newLimit)
     if (liveBelow.nonEmpty)
       throw new IllegalStateException(
         s"retireRaw range covers live (not yet closed) chunks " +
           s"${liveBelow.toSeq.sorted.mkString(",")} — close them first (closeChunksBelow)")
     val closedBelow = closedIds.filter(_ < newLimit)
-    val noRollup = closedBelow.diff(rollupChunkIdsListed())
+    val noRollup = closedBelow.diff(chunkIds(rollupPath))
     if (noRollup.nonEmpty)
       throw new IllegalStateException(
         s"retireRaw would DROP chunks ${noRollup.toSeq.sorted.mkString(",")} outright — " +
           "they have no rollups (closed before rollupOnClose); run backfillRollups() first")
     val fs = hfs
-    val out = fs.create(new org.apache.hadoop.fs.Path(rawRetentionPath), true)
-    try out.write(newLimit.toString.getBytes("UTF-8")) finally out.close()
+    writeHorizon(rawRetentionPath, newLimit)
     closedBelow.foreach { c =>
       val hp = new org.apache.hadoop.fs.Path(s"$closedPath/chunk=$c")
       if (fs.exists(hp)) fs.delete(hp, true)
@@ -449,7 +478,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * write bookkeeping, dropped here (chunk stays a partition column,
     * so pruning holds). */
   def live(): DataFrame = {
-    require(!exists(s"$path/_batch_compact_pending"),
+    require(!batchCompactSwap.pending,
       s"ChunkStore at $path: a batch compaction was interrupted mid-swap — " +
         "batch directories may be missing rows; run compactBatches() again to heal")
     readChunked(livePath).drop("batch")
@@ -470,59 +499,26 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * A replayed batch that re-triggers the same horizon finds a single
     * mergeable directory and no-ops.
     *
-    * Crash protocol (the IvfStore.rebuild staged-swap family): the
-    * consolidated copy is fully written to staging first; the
-    * `_batch_compact_pending` marker records the source directories +
-    * target name; reads refuse while the marker exists; re-running
-    * completes the interrupted swap (delete remaining sources, rename
-    * staging to target) from the intact staging copy. */
+    * The consolidated copy stages whole, then one [[graft.StagedSwap]]
+    * plan removes the sources and renames it into place; reads refuse
+    * while the plan is pending, and the next call completes it and
+    * returns. */
   def compactBatches(upToBatchId: Long): Unit = {
-    val fs = hfs
-    val staging = s"$path/batch_compact"
-    val marker = new org.apache.hadoop.fs.Path(path, "_batch_compact_pending")
-    if (fs.exists(marker)) { completeBatchCompactSwap(fs, staging, marker); return }
+    val swap = batchCompactSwap
+    if (swap.complete()) return
     val sources = batchDirs().filter(_.stripPrefix("batch=").toLong < upToBatchId).sorted
     if (sources.size <= 1) return // nothing to merge (or already compacted)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    val target = s"batch=-$upToBatchId"
+    val staged = s"${swap.begin()}/$target"
     val rows = spark.read.option("basePath", livePath)
       .parquet(sources.map(s => s"$livePath/$s"): _*)
       .withColumn("chunk", col("chunk").cast("long"))
       .drop("batch")
-    clustered(rows).write.mode("overwrite").partitionBy("chunk").parquet(staging)
-    val target = s"batch=-$upToBatchId"
-    val out = fs.create(marker, true)
-    try out.write((target +: sources).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    completeBatchCompactSwap(fs, staging, marker)
-  }
-
-  /** Idempotent-resumable second half of [[compactBatches]]: the
-    * marker's first line is the target directory, the rest are the
-    * merged sources. Delete any source still present, swap staging
-    * into the target if it has not landed yet, clear the marker. Safe
-    * from any crash point — staging and the sources hold identical
-    * rows, so whichever copy survives is complete. */
-  private def completeBatchCompactSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                       staging: String,
-                                       marker: org.apache.hadoop.fs.Path): Unit = {
-    val lines = {
-      val in = fs.open(marker)
-      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-      finally in.close()
-    }
-    val (target, sources) = (lines.head, lines.tail)
-    sources.foreach { s =>
-      val hp = new org.apache.hadoop.fs.Path(s"$livePath/$s")
-      if (fs.exists(hp)) fs.delete(hp, true)
-    }
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    if (fs.exists(stagingPath)) {
-      val targetPath = new org.apache.hadoop.fs.Path(s"$livePath/$target")
-      fs.delete(targetPath, true) // a half-renamed target re-swaps whole
-      if (!fs.rename(stagingPath, targetPath))
-        throw new java.io.IOException(s"batch-compact swap failed for $target")
-    }
-    fs.delete(marker, false)
+    clustered(rows).write.mode("overwrite").partitionBy("chunk").parquet(staged)
+    // a replayed horizon can list its own earlier output as a source;
+    // the swap replaces it
+    swap.commit(sources.filterNot(_ == target).map(b => graft.StagedSwap.Remove(s"live/$b")) :+
+      graft.StagedSwap.Swap(target, s"live/$target"))
   }
 
   /** Store-wide series catalog (series_id, event_type, user_id): live
@@ -546,7 +542,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   private def labelSets(scope: DataFrame => DataFrame): DataFrame = {
     // a fully compacted store has no raw files left to read
     val tiers = (if (liveChunkIdsListed().isEmpty) Nil else Seq(live())) ++
-      (if (exists(catalogPath)) Seq(readChunked(catalogPath)) else Nil)
+      (if (chunkIds(catalogPath).nonEmpty) Seq(readChunked(catalogPath)) else Nil)
     tiers.map(t => scope(t).select("series_id", "event_type", "user_id"))
       .reduceOption(_ unionByName _)
       .fold(emptyOf("series_id" -> StringType, "event_type" -> StringType,
@@ -563,13 +559,15 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   /** Output columns of the sample read verbs. */
   private val SampleCols = Seq("series_id", "ts_us", "value", "event_type", "user_id")
 
-  private def hasClosed: Boolean = exists(closedPath)
-
-  /** Closed-chunk id set, from the partition DIRECTORY NAMES (a
-    * single metadata listing — never a parquet scan), listed on each
-    * call so a chunk another handle closed is seen at once. */
-  private def closedChunkIds(): Set[Long] =
-    listNames(closedPath).filter(_.startsWith("chunk="))
+  /** Chunk ids under a chunk-partitioned directory, from the partition
+    * DIRECTORY NAMES (a single metadata listing — never a parquet
+    * scan), listed on each call so a chunk another handle wrote is seen
+    * at once. The closed-tier reads test these ids, not the tier root:
+    * a delete that empties every chunk leaves the root without a
+    * partition (its schema cannot be inferred), and removing the root
+    * instead would race a close writing into it from the drain. */
+  private def chunkIds(dir: String): Set[Long] =
+    listNames(dir).filter(_.startsWith("chunk="))
       .map(_.stripPrefix("chunk=").toLong).toSet
 
   /** Matcher + range query over live chunks only. Output:
@@ -649,7 +647,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * hour), so the driver-side id list is fine at any data scale. */
   def closeChunksBelow(tsUs: Long): Unit = {
     val limit = tsUs / chunkUs // chunks < limit are entirely below tsUs
-    val already = closedChunkIds()
+    val already = chunkIds(closedPath)
     val liveIds = liveChunkIdsListed()
     // heal: raw dirs of chunks that finished closing but crashed
     // before their cleanup (their rows are query-invisible already)
@@ -657,19 +655,13 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     closeChunks(liveIds.filter(_ < limit).diff(already).toSeq.sorted)
   }
 
-  /** Rollup partition ids from the directory names — a metadata
-    * listing, never a Spark job (same idiom as liveChunkIdsListed). */
-  private def rollupChunkIdsListed(): Set[Long] =
-    listNames(rollupPath).filter(_.startsWith("chunk="))
-      .map(_.stripPrefix("chunk=").toLong).toSet
-
   /** Write the missing rollup partitions for chunks that were closed
     * before rollupOnClose was enabled: decode only those payloads,
     * re-derive the chunk id from the timestamp (routing used the same
     * division), and dynamic-overwrite per chunk partition — idempotent
     * like closeChunks, so a crash mid-backfill just re-runs. */
   def backfillRollups(): Unit = {
-    val missing = closedChunkIds().diff(rollupChunkIdsListed())
+    val missing = chunkIds(closedPath).diff(chunkIds(rollupPath))
     if (missing.isEmpty) return
     val payloads = readChunked(closedPath)
       .filter(col("chunk").isInCollection(missing))
@@ -687,6 +679,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
 
   private def snapshotsRoot = s"$path/snapshots"
   private val SnapTiers = Seq("closed", "closed_catalog", "rollup")
+  private val RetentionFiles = Seq("_retention", "_raw_retention")
 
   /** Parallel tree copy for the snapshot/restore verbs. The closed
     * tier at production scale is the BULK of the store, and a
@@ -800,19 +793,6 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     } finally pool.shutdown()
   }
 
-  /** Point-in-time SNAPSHOT of the closed tier (Prometheus's
-    * `POST /api/v1/admin/tsdb/snapshot`, the backup half of the admin
-    * family deleteSeries opened): the closed-chunk id set is pinned
-    * FIRST, then exactly those partition directories of
-    * closed/catalog/rollup copy into `snapshots/<name>/` (staged under
-    * a dot-temp dir, renamed into place — a crashed snapshot leaves
-    * only an ignorable temp, never a half-visible name). The closed
-    * tier is immutable parquet, so the copy is pure file I/O — no
-    * decode, no Spark job; chunks closed AFTER the pin are simply not
-    * part of this snapshot. A snapshot directory is itself a valid
-    * closed-only store rooted at `snapshots/<name>` ([[openSnapshot]]),
-    * and [[restoreSnapshot]] swaps it back wholesale. Returns the
-    * snapshot name. */
   /** Clone this store's ENTIRE tree to `destPath` and open a store
     * there — the staging/dev-store verb: a full-fidelity copy at
     * metadata cost on the local scheme (hardlinks — every tier's
@@ -825,7 +805,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * a clone of a half-swapped store would freeze the corruption. */
   def cloneTo(destPath: String): ChunkStore = {
     assertNoPendingClosedSwap()
-    require(!exists(s"$path/_batch_compact_pending"),
+    require(!batchCompactSwap.pending,
       s"ChunkStore at $path: a compaction was interrupted mid-swap — heal before cloning")
     val fs = hfs
     val dest = new org.apache.hadoop.fs.Path(destPath)
@@ -839,11 +819,27 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     new ChunkStore(spark, destPath, chunkMs, filesPerChunkPerAppend, rollupOnClose)
   }
 
+  /** Point-in-time SNAPSHOT of the closed tier (Prometheus's
+    * `POST /api/v1/admin/tsdb/snapshot`, the backup half of the admin
+    * family deleteSeries opened): the closed-chunk id set is pinned
+    * FIRST, then exactly those partition directories of
+    * closed/catalog/rollup copy into `snapshots/<name>/` (staged under
+    * a dot-temp dir, renamed into place — a crashed snapshot leaves
+    * only an ignorable temp, never a half-visible name). The closed
+    * tier is immutable parquet, so the copy is pure file I/O — no
+    * decode, no Spark job; chunks closed AFTER the pin are simply not
+    * part of this snapshot. A snapshot directory is itself a valid
+    * closed-only store rooted at `snapshots/<name>` ([[openSnapshot]]),
+    * and [[restoreSnapshot]] swaps it back wholesale. Returns the
+    * snapshot name. Refuses while a closed-tier swap is pending, as
+    * the reads do: the copy would miss every partition that sits only
+    * in staging. */
   def snapshot(name: Option[String] = None): String = {
+    assertNoPendingClosedSwap()
     // union with the rollup listing: a tiered store's raw-retired
     // chunks live only as catalog+rollup partitions, and a backup
     // that silently dropped them would lose the long-retention tier
-    val ids = closedChunkIds() ++ rollupChunkIdsListed()
+    val ids = chunkIds(closedPath) ++ chunkIds(rollupPath)
     require(ids.nonEmpty,
       "nothing closed to snapshot — the snapshot verb covers the closed tier; run closeChunksBelow first")
     val snapName = name.getOrElse {
@@ -863,9 +859,8 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       (for (tier <- SnapTiers; c <- ids.toSeq) yield
         (new org.apache.hadoop.fs.Path(s"$path/$tier/chunk=$c"),
           new org.apache.hadoop.fs.Path(s"$tmp/$tier/chunk=$c"))) ++
-        (for ((rp, nm) <- Seq(retentionPath -> "_retention", rawRetentionPath -> "_raw_retention"))
-          yield (new org.apache.hadoop.fs.Path(rp),
-            new org.apache.hadoop.fs.Path(s"$tmp/$nm"))),
+        RetentionFiles.map(nm => (new org.apache.hadoop.fs.Path(s"$path/$nm"),
+          new org.apache.hadoop.fs.Path(s"$tmp/$nm"))),
       conf)
     val manifest =
       s"""{"name":"$snapName","chunks":[${ids.toSeq.sorted.mkString(",")}],""" +
@@ -893,66 +888,29 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * catalog/rollup partition currently in the store is replaced by
     * the snapshot's set (chunks closed after the snapshot are dropped —
     * that is what restoring a backup means; live raw chunks are left
-    * untouched). Same staged discipline as [[deleteSeries]]: the copy
-    * lands in a staging dir first, then whole tier directories swap. */
+    * untouched), and the retention horizons reset to the snapshot's.
+    * The copy stages whole, then one [[graft.StagedSwap]] plan swaps
+    * whole tiers in and removes what the snapshot does not carry; a
+    * pending closed-tier plan completes first. */
   def restoreSnapshot(name: String): Unit = {
     val snapDir = s"$snapshotsRoot/$name"
     require(exists(snapDir), s"no snapshot named $name under $snapshotsRoot")
+    healClosedTier()
+    val swap = restoreSwap
+    val staging = swap.begin()
     val fs = hfs
-    val conf = spark.sparkContext.hadoopConfiguration
-    // a predecessor that crashed after its commit marker: complete it
-    // first (its staging holds the only copy of some tiers)
-    val pending = new org.apache.hadoop.fs.Path(path, RestorePendingMarker)
-    if (fs.exists(pending)) completeRestoreSwap(fs, pending)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_restore_staging")
-    fs.delete(staging, true)
-    val RetentionFiles = Seq("_retention", "_raw_retention")
+    val entries = SnapTiers ++ RetentionFiles
     copyTreesParallel(fs,
-      (SnapTiers ++ RetentionFiles).map(e =>
-        (new org.apache.hadoop.fs.Path(s"$snapDir/$e"),
-          new org.apache.hadoop.fs.Path(staging, e))),
-      conf)
-    // the marker records what must be REMOVED WITHOUT REPLACEMENT —
-    // tiers and retention markers the snapshot does not carry (review
-    // fix: restore previously left the store's retention horizons
-    // pointing at tier states the restored data no longer has, so the
-    // serving guards refused data the store actually held)
-    val removeOnly = (SnapTiers ++ RetentionFiles)
-      .filterNot(e => fs.exists(new org.apache.hadoop.fs.Path(s"$snapDir/$e")))
-    val mOut = fs.create(pending, true)
-    try mOut.write(removeOnly.mkString("\n").getBytes("UTF-8")) finally mOut.close()
-    completeRestoreSwap(fs, pending)
+      entries.map(e => (new org.apache.hadoop.fs.Path(s"$snapDir/$e"),
+        new org.apache.hadoop.fs.Path(s"$staging/$e"))),
+      spark.sparkContext.hadoopConfiguration)
+    // what the snapshot does not carry goes without replacement: a
+    // retention horizon left behind would point the serving guards at
+    // tier states the restored data no longer has
+    swap.commit(entries.map(e =>
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$staging/$e"))) graft.StagedSwap.Swap(e, e)
+      else graft.StagedSwap.Remove(e)))
   }
-
-  /** Idempotent-resumable second half of [[restoreSnapshot]] (the
-    * [[completeDeleteSwap]] shape at whole-tier grain): staged tiers
-    * and retention markers swap in with checked renames, the marker's
-    * remove list drops what the snapshot does not carry, then staging
-    * and the marker clear. */
-  private def completeRestoreSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                  marker: org.apache.hadoop.fs.Path): Unit = {
-    val staging = s"$path/_restore_staging"
-    val removeOnly = {
-      val in = fs.open(marker)
-      try new String(in.readAllBytes(), "UTF-8").split("\n").filter(_.nonEmpty).toSeq
-      finally in.close()
-    }
-    for (e <- SnapTiers ++ Seq("_retention", "_raw_retention")) {
-      val staged = new org.apache.hadoop.fs.Path(s"$staging/$e")
-      val live = new org.apache.hadoop.fs.Path(s"$path/$e")
-      if (fs.exists(staged)) {
-        fs.delete(live, true)
-        if (!fs.rename(staged, live))
-          throw new java.io.IOException(s"restore swap failed for $e")
-      }
-    }
-    removeOnly.foreach(e =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$e"), true))
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    fs.delete(marker, false)
-  }
-
-  private val RestorePendingMarker = "_restore_pending"
 
   /** Matcher + range query over CLOSED chunks: prune by chunk range,
     * resolve matchers against the per-chunk catalog (label filters run
@@ -990,9 +948,9 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     assertNoPendingClosedSwap()
     assertRawServable(startUs)
     val cols = Seq("series_id", "chunk", "payload", "event_type", "user_id").map(col)
-    val closedIds = closedChunkIds()
+    val closedIds = chunkIds(closedPath)
     val closedPart =
-      if (!hasClosed) None
+      if (closedIds.isEmpty) None
       else Some(matchedPayloads(ms, startUs, endUs).select(cols: _*))
     val livePart =
       if (liveChunkIdsListed().forall(closedIds)) None
@@ -1016,28 +974,19 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * closeChunksBelow — the head-block analog of Prometheus, where
     * live deletions are tombstones that only compaction
     * materializes. Idempotent (re-running the same delete rewrites
-    * the same survivors). Staged: survivors are fully written to a
-    * staging area (breaking lineage from the directories being
-    * replaced) before any partition swap, so a crash leaves each
-    * partition wholly old or wholly new, never half-overwritten; an
-    * interrupted delete re-runs to heal, exactly like Prometheus's
-    * delete_series + clean_tombstones pair. */
+    * the same survivors). The rewrite rides [[restageClosed]], so a
+    * crash leaves each partition wholly old or wholly new and an
+    * interrupted delete heals on the next closed-tier verb, much like
+    * Prometheus's delete_series + clean_tombstones pair. */
   def deleteSeries(ms: Seq[Matcher], startUs: Long, endUs: Long): Unit = {
     require(ms.nonEmpty,
       "delete_series needs at least one matcher — refusing to delete the whole store implicitly")
-    // a predecessor that crashed AFTER its commit marker left a swap
-    // whose only copy of some partitions is the staging area —
-    // complete it FIRST, before any directory listing informs this
-    // run's chunk math (an early empty-affected return must not skip
-    // the heal)
-    locally {
-      val fs0 = hfs
-      val pending = new org.apache.hadoop.fs.Path(path, DeletePendingMarker)
-      if (fs0.exists(pending)) completeDeleteSwap(fs0, pending)
-    }
+    // before any listing informs this run's chunk math (an early
+    // empty-affected return must not skip the heal)
+    healClosedTier()
     val lo = startUs / chunkUs
     val hi = endUs / chunkUs
-    val closedIds = closedChunkIds()
+    val closedIds = chunkIds(closedPath)
     val affected = closedIds.filter(c => c >= lo && c <= hi)
     val liveOnly = liveChunkIdsListed().filter(c => c >= lo && c <= hi).diff(closedIds)
     if (liveOnly.nonEmpty)
@@ -1060,6 +1009,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     if (affected.isEmpty) return
     val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
     val cat = inAffected(readChunked(catalogPath))
+      .select("chunk", "series_id", "event_type", "user_id")
     val doomed = cat.filter(Matcher.all(ms)).select("chunk", "series_id")
     val payloads = inAffected(readChunked(closedPath))
     val untouched = payloads.join(doomed, Seq("chunk", "series_id"), "left_anti")
@@ -1073,108 +1023,62 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val newPayloads = untouched
       .unionByName(Gorilla.packWithChunk(surviving)
         .select("series_id", "chunk", "payload"))
-    // STAGE: every rewritten frame lands in a staging area first, with
-    // all reads of the live directories completing before any of them
-    // is touched. The previous persist-then-dynamic-overwrite shape
-    // read and overwrote the SAME paths with only an in-memory cache
-    // between them — cache eviction (or executor loss) mid-write would
-    // recompute survivors from a half-overwritten source. Staging makes
-    // the overwrite a pure directory swap of already-durable data: a
-    // crash before any swap leaves the store untouched (stale staging
-    // is discarded on the next attempt), a crash mid-swap leaves whole
-    // partitions either old or new — and re-running the same delete
-    // heals either state (old partitions re-delete, new ones have
-    // nothing left to match).
-    val staging = s"$path/_delete_staging"
-    val stagedClosed = s"$staging/closed"
-    val stagedCatalog = s"$staging/closed_catalog"
-    val stagedRollup = s"$staging/rollup"
-    val fs = hfs
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    newPayloads.write.partitionBy("chunk").parquet(stagedClosed)
-    // survivors re-read FROM STAGING — downstream derivations depend
-    // on durable bytes, not on lineage over the directories the swap
-    // is about to replace
-    val stagedPayloads = readChunked(stagedClosed)
     // catalog = surviving series per chunk, labels from the old rows
-    stagedPayloads.select("chunk", "series_id").distinct()
-      .join(cat, Seq("chunk", "series_id"))
-      .select("chunk", "series_id", "event_type", "user_id")
-      .write.partitionBy("chunk").parquet(stagedCatalog)
-    val withRollups = rollupOnClose && exists(rollupPath)
-    if (withRollups) {
-      // affected chunks' rollups rebuild WHOLESALE from the staged
-      // survivors rather than keep-untouched ∪ recompute-matched: the
-      // split depends on re-deriving `doomed` from the catalog, which
-      // a crash between the catalog swap and the rollup swap has
-      // already emptied — a re-run would then carry stale rollup rows
-      // for deleted samples. A full rebuild is a pure function of the
-      // staged payloads, so every crash state heals. Cost: decoding
-      // untouched series' payloads too, but only within the affected
-      // chunk range (deletes are a rare, range-scoped admin verb).
-      // event_id surrogate — sample timestamps are unique per series,
-      // so first/last struct order never consults it.
-      rollup1h(
-        Gorilla.unpack(stagedPayloads)
-          .withColumn("chunk", expr(s"ts_us div $chunkUs"))
-          .withColumn("event_id", lit(0L)))
-        .write.partitionBy("chunk").parquet(stagedRollup)
-    }
-    // COMMIT MARKER then SWAP (the compactBatches `_pending` protocol —
-    // review fix: the bare delete-then-rename loop had a per-chunk
-    // crash window where the only copy of a partition sat in staging,
-    // which the next attempt's stale-staging discard would destroy).
-    // The marker records the (tier, chunk) partitions that must be
-    // REMOVED WITHOUT REPLACEMENT (zero-survivor chunks); everything
-    // else the completion pass derives from the staged directories
-    // themselves, so from this point the swap is redoable from disk
-    // alone: closed-tier reads refuse while the marker exists, and
-    // the next deleteSeries call completes the pending swap first.
-    val removeOnly = for {
-      (name, src) <- Seq("closed" -> stagedClosed, "closed_catalog" -> stagedCatalog) ++
-        (if (withRollups) Seq("rollup" -> stagedRollup) else Nil)
-      c <- affected.toSeq.sorted
-      if !fs.exists(new org.apache.hadoop.fs.Path(s"$src/chunk=$c"))
-    } yield s"$name/chunk=$c"
-    val marker = new org.apache.hadoop.fs.Path(path, DeletePendingMarker)
-    val mOut = fs.create(marker, true)
-    try mOut.write(removeOnly.mkString("\n").getBytes("UTF-8")) finally mOut.close()
-    completeDeleteSwap(fs, marker)
+    restageClosed(affected, newPayloads, cat)
   }
 
-  private val DeletePendingMarker = "_delete_pending"
-
-  /** Idempotent-resumable second half of [[deleteSeries]] and
-    * [[backfill]] (the [[compactBatches]] completion shape, per
-    * partition): staged partition dirs swap in
-    * (payloads before catalog — a crash between them leaves the
-    * catalog still naming the doomed series so a re-run can
-    * re-match; the reverse order would orphan payload rows), the
-    * marker's remove-without-replacement list drops zero-survivor
-    * partitions, then staging and the marker clear. Safe from any
-    * crash point: a staged dir still present means its swap has not
-    * completed; a swapped partition leaves no staged dir and is never
-    * touched again. */
-  private def completeDeleteSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                 marker: org.apache.hadoop.fs.Path): Unit = {
-    val staging = s"$path/_delete_staging"
-    val removeOnly = {
-      val in = fs.open(marker)
-      try new String(in.readAllBytes(), "UTF-8").split("\n").filter(_.nonEmpty).toSeq
-      finally in.close()
+  /** The closed-tier rewrite [[deleteSeries]] and [[backfill]] share:
+    * the affected chunks' new payloads, then their catalog (the staged
+    * series re-joined with `labels`, rows of (chunk, series_id,
+    * event_type, user_id)), then — on a rollup store — their rollups
+    * rebuilt wholesale from the staged payloads, all written to staging
+    * first and committed as one [[graft.StagedSwap]] plan.
+    *
+    * Staging first means every read of the directories being replaced
+    * completes before any of them is touched: overwriting them in place
+    * behind an in-memory cache would recompute from a half-overwritten
+    * source on cache eviction. The catalog and rollups derive from the
+    * staged payloads re-read from disk, not from lineage over the
+    * replaced directories. Rollups rebuild wholesale rather than keep
+    * untouched rows and recompute the rest: that split re-derives the
+    * matched set from the catalog, which a crash between the catalog
+    * and rollup swaps has already rewritten, so a re-run would keep
+    * stale rows; a pure function of the staged payloads heals every
+    * crash state, at the cost of decoding the affected chunks' other
+    * series too. The plan swaps payloads before catalog — a crash
+    * between them leaves the catalog still naming the old series, so a
+    * re-run can re-match, where the reverse order would orphan payload
+    * rows — and removes the partitions of chunks left with no series. */
+  private def restageClosed(affected: Set[Long], newPayloads: DataFrame,
+                            labels: DataFrame): Unit = {
+    val swap = deleteSwap
+    val staging = swap.begin()
+    newPayloads.write.partitionBy("chunk").parquet(s"$staging/closed")
+    val withRollups = rollupOnClose && exists(rollupPath)
+    // a delete that empties every affected chunk stages no partition
+    // and leaves no schema to read back: its plan is removes only
+    if (chunkIds(s"$staging/closed").nonEmpty) {
+      val stagedPayloads = readChunked(s"$staging/closed")
+      stagedPayloads.select("chunk", "series_id").distinct()
+        .join(labels, Seq("chunk", "series_id"))
+        .write.partitionBy("chunk").parquet(s"$staging/closed_catalog")
+      if (withRollups)
+        // event_id surrogate — sample timestamps are unique per series,
+        // so first/last struct order never consults it
+        rollup1h(
+          Gorilla.unpack(stagedPayloads)
+            .withColumn("chunk", expr(s"ts_us div $chunkUs"))
+            .withColumn("event_id", lit(0L)))
+          .write.partitionBy("chunk").parquet(s"$staging/rollup")
     }
-    for ((name, liveRoot) <- Seq("closed" -> closedPath,
-           "closed_catalog" -> catalogPath, "rollup" -> rollupPath);
-         d <- listNames(s"$staging/$name").filter(_.startsWith("chunk="))) {
-      val liveDir = new org.apache.hadoop.fs.Path(s"$liveRoot/$d")
-      fs.delete(liveDir, true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(s"$staging/$name/$d"), liveDir))
-        throw new java.io.IOException(s"delete swap failed for $name/$d")
-    }
-    removeOnly.foreach(rel =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), true))
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    fs.delete(marker, false)
+    val fs = hfs
+    swap.commit(for {
+      tier <- Seq("closed", "closed_catalog") ++ (if (withRollups) Seq("rollup") else Nil)
+      c <- affected.toSeq.sorted
+      d = s"$tier/chunk=$c"
+    } yield
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$staging/$d"))) graft.StagedSwap.Swap(d, d)
+      else graft.StagedSwap.Remove(d))
   }
 
   /** Prometheus-style BACKFILL / out-of-order ingest (the capability
@@ -1186,34 +1090,26 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * already-CLOSED chunks merge into the at-rest tier by rewriting
     * only the receiving (chunk, series) payloads — untouched series'
     * payloads carry over byte-identical, new series join the chunk
-    * catalog, and affected chunks' rollups rebuild wholesale from the
-    * staged survivors (a pure function of staged bytes, so every crash
-    * state heals — the [[deleteSeries]] argument). In the closed-chunk
-    * merge exact duplicate samples collapse, so re-running the same
-    * backfill of late data is a no-op; rows routed to live follow
-    * plain [[append]] semantics (at-least-once, deduplicated only by
-    * the caller), same as any other ingest.
-    * The whole closed-tier rewrite rides the [[deleteSeries]]
-    * staged-swap + commit-marker protocol: a crash before the marker
-    * leaves the store untouched, a crash after it is completed by the
-    * next backfill/delete call (reads refuse while pending). Horizon
-    * guards apply unchanged: history below the retention or
-    * raw-retention horizon drops at ingest (same rationale as
-    * [[append]] — it could only resurface or clobber rollups).
+    * catalog, and affected chunks' rollups rebuild wholesale
+    * ([[restageClosed]], the rewrite [[deleteSeries]] uses). In the
+    * closed-chunk merge exact duplicate samples collapse, so re-running
+    * the same backfill of late data is a no-op; rows routed to live
+    * follow plain [[append]] semantics (at-least-once, deduplicated
+    * only by the caller), same as any other ingest. A pending
+    * closed-tier plan completes first. Horizon guards apply unchanged:
+    * history below the retention or raw-retention horizon drops at
+    * ingest (same rationale as [[append]] — it could only resurface or
+    * clobber rollups).
     * Scale shape: the rewrite decodes only the (chunk, series) pairs
     * that actually receive late rows, the merge/distinct shuffles only
     * the affected chunks' samples, and the staged write is
     * partition-parallel per chunk — cost is proportional to the late
     * data's chunk footprint, never the store. */
   def backfill(samples: DataFrame): Unit = {
-    locally {
-      val fs0 = hfs
-      val pending = new org.apache.hadoop.fs.Path(path, DeletePendingMarker)
-      if (fs0.exists(pending)) completeDeleteSwap(fs0, pending)
-    }
+    healClosedTier()
     append(samples) // drops exactly the rows routed to closed chunks
     val routed = routedAboveHorizon(samples)
-    val closedIds = closedChunkIds()
+    val closedIds = chunkIds(closedPath)
     if (closedIds.isEmpty) return
     // persisted for the verb's duration: the affected-chunk collect,
     // the touched semi/anti joins and both unions below each re-ran
@@ -1221,65 +1117,38 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val late = routed.filter(col("chunk").isInCollection(closedIds))
       .select("series_id", "event_type", "user_id", "chunk", "ts_us", "value")
       .persist()
-    // chunk-grain metadata: the distinct chunk ids receiving late rows
-    val affected = late.select("chunk").distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (affected.isEmpty) return
-    val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
-    val touched = late.select("chunk", "series_id").distinct()
-    val payloads = inAffected(readChunked(closedPath))
-    val untouched = payloads.join(touched, Seq("chunk", "series_id"), "left_anti")
-      .select("series_id", "chunk", "payload")
-    // receiving series: decode, union the late rows, collapse exact
-    // duplicates (idempotence), re-pack (chunk re-derives from ts —
-    // samples never cross their chunk)
-    val merged = Gorilla.unpack(
-        payloads.join(touched, Seq("chunk", "series_id"), "left_semi"))
-      .withColumn("chunk", expr(s"ts_us div $chunkUs"))
-      .select("series_id", "chunk", "ts_us", "value")
-      .unionByName(late.select("series_id", "chunk", "ts_us", "value"))
-      .distinct()
-    val newPayloads = untouched
-      .unionByName(Gorilla.packWithChunk(merged)
-        .select("series_id", "chunk", "payload"))
-    val staging = s"$path/_delete_staging"
-    val stagedClosed = s"$staging/closed"
-    val stagedCatalog = s"$staging/closed_catalog"
-    val stagedRollup = s"$staging/rollup"
-    val fs = hfs
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    newPayloads.write.partitionBy("chunk").parquet(stagedClosed)
-    val stagedPayloads = readChunked(stagedClosed)
-    // catalog = staged series per chunk, labels from the old catalog
-    // rows ∪ the late rows' own labels (a backfilled series may be NEW
-    // to its chunk); label tuples determine series_id, so the
-    // union-distinct is exactly one row per (chunk, series)
-    val labels = inAffected(readChunked(catalogPath))
-      .select("chunk", "series_id", "event_type", "user_id")
-      .unionByName(late.select("chunk", "series_id", "event_type", "user_id"))
-      .distinct()
-    stagedPayloads.select("chunk", "series_id").distinct()
-      .join(labels, Seq("chunk", "series_id"))
-      .write.partitionBy("chunk").parquet(stagedCatalog)
-    val withRollups = rollupOnClose && exists(rollupPath)
-    if (withRollups) {
-      // wholesale rebuild from staged payloads — the deleteSeries
-      // crash-state argument; event_id surrogate as there (sample
-      // timestamps are unique per series)
-      rollup1h(
-        Gorilla.unpack(stagedPayloads)
-          .withColumn("chunk", expr(s"ts_us div $chunkUs"))
-          .withColumn("event_id", lit(0L)))
-        .write.partitionBy("chunk").parquet(stagedRollup)
-    }
-    // commit marker then swap — backfill never empties a partition, so
-    // the remove-without-replacement list is empty; the completion
-    // pass derives everything else from the staged directories
-    val marker = new org.apache.hadoop.fs.Path(path, DeletePendingMarker)
-    val mOut = fs.create(marker, true)
-    try mOut.write(Array.emptyByteArray) finally mOut.close()
-    late.unpersist(false) // every staged write above has materialized
-    completeDeleteSwap(fs, marker)
+    try {
+      // chunk-grain metadata: the distinct chunk ids receiving late rows
+      val affected = late.select("chunk").distinct()
+        .collect().map(_.getLong(0)).toSet
+      if (affected.isEmpty) return
+      val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
+      val touched = late.select("chunk", "series_id").distinct()
+      val payloads = inAffected(readChunked(closedPath))
+      val untouched = payloads.join(touched, Seq("chunk", "series_id"), "left_anti")
+        .select("series_id", "chunk", "payload")
+      // receiving series: decode, union the late rows, collapse exact
+      // duplicates (idempotence), re-pack (chunk re-derives from ts —
+      // samples never cross their chunk)
+      val merged = Gorilla.unpack(
+          payloads.join(touched, Seq("chunk", "series_id"), "left_semi"))
+        .withColumn("chunk", expr(s"ts_us div $chunkUs"))
+        .select("series_id", "chunk", "ts_us", "value")
+        .unionByName(late.select("series_id", "chunk", "ts_us", "value"))
+        .distinct()
+      val newPayloads = untouched
+        .unionByName(Gorilla.packWithChunk(merged)
+          .select("series_id", "chunk", "payload"))
+      // labels from the old catalog rows ∪ the late rows' own (a
+      // backfilled series may be NEW to its chunk); label tuples
+      // determine series_id, so the union-distinct is exactly one row
+      // per (chunk, series)
+      val labels = inAffected(readChunked(catalogPath))
+        .select("chunk", "series_id", "event_type", "user_id")
+        .unionByName(late.select("chunk", "series_id", "event_type", "user_id"))
+        .distinct()
+      restageClosed(affected, newPayloads, labels)
+    } finally late.unpersist(false)
   }
 
   /** Federated query: closed chunks (compressed) ∪ live chunks not
@@ -1289,11 +1158,11 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * from the per-chunk catalog, so no store-wide catalog is read. An
     * empty store answers an empty frame. */
   def queryAll(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
-    assertNoPendingClosedSwap() // before hasClosed — a mid-swap crash can
+    assertNoPendingClosedSwap() // before the listing — a mid-swap crash can
     // leave the whole closed dir in staging, which would misread as live-only
     assertRawServable(startUs)
-    if (!hasClosed) return query(ms, startUs, endUs)
-    val closedIds = closedChunkIds()
+    val closedIds = chunkIds(closedPath)
+    if (closedIds.isEmpty) return query(ms, startUs, endUs)
     // fully compacted stores have no raw files left — reading the
     // empty live root would fail schema inference, and lingering raw
     // dirs of closed chunks are excluded anyway

@@ -91,90 +91,65 @@ final class IvfStore(spark: SparkSession, path: String,
     * heavy drift clumps that trigger a rebuild survive it — bisecting
     * splits the heaviest cells directly, which is the balance the
     * rebuild exists to restore (measured in the __ivfdrift drill);
-    * pass `quantizer` to supply your own. Staged writes + a
-    * directory swap keep the store readable until the new layout is
-    * complete (a crash mid-rebuild leaves either the old index or the
-    * new one, never a mix — the staging dirs are overwritten by the
-    * next attempt). */
+    * pass `quantizer` to supply your own. The new cells and centroids
+    * stage whole and swap in under one [[graft.StagedSwap]] plan: the
+    * two renames cannot be atomic together, and either mixed pair (new
+    * cells + old centroids or the reverse) would silently mis-prune
+    * probes, so reads refuse while the plan is pending and the next
+    * rebuild or compact completes it and returns. */
   def rebuild(quantizer: Option[DataFrame] = None): Unit = {
-    val fs = hadoopFs
-    require(fs.exists(new org.apache.hadoop.fs.Path(centroidPath)),
-      s"IvfStore($path): nothing to rebuild — build the index with write() first")
-    if (fs.exists(pendingMarker)) { completeSwap(fs); return } // heal first
+    val swap = rebuildSwap
+    if (swap.complete()) return // before the index check: a heal may restore the centroids
+    requireIndex("rebuild")
+    val staging = swap.begin()
     val cur = readRaw().drop("cell")
     val cents = quantizer.getOrElse(
       VectorOps.bisectingCentroids(cur, nCells, roundTo = roundTo))
-    cents.write.mode("overwrite").parquet(stagedCents)
+    cents.write.parquet(s"$staging/centroids")
     // assign against the staged AT-REST centroids: the training plan
     // ran once into parquet; re-deriving it here would recompute the
     // whole k-means iteration inside the assignment job
     val centsAtRest = org.apache.spark.sql.functions.broadcast(
-      spark.read.parquet(stagedCents))
+      spark.read.parquet(s"$staging/centroids"))
     cur.join(VectorOps.ivfAssign(cur, centsAtRest, roundTo), "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(stagedCells)
-    // swap under a pending marker: the two renames cannot be atomic
-    // together, and EITHER mixed pair (new cells + old centroids or
-    // the reverse) would silently mis-prune probes. The marker turns
-    // the crash window into a loud refusal on read, and because it is
-    // created only AFTER both staged writes completed, any staged dir
-    // still present at heal time is a complete new generation — so
-    // completing the interrupted renames is always correct.
-    fs.create(pendingMarker, true).close()
-    completeSwap(fs)
+      .write.partitionBy("cell").parquet(s"$staging/cells")
+    swap.commit(Seq(graft.StagedSwap.Swap("cells", "cells"),
+      graft.StagedSwap.Swap("centroids", "centroids")))
   }
 
   /** Rewrite each cell partition down to one file without moving any
     * vector: repeated [[append]] batches leave files-per-batch in
     * every cell directory (the parquet ingest tax); this is the
     * file-count compaction, where [[rebuild]] is the distribution
-    * repair. Same staged-swap protocol (assignments are reused
-    * verbatim, centroids untouched). */
+    * repair. Same swap as [[rebuild]], of the cells alone (assignments
+    * are reused verbatim, centroids untouched). */
   def compact(): Unit = {
-    val fs = hadoopFs
-    require(fs.exists(new org.apache.hadoop.fs.Path(centroidPath)),
-      s"IvfStore($path): nothing to compact — build the index with write() first")
-    if (fs.exists(pendingMarker)) { completeSwap(fs); return } // heal first
+    val swap = rebuildSwap
+    if (swap.complete()) return // before the index check: a heal may restore the centroids
+    requireIndex("compact")
+    val staging = swap.begin()
     readRaw()
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(stagedCells)
-    fs.create(pendingMarker, true).close()
-    completeSwap(fs)
+      .write.partitionBy("cell").parquet(s"$staging/cells")
+    swap.commit(Seq(graft.StagedSwap.Swap("cells", "cells")))
   }
+
+  private def requireIndex(verb: String): Unit =
+    require(hadoopFs.exists(new org.apache.hadoop.fs.Path(centroidPath)),
+      s"IvfStore($path): nothing to $verb — build the index with write() first")
 
   private def hadoopFs: org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def pendingMarker = new org.apache.hadoop.fs.Path(path, "_rebuild_pending")
-  private val stagedCells = s"$path/cells_rebuild"
-  private val stagedCents = s"$path/centroids_rebuild"
-
-  /** Idempotent-resumable swap: every staged dir still present is a
-    * complete new generation (the marker is only created after staging
-    * finished writing), so swap it in; then clear the marker. Safe to
-    * re-run from any crash point, including mid-rename (the staged dir
-    * survives until its rename succeeds). */
-  private def completeSwap(fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    Seq(stagedCells -> dataPath, stagedCents -> centroidPath).foreach {
-      case (staged, live) =>
-        val sp = new org.apache.hadoop.fs.Path(staged)
-        if (fs.exists(sp)) {
-          val lp = new org.apache.hadoop.fs.Path(live)
-          fs.delete(lp, true)
-          if (!fs.rename(sp, lp))
-            throw new java.io.IOException(s"swap failed: $staged -> $live")
-        }
-    }
-    fs.delete(pendingMarker, false)
-  }
+  private def rebuildSwap =
+    new graft.StagedSwap(spark.sparkContext.hadoopConfiguration, path, "rebuild")
 
   def read(): DataFrame = {
     // refuse a half-swapped index (crash between rebuild's two
     // renames): the cells and centroids could be from different
     // generations, which would silently mis-prune every probe
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(path, "_rebuild_pending")),
+    require(!rebuildSwap.pending,
       s"IvfStore($path): a rebuild was interrupted mid-swap — cells and " +
         "centroids may be mixed generations; run rebuild() again to heal")
     readRaw()

@@ -13,6 +13,20 @@ class ChunkStoreSpec extends SparkSpec {
       .filter(_.getName.startsWith("batch="))
       .map(new java.io.File(_, s"chunk=$chunk")).filter(_.exists())
 
+  private def swapAt(dir: String, name: String) =
+    new StagedSwap(spark.sparkContext.hadoopConfiguration, dir, name)
+
+  /** An interrupted delete (or backfill) swap: the closed partition of
+    * chunk `c` moved into the delete staging and its swap committed but
+    * not yet run — the state after a crash mid-rename. */
+  private def interruptDeleteSwap(dir: String, c: Long): Unit = {
+    val swap = swapAt(dir, "delete")
+    val staged = new java.io.File(s"${swap.begin()}/closed/chunk=$c")
+    staged.getParentFile.mkdirs()
+    assert(new java.io.File(s"$dir/closed/chunk=$c").renameTo(staged))
+    swap.mark(Seq(StagedSwap.Swap(s"closed/chunk=$c", s"closed/chunk=$c")))
+  }
+
   test("append → query prunes partitions and trims range; close → gorilla readback") {
     val dir = Files.createTempDirectory("graft_chunks").toString
     val store = new ChunkStore(spark, dir)
@@ -272,6 +286,14 @@ class ChunkStoreSpec extends SparkSpec {
     // idempotent: re-running the same delete changes nothing
     store.deleteSeries(Seq(MatchEq("event_type", "click")), t0 + dayUs, t0 + 2 * dayUs - 1)
     assert(store.queryAll(Nil, t0, t0 + 4 * dayUs).count() == 3)
+    // a delete that empties every chunk it touches (day 0 holds only
+    // click/u1): its partitions go, nothing is staged
+    store.deleteSeries(Seq(MatchEq("event_type", "click")), t0, t0 + dayUs - 1)
+    assert(store.queryAll(Nil, t0, t0 + 4 * dayUs).select("value").as[Double].collect().toSet ==
+      Set(40.0, 100.0))
+    assert(!new java.io.File(s"$dir/closed/chunk=${t0 / dayUs}").exists())
+    assert(store.queryRollup(Seq(MatchEq("event_type", "click")), t0, t0 + 3 * dayUs)
+      .agg(sum(col("sum_value"))).collect()(0).getDouble(0) == 40.0)
     // matcher-less deletion refuses
     intercept[IllegalArgumentException](store.deleteSeries(Nil, t0, t0 + dayUs))
   }
@@ -449,16 +471,133 @@ class ChunkStoreSpec extends SparkSpec {
     // meanwhile (the _delete_pending discipline, restore flavor):
     // simulate the worst state — a tier moved out with only the
     // staging copy on disk
-    new java.io.File(s"$dir/_restore_staging").mkdirs()
+    val restoreSwap = swapAt(dir, "restore")
+    new java.io.File(restoreSwap.begin()).mkdirs()
     assert(new java.io.File(s"$dir/closed")
-      .renameTo(new java.io.File(s"$dir/_restore_staging/closed")))
-    Files.write(new java.io.File(dir, "_restore_pending").toPath, Array.empty[Byte])
+      .renameTo(new java.io.File(s"${restoreSwap.staging}/closed")))
+    restoreSwap.mark(Seq(StagedSwap.Swap("closed", "closed")))
     val g2 = intercept[IllegalArgumentException](
       store.queryAll(Nil, t0, t0 + 4 * dayUs).count())
     assert(g2.getMessage.contains("restore"), g2.getMessage)
     store.restoreSnapshot("pre-delete")
     assert(allRows(store) == before)
     assert(!new java.io.File(dir, "_restore_pending").exists())
+  }
+
+  /** Five samples over three daily chunks, all closed, on a rollup
+    * store, and a read of every sample in them. */
+  private object Days {
+    val t0 = 1704067200000000L
+    val hUs = 3600000000L
+    def build(prefix: String): (String, ChunkStore) = {
+      val h = 3600000000000L // ns
+      val t0n = t0 * 1000L
+      val ev = Seq(
+        (1L, t0n + 1L * h, 1L, "click", 10.0),
+        (2L, t0n + 25L * h, 1L, "click", 20.0),
+        (3L, t0n + 49L * h, 1L, "click", 40.0),
+        (4L, t0n + 26L * h, 1L, "purchase", 100.0),
+        (5L, t0n + 27L * h, 2L, "click", 5.0))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+      val dir = Files.createTempDirectory(prefix).toString
+      val store = new ChunkStore(spark, dir, chunkMs = 86400000L, rollupOnClose = true)
+      store.append(Series.samples(ev))
+      store.closeChunksBelow(t0 + 96L * hUs)
+      (dir, store)
+    }
+    def rows(s: ChunkStore): Set[(Long, Double)] =
+      s.queryAll(Nil, t0, t0 + 4 * dayUs).select("ts_us", "value").as[(Long, Double)].collect().toSet
+    def noSwapLeft(dir: String): Boolean =
+      Seq("_delete_pending", "_restore_pending", "_delete_staging", "_restore_staging")
+        .forall(n => !new java.io.File(dir, n).exists())
+  }
+
+  test("an interrupted delete completes before restoreSnapshot: the store equals the snapshot") {
+    import Days._
+    val (dir, store) = Days.build("graft_heal_delete_restore")
+    val before = rows(store)
+    store.snapshot(Some("s"))
+    // the interrupted delete: its day-1 rewrite (no clicks) is staged
+    // and committed while the pre-delete partition is still in place
+    val c1 = (t0 + dayUs) / dayUs
+    store.deleteSeries(Seq(MatchEq("event_type", "click")), t0 + dayUs, t0 + 2 * dayUs - 1)
+    interruptDeleteSwap(dir, c1)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/snapshots/s/closed/chunk=$c1"), new java.io.File(s"$dir/closed/chunk=$c1"))
+    store.restoreSnapshot("s")
+    assert(rows(store) == before)
+    assert(noSwapLeft(dir))
+    // nothing is left for a later closed-tier verb to rename over the restored tier
+    store.deleteSeries(Seq(MatchEq("event_type", "none")), t0, t0 + 3 * dayUs)
+    assert(rows(store) == before)
+  }
+
+  test("an interrupted restore completes before deleteSeries: the deleted range stays deleted") {
+    import Days._
+    val (dir, store) = Days.build("graft_heal_restore_delete")
+    val before = rows(store)
+    store.snapshot(Some("s"))
+    // diverge from the snapshot, then interrupt a restore of it after
+    // its first swap
+    store.deleteSeries(Seq(MatchEq("event_type", "purchase")), t0, t0 + 3 * dayUs)
+    assert(rows(store).size == 4)
+    val swap = swapAt(dir, "restore")
+    val staging = swap.begin()
+    val tiers = Seq("closed", "closed_catalog", "rollup")
+    tiers.foreach(t => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/snapshots/s/$t"), new java.io.File(s"$staging/$t")))
+    val plan = tiers.map(t => StagedSwap.Swap(t, t))
+    swap.mark(plan)
+    swap.run(plan.head)
+    store.deleteSeries(Seq(MatchEq("event_type", "click")), t0 + dayUs, t0 + 2 * dayUs - 1)
+    assert(noSwapLeft(dir))
+    assert(rows(store) == before -- Set((t0 + 25L * hUs, 20.0), (t0 + 27L * hUs, 5.0)))
+    val roll = store.queryRollup(Seq(MatchEq("event_type", "click")), t0, t0 + 3 * dayUs)
+    assert(roll.agg(sum(col("sum_value"))).collect()(0).getDouble(0) == 50.0)
+  }
+
+  test("snapshot refuses while a closed-tier swap is pending") {
+    import Days._
+    val (dir, store) = Days.build("graft_snapshot_guard")
+    val before = rows(store)
+    interruptDeleteSwap(dir, (t0 + dayUs) / dayUs)
+    val e = intercept[IllegalArgumentException](store.snapshot(Some("mid-delete")))
+    assert(e.getMessage.contains("interrupted"), e.getMessage)
+    assert(store.listSnapshots().isEmpty)
+    store.retire(0L) // any closed-tier writer heals
+    store.snapshot(Some("healed"))
+    assert(rows(store.openSnapshot("healed")) == before)
+
+    val restore = swapAt(dir, "restore")
+    new java.io.File(restore.begin()).mkdirs()
+    assert(new java.io.File(s"$dir/closed").renameTo(new java.io.File(s"${restore.staging}/closed")))
+    restore.mark(Seq(StagedSwap.Swap("closed", "closed")))
+    val r = intercept[IllegalArgumentException](store.snapshot(Some("mid-restore")))
+    assert(r.getMessage.contains("restore"), r.getMessage)
+    store.restoreSnapshot("healed")
+    assert(rows(store) == before)
+    assert(noSwapLeft(dir))
+  }
+
+  test("deleting every series of every closed chunk leaves a store that reads empty") {
+    import Days._
+    val (dir, store) = Days.build("graft_delete_all")
+    store.deleteSeries(Seq(MatchRe("event_type", ".*")), t0, t0 + 4 * dayUs - 1)
+    assert(noSwapLeft(dir))
+    assert(store.queryAll(Nil, t0, t0 + 4 * dayUs).count() == 0)
+    assert(store.queryEncoded(Nil, t0, t0 + 4 * dayUs).count() == 0)
+    assert(store.catalog().count() == 0)
+    val roll = store.queryRollup(Nil, t0, t0 + 4 * dayUs)
+    assert(roll.count() == 0)
+    assert(roll.columns.takeRight(2).toSeq == Seq("event_type", "user_id"))
+    // the next close writes into the emptied tier and serves as usual
+    store.append(Series.samples(Seq((9L, (t0 + 98L * hUs) * 1000L, 1L, "click", 3.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")))
+    store.closeChunksBelow(t0 + 8 * dayUs)
+    assert(rows(store) == Set.empty)
+    assert(store.queryAll(Nil, t0, t0 + 8 * dayUs).select("value").as[Double].collect().toSeq == Seq(3.0))
+    assert(store.queryRollup(Nil, t0, t0 + 8 * dayUs).count() == 1)
+    assert(store.catalog().count() == 1)
   }
 
   test("backfill: late rows merge into closed chunks (payloads, catalog growth, rollups); fresh rows go live; dup collapse; untouched payloads byte-identical; heal") {
@@ -519,11 +658,7 @@ class ChunkStoreSpec extends SparkSpec {
 
     // interrupted-swap heal: marker present → reads refuse; the next
     // backfill completes the pending swap before its own work
-    val c1 = (t0 + dayUs) / dayUs
-    new java.io.File(s"$dir/_delete_staging/closed").mkdirs()
-    assert(new java.io.File(s"$dir/closed/chunk=$c1")
-      .renameTo(new java.io.File(s"$dir/_delete_staging/closed/chunk=$c1")))
-    Files.write(new java.io.File(dir, "_delete_pending").toPath, Array.empty[Byte])
+    interruptDeleteSwap(dir, (t0 + dayUs) / dayUs)
     val gate = intercept[IllegalArgumentException](
       store.queryAll(Nil, t0, t0 + 4 * dayUs).count())
     assert(gate.getMessage.contains("interrupted"), gate.getMessage)
@@ -583,14 +718,9 @@ class ChunkStoreSpec extends SparkSpec {
     //     BEFORE its own stale-staging discard
     val (dirM, storeM) = freshStore()
     doDelete(storeM)
-    val c1m = (t0 + dayUs) / dayUs
     // simulate a crash mid-swap: the day-1 closed partition moved to
     // staging, marker present with nothing to remove-without-replace
-    val stagedDir = new java.io.File(s"$dirM/_delete_staging/closed")
-    stagedDir.mkdirs()
-    assert(new java.io.File(s"$dirM/closed/chunk=$c1m")
-      .renameTo(new java.io.File(s"$dirM/_delete_staging/closed/chunk=$c1m")))
-    Files.write(new java.io.File(dirM, "_delete_pending").toPath, Array.empty[Byte])
+    interruptDeleteSwap(dirM, (t0 + dayUs) / dayUs)
     val gate = intercept[IllegalArgumentException](
       storeM.queryAll(Nil, t0, t0 + 4 * dayUs).count())
     assert(gate.getMessage.contains("interrupted"), gate.getMessage)

@@ -173,9 +173,13 @@ class IvfStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_ivf_crash").toString
     val store = new IvfStore(spark, dir)
     store.write(e)
-    // simulate a crash between rebuild's two swaps: the pending marker
-    // is on disk, generations may be mixed — every read must refuse
-    new java.io.File(dir, "_rebuild_pending").createNewFile()
+    // simulate a crash between rebuild's two swaps: the cells have
+    // landed, the centroids are still staged, the plan is pending —
+    // generations may be mixed, so every read must refuse
+    val swap = new StagedSwap(spark.sparkContext.hadoopConfiguration, dir, "rebuild")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(dir, "centroids"), new java.io.File(s"${swap.begin()}/centroids"))
+    swap.mark(Seq(StagedSwap.Swap("cells", "cells"), StagedSwap.Swap("centroids", "centroids")))
     val err = intercept[IllegalArgumentException] {
       store.probeTopK(e.filter($"vec_id" < 2), 5, 4).collect()
     }

@@ -74,15 +74,15 @@ class StreamCompactionSpec extends SparkSpec {
     store.compactBatches(3L)
     assert(batchDirs(dir) == Seq("batch=-3", "batch=3"))
 
-    // fabricate the worst crash window by hand: the consolidated copy
-    // sits in staging, the marker names sources + target, and the
-    // sources are already (partially) gone — exactly the state between
-    // marker write and swap completion
+    // fabricate the worst crash window: the consolidated copy sits in
+    // staging, the committed plan removes the sources and swaps in the
+    // target, and the sources are already (partially) gone — exactly
+    // the state between marker write and swap completion
+    val swap = new StagedSwap(spark.sparkContext.hadoopConfiguration, dir, "batch_compact")
+    new java.io.File(swap.begin()).mkdirs()
     assert(new java.io.File(s"$dir/live/batch=-3")
-      .renameTo(new java.io.File(s"$dir/batch_compact")))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_batch_compact_pending"),
-      "batch=-4\nbatch=-3")
+      .renameTo(new java.io.File(s"${swap.staging}/batch=-4")))
+    swap.mark(Seq(StagedSwap.Remove("live/batch=-3"), StagedSwap.Swap("batch=-4", "live/batch=-4")))
     val e = intercept[IllegalArgumentException](store.live().count())
     assert(e.getMessage.contains("interrupted mid-swap"))
 
