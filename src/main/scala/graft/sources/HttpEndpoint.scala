@@ -29,9 +29,9 @@ import graft.tsdb.ChunkStore
   * boundary (a malformed payload answers 400 before anything durable
   * happens), then its raw bytes are renamed atomically into the spool
   * `<store.path>/_spool` — O(payload) per request, no Spark work, no
-  * lock. [[start]] launches [[drain]]
-  * ([[graft.streaming.StreamIngest.startSpoolRemoteWriteSink]],
-  * checkpoint `<store.path>/_spool_checkpoint`): ONE batch-scoped chunk
+  * lock. [[start]] launches [[drain]], a `binaryFile` stream over the
+  * spool into [[graft.streaming.StreamIngest.startStoreSink]]
+  * (checkpoint `<store.path>/_spool_checkpoint`): ONE batch-scoped chunk
   * append per micro-batch, whatever the request count. A 200 means the
   * batch is accepted and durable in the spool; it becomes visible to
   * reads after the drain's next micro-batch (a caller that needs
@@ -118,8 +118,27 @@ final class HttpEndpoint(
   /** Start the drain, then bind and serve; returns the bound port
     * (resolves port=0). */
   def start(): Int = {
-    drainQuery = graft.streaming.StreamIngest.startSpoolRemoteWriteSink(
-      spark, spoolDir, store, s"${store.path}/_spool_checkpoint")
+    // the source lists the directory immediately; make it exist before
+    // the first request ever spools a file
+    spoolFs.mkdirs(new Path(spoolDir))
+    // Exactly-once: the file source records processed files in the
+    // checkpoint and the batch append is replay-idempotent. `cleanSource
+    // = delete` removes committed spool files, so the directory stays
+    // bounded by (in-flight batches × request rate), not uptime; the
+    // per-trigger file cap keeps one catch-up batch after downtime from
+    // monopolizing the cluster
+    val spooled = spark.readStream
+      .format("binaryFile")
+      // the streaming source demands an explicit schema; binaryFile's
+      // is fixed by the format — restate it verbatim
+      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+      .option("maxFilesPerTrigger", 4096)
+      .option("cleanSource", "delete")
+      .option("pathGlobFilter", "*.bin") // never a half-renamed temp
+      .load(spoolDir)
+    drainQuery = graft.streaming.StreamIngest.startStoreSink(
+      spooled, store, s"${store.path}/_spool_checkpoint",
+      RemoteWrite.toEventSamples(_, "content"), compactEveryBatches = 64)
     server.start()
     boundPort
   }
@@ -439,9 +458,10 @@ final class HttpEndpoint(
   // ── Prometheus rules/alerts API (the Grafana/alertmanager READ
   // side of alerting — the inverse of the role server.rs plays for
   // samples) ──
-  // Rules REGISTER on the endpoint (the same rule spec startRuleSink
-  // takes); GET /api/v1/rules lists them with their current state and
-  // active alerts, GET /api/v1/alerts flattens the active alerts.
+  // Rules REGISTER on the endpoint (the same rule spec
+  // StreamIngest.ruleRefresh takes); GET /api/v1/rules lists them with
+  // their current state and active alerts, GET /api/v1/alerts flattens
+  // the active alerts.
   // Evaluation is ON READ against the store — one bounded distributed
   // grid evaluation per registered rule per request (alert-grain
   // output only materializes on the driver). The evaluation instant

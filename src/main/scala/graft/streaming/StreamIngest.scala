@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+
+import graft.tsdb.{ChunkStore, Series}
 
 /** Streaming ingest — the reference's WAL + remote-write path
   * (src/wal/, src/server.rs:170-179) re-expressed as Structured
@@ -39,16 +41,6 @@ object StreamIngest {
   def withWatermark(events: DataFrame, delay: String = "10 minutes"): DataFrame =
     events.withWatermark("ts", delay)
 
-  /** Streaming write of the windowed aggregate — update mode, one
-    * in-flight batch per trigger. Checkpointed: exactly-once per the
-    * Structured Streaming model (SIGMOD'18 paper §5). */
-  def startConsoleSink(agg: DataFrame, checkpoint: String) =
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .format("console")
-      .start()
-
   /** Windowed aggregates AT REST: append-mode parquet sink. Append
     * mode emits a window only once the watermark passes its end — the
     * row is FINAL, so the parquet files are immutable facts (no
@@ -67,84 +59,88 @@ object StreamIngest {
       .option("path", outDir)
       .start()
 
-  /** Streaming ingest into a [[graft.tsdb.ChunkStore]]: each
-    * micro-batch is normalized to samples and appended to its hour
-    * partitions — the Spark-native equivalent of the reference's
-    * remote-write → WAL → current-chunk path (src/server.rs:170-179,
-    * src/db.rs:178-199). The checkpoint plays the WAL's crash-recovery
-    * role: appendBatch writes each micro-batch into a batch-scoped
-    * directory with overwrite, so an at-least-once replay after a
-    * crash rewrites the same directory instead of duplicating rows —
-    * restart-from-checkpoint converges to the one-shot batch result
-    * (asserted by the recovery drill in StreamRecoverySpec). */
-  def startChunkSink(events: DataFrame, store: graft.tsdb.ChunkStore, checkpoint: String) =
-    events.writeStream
+  /** The one streaming sink into a [[graft.tsdb.ChunkStore]]: the
+    * reference's ingest loop (remote-write → WAL → current chunk,
+    * src/server.rs:170-179, src/db.rs:178-199, and the background swap
+    * that closes it, src/db.rs:100-110,265-303) as one `foreachBatch`.
+    * Each micro-batch runs, in order:
+    *  1. `toSamples(batch)`: the source rows as store samples
+    *     ([[graft.tsdb.Series.samples]] for event rows,
+    *     [[graft.sources.RemoteWrite.toEventSamples]] for payloads,
+    *     [[scrapeSamples]] for a pull loop);
+    *  2. [[graft.tsdb.ChunkStore.appendBatch]] under the batch id. It
+    *     overwrites a batch-scoped directory, so an at-least-once replay
+    *     after a crash rewrites the same directory instead of
+    *     duplicating rows: the checkpoint plays the WAL, and
+    *     restart-from-checkpoint converges to the one-shot batch result
+    *     (StreamRecoverySpec);
+    *  3. [[graft.tsdb.ChunkStore.compactBatches]] every
+    *     `compactEveryBatches` batches (0 = never), so a seconds-trigger
+    *     sink keeps (cadence × salts) live files per chunk instead of
+    *     one batch directory per trigger for as long as it runs;
+    *  4. with `closeLagUs`, every live chunk entirely below the batch's
+    *     max event time minus the lag is Gorilla-closed; with
+    *     `retentionUs > 0`, chunks ending below max − retention retire.
+    *     Retire is called only when that horizon crosses a chunk
+    *     boundary at the store's own grain: it can only free whole
+    *     chunks, and each call rewrites `_retention` and re-lists the
+    *     store;
+    *  5. `onProgress(minTs, maxTs)` over the batch's event-time span
+    *     (e.g. [[ruleRefresh]]).
+    *
+    * Maintenance follows DATA progress, not a timer thread: it is
+    * deterministic, and a replayed batch re-issues the same or an older
+    * horizon, which close and retire treat as a no-op. Only when one of
+    * steps 4-5 is configured is the batch persisted for its [min, max]
+    * probe, and it is released on every exit path; otherwise the sink
+    * runs one append job per micro-batch. Misconfiguration is refused
+    * here, at setup: inside `foreachBatch` it would start a
+    * healthy-looking query that dies on its first non-empty batch.
+    * `intervalMs` is the processing-time trigger (0 = start the next
+    * batch as soon as the last ends). One streaming query (one
+    * checkpoint) per store path: a fresh checkpoint restarts batch ids
+    * at 0 and would overwrite history. */
+  def startStoreSink(source: DataFrame, store: ChunkStore, checkpoint: String,
+                     toSamples: DataFrame => DataFrame = Series.samples,
+                     compactEveryBatches: Int = 0,
+                     closeLagUs: Option[Long] = None,
+                     retentionUs: Long = 0L,
+                     intervalMs: Long = 0L,
+                     onProgress: Option[(Long, Long) => Unit] = None): StreamingQuery = {
+    require(retentionUs == 0L || closeLagUs.exists(retentionUs > _),
+      s"retentionUs=$retentionUs must exceed closeLagUs=$closeLagUs " +
+        "(retiring not-yet-closed chunks would drop live data)")
+    val probe = closeLagUs.isDefined || retentionUs > 0L || onProgress.isDefined
+    var lastRetireHorizonUs = Long.MinValue
+    source.writeStream
+      .trigger(Trigger.ProcessingTime(intervalMs))
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.appendBatch(graft.tsdb.Series.samples(batch), batchId)
+        val samples = if (probe) toSamples(batch).persist() else toSamples(batch)
+        try {
+          store.appendBatch(samples, batchId)
+          if (compactEveryBatches > 0 && batchId > 0 && batchId % compactEveryBatches == 0)
+            store.compactBatches(batchId)
+          if (probe) {
+            val mm = samples.agg(min(col("ts_us")), max(col("ts_us"))).head()
+            if (!mm.isNullAt(1)) {
+              val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+              closeLagUs.foreach(lag => store.closeChunksBelow(hi - lag))
+              if (retentionUs > 0L) {
+                val horizon = hi - retentionUs
+                if (lastRetireHorizonUs == Long.MinValue ||
+                  horizon / store.chunkUs > lastRetireHorizonUs / store.chunkUs) {
+                  store.retire(horizon)
+                  lastRetireHorizonUs = horizon
+                }
+              }
+              onProgress.foreach(_(lo, hi))
+            }
+          }
+        } finally if (probe) samples.unpersist(blocking = false)
+        ()
       }
       .start()
-
-  /** The reference's WHOLE ingest pipeline end-to-end: a stream of
-    * snappy+protobuf remote-write payloads (one BINARY column) decoded
-    * per micro-batch and appended to the chunk store — server.rs's
-    * decode → WAL → current-chunk path with the checkpoint playing the
-    * WAL (idempotent batch-scoped appends, see [[startChunkSink]]). */
-  def startRemoteWriteSink(payloads: DataFrame, store: graft.tsdb.ChunkStore,
-                           checkpoint: String, payloadCol: String = "payload",
-                           compactEveryBatches: Int = 0) =
-    payloads.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.appendBatch(
-          graft.sources.RemoteWrite.toEventSamples(batch, payloadCol), batchId)
-        // maintenance on the same data-progress cadence as close/retire:
-        // without it a seconds-trigger sink accumulates one batch dir
-        // (x salt files per chunk) per trigger for as long as it runs
-        if (compactEveryBatches > 0 && batchId > 0 &&
-          batchId % compactEveryBatches == 0)
-          store.compactBatches(batchId)
-      }
-      .start()
-
-  /** Drain an [[graft.sources.HttpEndpoint]] write spool into the
-    * chunk store: the HTTP handler only renames raw payload files into
-    * `spoolDir`; this file-source stream picks them up and rides the
-    * exact remote-write sink above — ONE append job per micro-batch no
-    * matter how many requests arrived, which is what lets the front
-    * door sustain real remote-write request rates (per-request cost is
-    * an enqueue, per-batch cost is one Spark job). Exactly-once: the
-    * file source records processed files in the checkpoint and the
-    * batch-scoped chunk append is replay-idempotent; `cleanSource =
-    * delete` removes committed spool files so the directory stays
-    * bounded by (in-flight batches × request rate), not uptime.
-    * `maxFilesPerTrigger` caps a catch-up batch after downtime so one
-    * giant micro-batch can't monopolize the cluster.
-    * `compactEveryBatches` folds the accumulated batch directories
-    * into one consolidated directory on that cadence
-    * ([[graft.tsdb.ChunkStore.compactBatches]]) — live file count per
-    * chunk stays bounded by (cadence × salts), not uptime. */
-  def startSpoolRemoteWriteSink(spark: org.apache.spark.sql.SparkSession,
-                                spoolDir: String, store: graft.tsdb.ChunkStore,
-                                checkpoint: String,
-                                maxFilesPerTrigger: Int = 4096,
-                                compactEveryBatches: Int = 64) = {
-    // the source lists the directory immediately; make it exist before
-    // the first request ever spools a file
-    val p = new org.apache.hadoop.fs.Path(spoolDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-    startRemoteWriteSink(
-      spark.readStream
-        .format("binaryFile")
-        // the streaming source demands an explicit schema; binaryFile's
-        // is fixed by the format — restate it verbatim
-        .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .option("cleanSource", "delete")
-        .option("pathGlobFilter", "*.bin") // never a half-renamed temp
-        .load(spoolDir)
-        .select(col("content").as("payload")),
-      store, checkpoint, compactEveryBatches = compactEveryBatches)
   }
 
   case class TimedEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
@@ -669,33 +665,25 @@ object StreamIngest {
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("text_md5")
 
-  /** Chunk sink with inline compaction: each micro-batch appends, then
-    * every live chunk whose time range lies entirely below the batch's
-    * max event time minus `closeLagUs` is Gorilla-packed into the
-    * closed store (the reference's background swap+compress,
-    * src/db.rs:265-303, driven here by data progress instead of a
-    * timer thread — deterministic and replay-safe). */
-  /** Continuous PromQL RULE EVALUATION — the Prometheus evaluator
-    * loop as a streaming sink. Each micro-batch (1) appends to the
-    * store (batch-scoped, replay-idempotent), then (2) evaluates the
-    * rule expression over the step-aligned instants the batch's DATA
-    * PROGRESS covers ([min ts, max ts] — no wall clock, deterministic
-    * on replay) via [[graft.promql.PromQL.alertRuleStore]], and (3)
-    * overwrites those instants' partitions of the alerts table.
+  /** Continuous PromQL RULE EVALUATION, the Prometheus evaluator loop,
+    * as a [[startStoreSink]] `onProgress` hook. After a batch's append
+    * it evaluates the rule expression over the step-aligned instants
+    * the batch's DATA PROGRESS covers ([min ts, max ts]: no wall clock,
+    * deterministic on replay) via [[graft.promql.PromQL.alertRuleStore]],
+    * and overwrites those instants' partitions of the alerts table.
     *
     * Idempotence + late data share one mechanism: an instant's alert
     * rows are a pure function of the store content and the instant,
-    * and writes are per-instant dynamic-partition overwrites — a
-    * replayed batch rewrites identical rows; a late batch touching an
-    * already-evaluated instant REFRESHES it against the now-complete
-    * store (self-healing, where a log-append sink would duplicate or
-    * go stale). FOR runs older than the evaluated grid clip their
-    * `active_since_us` at the grid's lookback edge (forUs + one step
-    * back), but the pending/firing STATE is exact — a run active
-    * through the whole lookback has already been active ≥ forUs. */
-  def startRuleSink(events: DataFrame, store: graft.tsdb.ChunkStore,
-                    checkpoint: String, query: String, forUs: Long,
-                    stepUs: Long, alertsDir: String) = {
+    * and writes are per-instant partition rewrites — a replayed batch
+    * rewrites identical rows; a late batch touching an already-evaluated
+    * instant REFRESHES it against the now-complete store (self-healing,
+    * where a log-append sink would duplicate or go stale). FOR runs
+    * older than the evaluated grid clip their `active_since_us` at the
+    * grid's lookback edge (forUs + one step back), but the
+    * pending/firing STATE is exact — a run active through the whole
+    * lookback has already been active ≥ forUs. */
+  def ruleRefresh(store: ChunkStore, query: String, forUs: Long, stepUs: Long,
+                  alertsDir: String): (Long, Long) => Unit = {
     require(stepUs > 0, s"stepUs must be positive, got $stepUs")
     // the batch's REFRESH RANGE: its data [lo, hi] can change any
     // instant whose window touches it (t ≤ hi + widest-window) and,
@@ -705,141 +693,69 @@ object StreamIngest {
     // instant in [ceil(lo), floor(hi + window + forUs)]
     val windowUs = graft.promql.PromQL.maxWindowUs(
       graft.promql.PromQL.parse(query), 5L * 60L * 1000000L)
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val samples = graft.tsdb.Series.samples(batch).persist()
-        store.appendBatch(samples, batchId)
-        val mm = samples.agg(min(col("ts_us")), max(col("ts_us"))).collect()(0)
-        if (!mm.isNullAt(1)) {
-          val first = Math.floorDiv(mm.getLong(0) + stepUs - 1, stepUs) * stepUs
-          val last = Math.floorDiv(mm.getLong(1) + windowUs + forUs, stepUs) * stepUs
-          if (last >= first) {
-            // lookback edge aligned DOWN to the step grid, so every
-            // evaluated instant stays epoch-step-aligned even when
-            // forUs is not a step multiple
-            val gridStart = Math.floorDiv(first - forUs, stepUs) * stepUs - stepUs
-            val out = graft.promql.PromQL.alertRuleStore(store, query, forUs,
-                gridStart, last, stepUs)
-              .filter(col("ts_us") >= first)
-            // exact refresh = clear-then-append: an instant whose
-            // alert DISAPPEARS on re-evaluation must lose its old
-            // rows, and dynamic overwrite only rewrites partitions
-            // that still produce data. ONE directory listing, then
-            // delete only the partitions that EXIST in the refresh
-            // range — a small step with a wide window+FOR reach spans
-            // thousands of grid instants, and a blind per-instant
-            // delete is that many blocking filesystem calls per batch
-            // (object-store latency would dominate); the existing set
-            // is bounded by what earlier batches actually wrote
-            val root = new org.apache.hadoop.fs.Path(alertsDir)
-            val fs = root
-              .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-            if (fs.exists(root))
-              fs.listStatus(root).foreach { st =>
-                val n = st.getPath.getName
-                if (n.startsWith("ts_us=")) {
-                  val t = try n.stripPrefix("ts_us=").toLong catch {
-                    case _: NumberFormatException => Long.MinValue
-                  }
-                  if (t >= first && t <= last) fs.delete(st.getPath, true)
-                }
+    (lo: Long, hi: Long) => {
+      val first = Math.floorDiv(lo + stepUs - 1, stepUs) * stepUs
+      val last = Math.floorDiv(hi + windowUs + forUs, stepUs) * stepUs
+      if (last >= first) {
+        // lookback edge aligned DOWN to the step grid, so every
+        // evaluated instant stays epoch-step-aligned even when forUs is
+        // not a step multiple
+        val gridStart = Math.floorDiv(first - forUs, stepUs) * stepUs - stepUs
+        val out = graft.promql.PromQL.alertRuleStore(store, query, forUs,
+            gridStart, last, stepUs)
+          .filter(col("ts_us") >= first)
+        // exact refresh = clear-then-append: an instant whose alert
+        // DISAPPEARS on re-evaluation must lose its old rows, and
+        // dynamic overwrite only rewrites partitions that still produce
+        // data. ONE directory listing, then delete only the partitions
+        // that EXIST in the refresh range — a small step with a wide
+        // window+FOR reach spans thousands of grid instants, and a
+        // blind per-instant delete is that many blocking filesystem
+        // calls per batch (object-store latency would dominate); the
+        // existing set is bounded by what earlier batches actually wrote
+        val root = new org.apache.hadoop.fs.Path(alertsDir)
+        val fs = root.getFileSystem(out.sparkSession.sparkContext.hadoopConfiguration)
+        if (fs.exists(root))
+          fs.listStatus(root).foreach { st =>
+            val n = st.getPath.getName
+            if (n.startsWith("ts_us=")) {
+              val t = try n.stripPrefix("ts_us=").toLong catch {
+                case _: NumberFormatException => Long.MinValue
               }
-            out.write.mode("append").partitionBy("ts_us").parquet(alertsDir)
-          }
-        }
-        samples.unpersist(blocking = false)
-        ()
-      }
-      .start()
-  }
-
-  /** The Prometheus PULL loop as a streaming sink: scrape a
-    * text-exposition target (`/federate`, any /metrics page) on a
-    * processing-time cadence and append each page into the store as
-    * one idempotent batch-scoped chunk append. The rate source is the
-    * tick; its rows carry nothing — each trigger re-scrapes the LIVE
-    * target, which is the pull model's semantics (there is no replay
-    * of a scrape: on recovery a re-run batch re-reads the target's
-    * CURRENT page, and the batch-scoped append keeps the store
-    * consistent — same as Prometheus, where a restarted scraper
-    * simply scrapes now). Lines without a timestamp stamp the scrape
-    * wall-clock instant, exactly as a Prometheus scrape would. */
-  def startScrapeSink(spark: org.apache.spark.sql.SparkSession,
-                      url: String, store: graft.tsdb.ChunkStore,
-                      checkpoint: String,
-                      intervalMs: Long = 15000L) = {
-    spark.readStream
-      .format("rate")
-      .option("rowsPerSecond", 1)
-      .load()
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(intervalMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (_: DataFrame, batchId: Long) =>
-        // a failed scrape is a DOWN TARGET for one interval, not a
-        // dead scraper: swallow the tick's failure and keep polling
-        // (the Prometheus pull semantics; a propagated exception
-        // would TERMINATE the streaming query permanently — found by
-        // review). Parse failures surface the same way: the target is
-        // broken this tick, log and retry next tick.
-        try {
-          val samples = graft.sources.Federation.scrapeSamples(
-            spark, url, System.currentTimeMillis() * 1000L)
-          store.appendBatch(samples, batchId)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"[startScrapeSink] scrape of $url failed for batch $batchId " +
-                s"(target down this interval): ${e.getMessage}")
-        }
-        ()
-      }
-      .start()
-  }
-
-  def startChunkSinkCompacting(events: DataFrame, store: graft.tsdb.ChunkStore,
-                               checkpoint: String,
-                               closeLagUs: Long = 2L * 3600 * 1000 * 1000,
-                               retentionUs: Long = 0L) = {
-    // misconfiguration must fail HERE, at setup — inside foreachBatch
-    // it would start a healthy-looking query that dies on its first
-    // non-empty batch
-    require(retentionUs == 0L || retentionUs > closeLagUs,
-      s"retentionUs=$retentionUs must exceed closeLagUs=$closeLagUs " +
-        "(retiring not-yet-closed chunks would drop live data)")
-    // retire only when the horizon ADVANCES past a chunk boundary: the
-    // call rewrites the _retention marker and re-lists the store's
-    // directories, which a seconds-cadence trigger must not pay per
-    // batch when nothing can possibly retire
-    var lastRetireHorizonUs = Long.MinValue
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val samples = graft.tsdb.Series.samples(batch).persist()
-        store.appendBatch(samples, batchId)
-        val maxTs = samples.agg(max(col("ts_us"))).collect()(0)
-        if (!maxTs.isNullAt(0)) {
-          store.closeChunksBelow(maxTs.getLong(0) - closeLagUs)
-          // retention driven by DATA progress like the close (no timer
-          // thread, deterministic on replay — retire is monotone, so a
-          // replayed batch re-issuing an older horizon is a no-op)
-          if (retentionUs > 0L) {
-            val horizon = maxTs.getLong(0) - retentionUs
-            // compare at the STORE's chunk grain, not a hardcoded hour:
-            // retire can only ever free whole chunks, so for multi-hour
-            // chunks an hourly cadence would pay the _retention rewrite
-            // + directory listings chunkUs/1h times per real boundary
-            if (horizon / store.chunkUs > lastRetireHorizonUs / store.chunkUs ||
-              lastRetireHorizonUs == Long.MinValue) {
-              store.retire(horizon)
-              lastRetireHorizonUs = horizon
+              if (t >= first && t <= last) fs.delete(st.getPath, true)
             }
           }
-        }
-        samples.unpersist(blocking = false)
-        ()
+        out.write.mode("append").partitionBy("ts_us").parquet(alertsDir)
       }
-      .start()
+    }
+  }
+
+  /** The Prometheus PULL loop's [[startStoreSink]] `toSamples`: scrape
+    * a text-exposition target (`/federate`, any /metrics page) once per
+    * micro-batch. Run it on a `rate` tick source with the scrape
+    * interval as `intervalMs`; the tick rows carry nothing. Each trigger
+    * re-scrapes the LIVE target, which is the pull model's semantics:
+    * there is no replay of a scrape, so a re-run batch after recovery
+    * re-reads the target's CURRENT page and the batch-scoped append
+    * keeps the store consistent, as a restarted Prometheus scraper
+    * simply scrapes now. Lines without a timestamp stamp the scrape
+    * wall-clock instant.
+    *
+    * The one bounded page is read here, so a failed fetch or parse is
+    * a DOWN TARGET for one interval, not a dead scraper: it is logged
+    * and yields no samples (a propagated exception would terminate the
+    * query). A store fault in the append still fails the query, as in
+    * every other sink. */
+  def scrapeSamples(url: String): DataFrame => DataFrame = { tick =>
+    val spark = tick.sparkSession
+    val page = graft.sources.Federation.scrapeSamples(
+      spark, url, System.currentTimeMillis() * 1000L)
+    try spark.createDataFrame(page.collectAsList(), page.schema)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(
+          s"[scrapeSamples] scrape of $url failed (target down this interval): ${e.getMessage}")
+        spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), page.schema)
+    }
   }
 }

@@ -141,8 +141,10 @@ class FederationSpec extends SparkSpec {
     val b = new ChunkStore(spark, dirB, chunkMs = 86400000L)
     val ck = java.nio.file.Files.createTempDirectory("graft_scrape_dead_ck").toString
     // port 1 answers nothing: every scrape fails
-    val q = graft.streaming.StreamIngest.startScrapeSink(spark,
-      "http://127.0.0.1:1/federate", b, ck, intervalMs = 200L)
+    val q = graft.streaming.StreamIngest.startStoreSink(
+      spark.readStream.format("rate").load(), b, ck,
+      graft.streaming.StreamIngest.scrapeSamples("http://127.0.0.1:1/federate"),
+      intervalMs = 200L)
     try {
       val deadline = System.currentTimeMillis() + 20000
       // wait until at least two batches have RUN (and failed)
@@ -152,6 +154,38 @@ class FederationSpec extends SparkSpec {
       assert(q.isActive, "a transient scrape failure must not kill the pull loop")
       assert(q.exception.isEmpty, q.exception.toString)
     } finally q.stop()
+  }
+
+  test("a store fault in the scrape loop fails the query; only the scrape itself is a down target") {
+    val page = "click{user_id=\"1\"} 5 1704067200000\n".getBytes("UTF-8")
+    val target = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    target.createContext("/metrics", (ex: com.sun.net.httpserver.HttpExchange) => {
+      ex.sendResponseHeaders(200, page.length)
+      ex.getResponseBody.write(page)
+      ex.close()
+    })
+    target.start()
+    val dirB = java.nio.file.Files.createTempDirectory("graft_scrape_fault").toString
+    val b = new ChunkStore(spark, dirB, chunkMs = 86400000L)
+    // a regular file where the live tier's directory belongs: the
+    // scrape succeeds and every append fails
+    java.nio.file.Files.write(java.nio.file.Paths.get(dirB, "live"), Array[Byte](1))
+    val ck = java.nio.file.Files.createTempDirectory("graft_scrape_fault_ck").toString
+    val q = graft.streaming.StreamIngest.startStoreSink(
+      spark.readStream.format("rate").load(), b, ck,
+      graft.streaming.StreamIngest.scrapeSamples(
+        s"http://127.0.0.1:${target.getAddress.getPort}/metrics"),
+      intervalMs = 200L)
+    try {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.awaitTermination(30000L))
+      assert(!q.isActive)
+      val causes = Iterator.iterate[Throwable](q.exception.get)(_.getCause)
+        .takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains(s"$dirB/live")),
+        q.exception.get)
+    } finally { q.stop(); target.stop(0) }
   }
 
   test("scrape loop: /federate → scrape client → second store; series ids round-trip bit-identically") {
@@ -177,8 +211,9 @@ class FederationSpec extends SparkSpec {
       val dirB = java.nio.file.Files.createTempDirectory("graft_scrapeB").toString
       val b = new ChunkStore(spark, dirB, chunkMs = 86400000L)
       val ck = java.nio.file.Files.createTempDirectory("graft_scrape_ck").toString
-      val q = graft.streaming.StreamIngest.startScrapeSink(spark, url, b, ck,
-        intervalMs = 300L)
+      val q = graft.streaming.StreamIngest.startStoreSink(
+        spark.readStream.format("rate").load(), b, ck,
+        graft.streaming.StreamIngest.scrapeSamples(url), intervalMs = 300L)
       try {
         val deadline = System.currentTimeMillis() + 30000
         while (System.currentTimeMillis() < deadline &&

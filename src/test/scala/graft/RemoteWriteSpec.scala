@@ -46,8 +46,8 @@ class RemoteWriteSpec extends SparkSpec {
     val store = new ChunkStore(spark, storeDir)
 
     val input = MemoryStream[Array[Byte]]
-    val q = StreamIngest.startRemoteWriteSink(
-      input.toDF().toDF("payload"), store, ckpt)
+    val q = StreamIngest.startStoreSink(
+      input.toDF().toDF("payload"), store, ckpt, RemoteWrite.toEventSamples(_))
     input.addData(RemoteWrite.encode(Seq(
       series("click", 1, 10, 0), series("purchase", 2, 4, 30000))))
     q.processAllAvailable()

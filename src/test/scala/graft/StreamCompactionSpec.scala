@@ -102,8 +102,8 @@ class StreamCompactionSpec extends SparkSpec {
     val store = new ChunkStore(spark, storeDir, filesPerChunkPerAppend = 2)
 
     val input = MemoryStream[Array[Byte]]
-    val q = StreamIngest.startRemoteWriteSink(
-      input.toDF().toDF("payload"), store, ckpt, compactEveryBatches = 3)
+    val q = StreamIngest.startStoreSink(input.toDF().toDF("payload"), store, ckpt,
+      RemoteWrite.toEventSamples(_), compactEveryBatches = 3)
     val nBatches = 10
     (0 until nBatches).foreach { b =>
       input.addData(RemoteWrite.encode(Seq(

@@ -33,7 +33,7 @@ class StreamRecoverySpec extends SparkSpec {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val store = new ChunkStore(spark, storeDir)
-      val q = StreamIngest.startChunkSink(stream, store, ckpt)
+      val q = StreamIngest.startStoreSink(stream, store, ckpt)
       q.processAllAvailable()
       q.stop()
     }

@@ -76,7 +76,7 @@ class StreamSessionSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamIngest.startChunkSink(events, store, ckpt)
+    val q = StreamIngest.startStoreSink(events, store, ckpt)
 
     def ts(h: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:15:00")
     input.addData((1L, ts(0), 1L, "click", 1.0), (2L, ts(1), 1L, "click", 2.0))

@@ -150,8 +150,8 @@ class StreamTimeoutSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamIngest.startChunkSinkCompacting(events, store, ckpt,
-      closeLagUs = 2L * 3600 * 1000000)
+    val q = StreamIngest.startStoreSink(events, store, ckpt,
+      closeLagUs = Some(2L * 3600 * 1000000))
 
     def t(h: Int, m: Int = 15) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     input.addData((1L, t(0), 1L, "click", 1.0), (2L, t(1), 1L, "click", 2.0))
@@ -180,8 +180,8 @@ class StreamTimeoutSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamIngest.startChunkSinkCompacting(events, store, ckpt,
-      closeLagUs = 2L * 3600 * 1000000, retentionUs = 5L * 3600 * 1000000)
+    val q = StreamIngest.startStoreSink(events, store, ckpt,
+      closeLagUs = Some(2L * 3600 * 1000000), retentionUs = 5L * 3600 * 1000000)
 
     def t(h: Int, m: Int = 15) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     input.addData((1L, t(0), 1L, "click", 1.0), (2L, t(1), 1L, "click", 2.0))
