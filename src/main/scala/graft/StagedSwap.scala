@@ -15,8 +15,9 @@ import org.apache.hadoop.fs.Path
   * (drop a target without replacement). The commit point is the plan
   * landing in the marker `<root>/_<name>_pending`; from then on the
   * swap is redoable from the marker and the staging tree alone.
-  * Readers refuse while [[pending]], and [[complete]] runs the plan to
-  * its end, then clears staging and the marker.
+  * Readers refuse while [[pending]] (a live-tier read first waits a
+  * few seconds for a compaction's commit to finish), and [[complete]]
+  * runs the plan to its end, then clears staging and the marker.
   *
   * Every step is idempotent, so completion is correct from any crash
   * point, mid-step included: a swap whose staged copy is gone has

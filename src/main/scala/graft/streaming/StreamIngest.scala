@@ -732,8 +732,12 @@ object StreamIngest {
 
   /** The Prometheus PULL loop's [[startStoreSink]] `toSamples`: scrape
     * a text-exposition target (`/federate`, any /metrics page) once per
-    * micro-batch. Run it on a `rate` tick source with the scrape
-    * interval as `intervalMs`; the tick rows carry nothing. Each trigger
+    * micro-batch. Run it on a tick source that yields a row on every
+    * trigger, `spark.readStream.format("rate-micro-batch")
+    * .option("rowsPerBatch", 1)`, with the scrape interval as
+    * `intervalMs`; the tick rows carry nothing. (The `rate` source adds
+    * one row per second, and a trigger with no new row runs no batch,
+    * so on it the loop scrapes at most once a second.) Each trigger
     * re-scrapes the LIVE target, which is the pull model's semantics:
     * there is no replay of a scrape, so a re-run batch after recovery
     * re-reads the target's CURRENT page and the batch-scoped append

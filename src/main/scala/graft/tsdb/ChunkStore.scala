@@ -30,6 +30,16 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, S
   * history. One streaming checkpoint and one writer at a time per store
   * path; every handle reads the store's state from disk on each call,
   * so a second handle on the same path never acts on stale state.
+  *
+  * A read plans without a Spark job: every tier read takes its schema
+  * from one parquet footer, read in process (the Spark row schema
+  * Spark's own inference prefers, plus the `batch`/`chunk` directory
+  * keys as long), instead of a schema-inference job per tier. The
+  * footer is read on every call, so the schema follows what is on disk:
+  * a recording-rule store keeps its string `user_id`, a third label
+  * column rides the live rows. A tier of more than 32 partition
+  * directories still pays Spark's parallel-listing job
+  * (`spark.sql.sources.parallelPartitionDiscovery.threshold`).
   */
 final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 3600000L,
                        filesPerChunkPerAppend: Int = 8,
@@ -114,7 +124,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
           "ts_us" -> LongType, "value" -> DoubleType, "event_id" -> LongType))
         .drop("chunk").withColumn("event_type", lit(null).cast(StringType))
         .withColumn("user_id", lit(null).cast(LongType))
-    inRange(readChunked(rollupPath), startUs, endUs)
+    inRange(readTier(rollupPath), startUs, endUs)
       .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
       .filter(col("bucket_ms") * 1000 >= (startUs / 3600000000L) * 3600000000L &&
         col("bucket_ms") * 1000 <= endUs)
@@ -134,14 +144,14 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * closed tier exactly as a semi-join would while carrying the
     * labels along. */
   private def matchedCatalog(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
-    inRange(readChunked(catalogPath), startUs, endUs)
+    inRange(readTier(catalogPath), startUs, endUs)
       .filter(Matcher.all(ms))
       .select("chunk", "series_id", "event_type", "user_id")
 
   /** Closed payloads of the series [[matchedCatalog]] selects, with
     * their labels: (chunk, series_id, payload, event_type, user_id). */
   private def matchedPayloads(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
-    inRange(readChunked(closedPath), startUs, endUs)
+    inRange(readTier(closedPath), startUs, endUs)
       .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
 
   /** All store METADATA probes (batch and closed-id listings, raw-dir
@@ -370,7 +380,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val liveBelow = liveChunkIdsListed().filter(_ < newLimit)
     deleteLiveChunkDirs(liveBelow)
     // roots left without any chunk partition are removed entirely: an
-    // empty parquet root fails schema inference on the next read, and
+    // empty parquet root has no footer to plan the next read from, and
     // a fully-retired store must read like a fresh one
     batchDirs().foreach { b =>
       if (!listNames(s"$livePath/$b").exists(_.startsWith("chunk=")))
@@ -448,8 +458,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val guarded = guardedRouted(samples).persist()
     try {
       // watermark-only triggers deliver EMPTY micro-batches; writing
-      // one would create a file-less batch directory, and if it is the
-      // store's FIRST it breaks schema inference for every later read
+      // one would only leave a file-less batch directory behind
       if (!guarded.isEmpty)
         clustered(guarded)
           .write.mode("overwrite").partitionBy("chunk")
@@ -469,19 +478,102 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     df.repartition(spark.sparkContext.defaultParallelism, col("chunk"),
       pmod(hash(col("series_id")), lit(filesPerChunkPerAppend)))
 
-  /** Partition-directory columns come back as the narrowest inferred
-    * type — normalize `chunk` to long so range/set predicates match. */
-  private def readChunked(p: String): DataFrame =
-    spark.read.parquet(p).withColumn("chunk", col("chunk").cast("long"))
+  /** Every tier read: a parquet read of `base` (or of its partition
+    * directories `dirs`, with `base` as the partition root) under the
+    * schema [[tierSchema]] builds, so planning submits no Spark job. */
+  private def readTier(base: String, dirs: Seq[String] = Nil): DataFrame = {
+    val reader = spark.read.schema(tierSchema(base, if (dirs.isEmpty) Seq(base) else dirs))
+    if (dirs.isEmpty) reader.parquet(base)
+    else reader.option("basePath", base).parquet(dirs: _*)
+  }
+
+  /** The schema Spark would infer for a tier read with `mergeSchema`
+    * off, built in process: the data columns from the Spark row
+    * schema in the footer of one data file under `roots`, then the
+    * partition keys on the way down from `base` to that file (`batch`,
+    * `chunk`) as long. The walk is in name order and skips what is not
+    * yet, or no longer, data: hidden names (`_temporary`, `_SUCCESS`,
+    * `.crc`), directories without a data file (an in-flight micro-batch)
+    * and anything a concurrent swap removes mid-walk. Read on every
+    * call, like every other store state. */
+  private def tierSchema(base: String, roots: Seq[String]): StructType = {
+    import org.apache.hadoop.fs.Path
+    val fs = hfs
+    def keyOf(name: String) = if (name.contains("=")) Seq(name.takeWhile(_ != '=')) else Nil
+    // (data file, partition keys above it), lazily, depth first
+    def files(dir: Path, keys: Seq[String]): Iterator[(Path, Seq[String])] = {
+      val entries =
+        try fs.listStatus(dir).filterNot { s =>
+          val n = s.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }.sortBy(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+      val (leaves, subdirs) = entries.partition(_.isFile)
+      leaves.iterator.map(f => (f.getPath, keys)) ++
+        subdirs.iterator.flatMap(d => files(d.getPath, keys ++ keyOf(d.getPath.getName)))
+    }
+    roots.iterator
+      .flatMap(r => files(new Path(r), r.stripPrefix(base).split('/').toSeq.flatMap(keyOf)))
+      .flatMap { case (f, keys) =>
+        try Some(StructType(rowSchema(f) ++ keys.map(StructField(_, LongType))))
+        catch { case _: java.io.FileNotFoundException => None } // removed since the listing
+      }
+      .nextOption()
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"ChunkStore at $path: no data file under ${roots.mkString(", ")} — a concurrent " +
+          "swap removed it; retry the read"))
+  }
+
+  /** The Spark row schema a parquet file's footer carries (the key
+    * Spark writes and its own inference prefers). A file without it
+    * was not written by this store: that is a fault of the store, not
+    * of the request. */
+  private def rowSchema(file: org.apache.hadoop.fs.Path): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf)
+        .withMetadataFilter(
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .build())
+    val json =
+      try reader.getFileMetaData.getKeyValueMetaData.get(ChunkStore.RowSchemaKey)
+      finally reader.close()
+    if (json == null)
+      throw new java.io.IOException(
+        s"ChunkStore at $path: $file has no Spark row schema (footer key " +
+          s"${ChunkStore.RowSchemaKey}) — not a file this store wrote")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
 
   /** Live rows from `live/batch=<id>/chunk=<c>`; the batch id is
     * write bookkeeping, dropped here (chunk stays a partition column,
-    * so pruning holds). */
-  def live(): DataFrame = {
-    require(!batchCompactSwap.pending,
-      s"ChunkStore at $path: a batch compaction was interrupted mid-swap — " +
-        "batch directories may be missing rows; run compactBatches() again to heal")
-    readChunked(livePath).drop("batch")
+    * so pruning holds). A read racing [[compactBatches]] plans around
+    * its swap: while the swap's marker is up it waits (the commit is a
+    * few renames), and a plan made while batch directories vanished
+    * under it, or that met a removed file, is made again. A marker
+    * that outlasts [[ChunkStore.SwapSettleMs]] is a swap a crash
+    * interrupted, and the read refuses. */
+  def live(): DataFrame = settledLive(System.currentTimeMillis() + ChunkStore.SwapSettleMs)
+
+  @annotation.tailrec
+  private def settledLive(deadline: Long): DataFrame = {
+    val swap = batchCompactSwap
+    val listed = batchDirs()
+    val planned =
+      if (swap.pending) None
+      else try Some(readTier(livePath).drop("batch")) catch {
+        case _: java.io.FileNotFoundException if System.currentTimeMillis() < deadline => None
+      }
+    planned match {
+      case Some(rows) if !swap.pending && listed.forall(batchDirs().toSet) => rows
+      case _ =>
+        require(System.currentTimeMillis() < deadline,
+          s"ChunkStore at $path: a batch compaction was interrupted mid-swap — " +
+            "batch directories may be missing rows; run compactBatches() again to heal")
+        Thread.sleep(10)
+        settledLive(deadline)
+    }
   }
 
   /** Compact the live tier: merge every `batch=<id>` directory with id
@@ -510,10 +602,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     if (sources.size <= 1) return // nothing to merge (or already compacted)
     val target = s"batch=-$upToBatchId"
     val staged = s"${swap.begin()}/$target"
-    val rows = spark.read.option("basePath", livePath)
-      .parquet(sources.map(s => s"$livePath/$s"): _*)
-      .withColumn("chunk", col("chunk").cast("long"))
-      .drop("batch")
+    val rows = readTier(livePath, sources.map(s => s"$livePath/$s")).drop("batch")
     clustered(rows).write.mode("overwrite").partitionBy("chunk").parquet(staged)
     // a replayed horizon can list its own earlier output as a source;
     // the swap replaces it
@@ -542,7 +631,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   private def labelSets(scope: DataFrame => DataFrame): DataFrame = {
     // a fully compacted store has no raw files left to read
     val tiers = (if (liveChunkIdsListed().isEmpty) Nil else Seq(live())) ++
-      (if (chunkIds(catalogPath).nonEmpty) Seq(readChunked(catalogPath)) else Nil)
+      (if (chunkIds(catalogPath).nonEmpty) Seq(readTier(catalogPath)) else Nil)
     tiers.map(t => scope(t).select("series_id", "event_type", "user_id"))
       .reduceOption(_ unionByName _)
       .fold(emptyOf("series_id" -> StringType, "event_type" -> StringType,
@@ -564,7 +653,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * scan), listed on each call so a chunk another handle wrote is seen
     * at once. The closed-tier reads test these ids, not the tier root:
     * a delete that empties every chunk leaves the root without a
-    * partition (its schema cannot be inferred), and removing the root
+    * partition (no footer to read a schema from), and removing the root
     * instead would race a close writing into it from the drain. */
   private def chunkIds(dir: String): Set[Long] =
     listNames(dir).filter(_.startsWith("chunk="))
@@ -663,7 +752,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   def backfillRollups(): Unit = {
     val missing = chunkIds(closedPath).diff(chunkIds(rollupPath))
     if (missing.isEmpty) return
-    val payloads = readChunked(closedPath)
+    val payloads = readTier(closedPath)
       .filter(col("chunk").isInCollection(missing))
     rollup1h(Gorilla.unpack(payloads)
       .withColumn("chunk", expr(s"ts_us div $chunkUs")))
@@ -673,7 +762,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
 
   /** Read a closed chunk back as samples (decode + explode). */
   def readClosed(chunk: Long): DataFrame =
-    Gorilla.unpack(spark.read.parquet(closedPath).filter(col("chunk") === chunk))
+    Gorilla.unpack(readTier(closedPath).filter(col("chunk") === chunk))
 
   // ─────────────────── snapshots (admin backup verb) ───────────────────
 
@@ -1008,10 +1097,10 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     }
     if (affected.isEmpty) return
     val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
-    val cat = inAffected(readChunked(catalogPath))
+    val cat = inAffected(readTier(catalogPath))
       .select("chunk", "series_id", "event_type", "user_id")
     val doomed = cat.filter(Matcher.all(ms)).select("chunk", "series_id")
-    val payloads = inAffected(readChunked(closedPath))
+    val payloads = inAffected(readTier(closedPath))
     val untouched = payloads.join(doomed, Seq("chunk", "series_id"), "left_anti")
       .select("series_id", "chunk", "payload")
     // matched series: decode, drop the range, re-pack the survivors
@@ -1058,7 +1147,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     // a delete that empties every affected chunk stages no partition
     // and leaves no schema to read back: its plan is removes only
     if (chunkIds(s"$staging/closed").nonEmpty) {
-      val stagedPayloads = readChunked(s"$staging/closed")
+      val stagedPayloads = readTier(s"$staging/closed")
       stagedPayloads.select("chunk", "series_id").distinct()
         .join(labels, Seq("chunk", "series_id"))
         .write.partitionBy("chunk").parquet(s"$staging/closed_catalog")
@@ -1124,7 +1213,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       if (affected.isEmpty) return
       val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
       val touched = late.select("chunk", "series_id").distinct()
-      val payloads = inAffected(readChunked(closedPath))
+      val payloads = inAffected(readTier(closedPath))
       val untouched = payloads.join(touched, Seq("chunk", "series_id"), "left_anti")
         .select("series_id", "chunk", "payload")
       // receiving series: decode, union the late rows, collapse exact
@@ -1143,7 +1232,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       // backfilled series may be NEW to its chunk); label tuples
       // determine series_id, so the union-distinct is exactly one row
       // per (chunk, series)
-      val labels = inAffected(readChunked(catalogPath))
+      val labels = inAffected(readTier(catalogPath))
         .select("chunk", "series_id", "event_type", "user_id")
         .unionByName(late.select("chunk", "series_id", "event_type", "user_id"))
         .distinct()
@@ -1164,10 +1253,19 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val closedIds = chunkIds(closedPath)
     if (closedIds.isEmpty) return query(ms, startUs, endUs)
     // fully compacted stores have no raw files left — reading the
-    // empty live root would fail schema inference, and lingering raw
+    // empty live root has no footer to plan from, and lingering raw
     // dirs of closed chunks are excluded anyway
     if (liveChunkIdsListed().forall(closedIds)) return queryClosed(ms, startUs, endUs)
     liveMatched(ms, startUs, endUs, closedIds).select(SampleCols.map(col): _*)
       .unionByName(queryClosed(ms, startUs, endUs))
   }
+}
+
+object ChunkStore {
+  /** The parquet footer key under which Spark stores a file's row schema
+    * as JSON. */
+  private val RowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** How long a live read waits for a batch-compaction swap to clear. */
+  private val SwapSettleMs = 5000L
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.tsdb._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import java.nio.file.Files
 
 class ChunkStoreSpec extends SparkSpec {
@@ -813,26 +814,51 @@ class ChunkStoreSpec extends SparkSpec {
     val revisedTruth = Series.samples(labeledEvents.unionByName(late))
       .filter(!($"event_type" === "click" &&
         $"ts_us".between(day0 + dayUs, day0 + 2 * dayUs - 1)))
+    // label arity and types follow the disk: a recording-rule store
+    // holds string user_ids, and a third label rides the live rows
+    val recorded = new ChunkStore(spark, Files.createTempDirectory("graft_lbl_rule").toString,
+      chunkMs = 86400000L, rollupOnClose = true)
+    assert(graft.promql.PromQL.recordRule(liveOnly, recorded, "job:hits:sum1d",
+      """sum by (user_id) (sum_over_time({event_type=~"click|purchase"}[1d]))""",
+      day0 + dayUs, day0 + 5 * dayUs, dayUs) > 0)
+    val recordedLive = recorded.live().select("series_id", "event_type", "user_id", "ts_us", "value")
+    val recordedTruth = spark.createDataFrame(recordedLive.collectAsList(), recordedLive.schema)
+    recorded.closeChunksBelow(day0 + 3 * dayUs)
+    val threeLabel = new ChunkStore(spark, Files.createTempDirectory("graft_lbl_three").toString,
+      chunkMs = 86400000L, rollupOnClose = true)
+    val threeTruth = Series.samplesLabeled(
+      labeledEvents.withColumn("region", when($"user_id" === 1, "eu").otherwise("us")),
+      Seq("event_type", "region", "user_id"))
+    threeLabel.append(threeTruth)
+    threeLabel.closeChunksBelow(day0 + 3 * dayUs)
+    assert(threeLabel.live().columns.contains("region"))
     val reads = Seq(
       (Seq.empty[Matcher], day0, day0 + 10 * dayUs),
       (Seq[Matcher](MatchRe("event_type", "click|view")), day0 + dayUs / 2, day0 + 5 * dayUs))
     for ((store, truth) <- Seq(liveOnly -> Series.samples(labeledEvents),
            closedOnly -> Series.samples(labeledEvents),
-           mixed -> Series.samples(labeledEvents), revised -> revisedTruth);
+           mixed -> Series.samples(labeledEvents), revised -> revisedTruth,
+           recorded -> recordedTruth, threeLabel -> threeTruth);
          (ms, lo, hi) <- reads) {
       val cat = store.catalog()
       val all = store.queryAll(ms, lo, hi)
+      val userIdType = if (store eq recorded) StringType else LongType
+      assert(cat.schema("user_id").dataType == userIdType)
+      assert(all.schema("user_id").dataType == userIdType)
       assertSameRows(all, all.select("series_id", "ts_us", "value").join(cat, "series_id"))
       // and the rows themselves are the written truth, labels included
-      assertSameRows(all, TsOps.rangeQuery(truth, ms, lo, hi).join(cat, "series_id"))
+      val want = TsOps.rangeQuery(truth, ms, lo, hi)
+      assertSameRows(all, want.join(cat, "series_id"))
       val enc = store.queryEncoded(ms, lo, hi)
       assertSameRows(enc, enc.select("series_id", "chunk", "payload").join(cat, "series_id"))
       if (store ne liveOnly) { // rollups exist once a chunk closes
         val roll = store.queryRollup(ms, lo, hi)
-        assert(roll.count() > 0)
+        assert(roll.isEmpty == want.isEmpty)
         assertSameRows(roll, roll.drop("event_type", "user_id").join(cat, "series_id"))
       }
     }
+    assert(recorded.queryAll(Nil, day0, day0 + 10 * dayUs).select("user_id").distinct()
+      .as[String].collect().toSet == Set("1", "3"))
     // the mixed store really federates one series across both tiers
     val a = mixed.queryAll(Seq(MatchEq("event_type", "click"), MatchEq("user_id", "1")),
       day0, day0 + 10 * dayUs).select("value").as[Double].collect().sorted.toSeq
@@ -863,6 +889,143 @@ class ChunkStoreSpec extends SparkSpec {
       """sum by (event_type) (sum_over_time({event_type=~"click|purchase"}[1d]))""",
       day0 + dayUs, day0 + 5 * dayUs, dayUs)
     assert(liveScans(range) == 1)
+  }
+
+  /** The Spark jobs the calling thread submits while `body` runs. */
+  private def jobsSubmittedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-counted-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(f: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      // the listener bus delivers in order: once a marker job submitted
+      // after `body` shows, every job of `body` has shown
+      inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains(s"$group-marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$group-marker"), "the marker job never reached the listener")
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a read frame on a mixed store with rollups submits no Spark job") {
+    val store = labeledStore("graft_zero_jobs", 3) // days 0-2 closed, day 4 live
+    val (lo, hi) = (day0, day0 + 10 * dayUs)
+    val ms = Seq[Matcher](MatchRe("event_type", "click|view"))
+    val frames = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "queryAll" -> (() => store.queryAll(ms, lo, hi)),
+      "queryEncoded" -> (() => store.queryEncoded(ms, lo, hi)),
+      "queryRollup" -> (() => store.queryRollup(ms, lo, hi)),
+      "catalog" -> (() => store.catalog()),
+      "seriesFrame" -> (() => graft.sources.RemoteRead.seriesFrame(store,
+        (lo / 1000, hi / 1000, ms))),
+      "evalStoreRange" -> (() => graft.promql.PromQL.evalStoreRange(store,
+        """sum by (event_type) (rate({event_type=~"click|purchase"}[1d]))""",
+        day0 + dayUs, day0 + 5 * dayUs, dayUs)))
+    for ((name, build) <- frames) {
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsSubmittedBy { df = build() } == 0, s"$name submitted a job while planning")
+      assert(!df.isEmpty, name) // and the frame answers
+    }
+  }
+
+  /** A store of 2,000 events over five daily chunks (15 series, one
+    * event every 216 s), written as `n` streaming batches. */
+  private def batchedStore(name: String, n: Int): ChunkStore = {
+    val store = new ChunkStore(spark, Files.createTempDirectory(name).toString,
+      chunkMs = 86400000L, rollupOnClose = true)
+    val written = Series.samples(spark.range(2000).select($"id".as("event_id"),
+      (lit(day0 * 1000L) + $"id" * 216000000000L).as("ts"), ($"id" % 5).as("user_id"),
+      element_at(array(lit("click"), lit("view"), lit("purchase")),
+        ($"id" % 3 + 1).cast("int")).as("event_type"),
+      $"id".cast("double").as("value")))
+    for (b <- 0 until n) store.appendBatch(written.filter($"event_id" % n === b), b.toLong)
+    store
+  }
+
+  /** A frame's rows as sorted strings, binary payloads by content. */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
+      case v => String.valueOf(v)
+    }.mkString(",")).sorted.toSeq
+
+  test("reads skip live batch directories that hold no data file yet") {
+    val store = batchedStore("graft_inflight", 3)
+    store.closeChunksBelow(day0 + 3 * dayUs) // days 0-2 closed, day 4 live
+    val (lo, hi) = (day0, day0 + 10 * dayUs)
+    def answers = Seq(sortedRows(store.queryAll(Nil, lo, hi)),
+      sortedRows(store.queryEncoded(Nil, lo, hi)), sortedRows(store.catalog()))
+    val quiet = answers
+    // in-flight micro-batches, named to sort before every written one:
+    // one with only its committer's `_temporary`, one empty, and one
+    // with an empty chunk directory
+    val live = s"${store.path}/live"
+    val temp = new java.io.File(s"$live/batch=-7/_temporary/0/_temporary/attempt_0/chunk=${day0 / dayUs + 4}")
+    assert(temp.mkdirs())
+    Files.write(new java.io.File(temp, "part-00000.parquet").toPath, Array[Byte](1, 2, 3))
+    assert(new java.io.File(s"$live/batch=-8").mkdirs())
+    assert(new java.io.File(s"$live/batch=-9/chunk=${day0 / dayUs + 4}").mkdirs())
+    assert(answers == quiet)
+  }
+
+  test("reads racing compactBatches answer as a quiet store or fail retryably") {
+    val template = batchedStore("graft_race_template", 16)
+    val (lo, hi) = (day0, day0 + 10 * dayUs)
+    val quiet = sortedRows(template.queryAll(Nil, lo, hi))
+    /** A read as a remote-read client sees it: 5xx-class failures
+      * (anything but the endpoint's 400 mapping) are retried. */
+    def read(store: ChunkStore, tries: Int = 1): Seq[String] =
+      try sortedRows(store.queryAll(Nil, lo, hi))
+      catch {
+        case e: Exception if !e.isInstanceOf[IllegalArgumentException] &&
+          !e.isInstanceOf[IllegalStateException] && tries < 20 =>
+          Thread.sleep(20)
+          read(store, tries + 1)
+      }
+    for (round <- 0 until 3) {
+      val store = template.cloneTo(Files.createTempDirectory(s"graft_race_$round").toString + "/s")
+      val compaction = scala.concurrent.Future(store.compactBatches(16L))(
+        scala.concurrent.ExecutionContext.global)
+      var reads = 0
+      while (!compaction.isCompleted || reads == 0) {
+        assert(read(store) == quiet, s"round $round, read $reads")
+        reads += 1
+      }
+      compaction.value.get.get // a failed compaction fails the spec
+      assert(new java.io.File(s"${store.path}/live").list().toSeq == Seq("batch=-16"))
+      assert(read(store) == quiet)
+    }
+  }
+
+  test("a tier file without Spark's row schema fails the read as a server fault, not bad input") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_foreign").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required binary series_id (UTF8); required int64 ts_us; required double value; }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/live/batch=0/chunk=1/part-00000.parquet"))
+      .withConf(spark.sparkContext.hadoopConfiguration).withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("series_id", "s").append("ts_us", 86400000001L).append("value", 1.0))
+    finally writer.close()
+    val e = intercept[Exception](new ChunkStore(spark, dir, chunkMs = 86400000L)
+      .queryAll(Nil, 0L, 10 * dayUs))
+    assert(!e.isInstanceOf[IllegalArgumentException] && !e.isInstanceOf[IllegalStateException], e)
+    assert(e.getMessage.contains("org.apache.spark.sql.parquet.row.metadata"), e.getMessage)
   }
 
   test("a second handle's append and close show in this handle's catalog and queryAll") {

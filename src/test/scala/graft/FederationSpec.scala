@@ -142,15 +142,15 @@ class FederationSpec extends SparkSpec {
     val ck = java.nio.file.Files.createTempDirectory("graft_scrape_dead_ck").toString
     // port 1 answers nothing: every scrape fails
     val q = graft.streaming.StreamIngest.startStoreSink(
-      spark.readStream.format("rate").load(), b, ck,
+      spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 1).load(), b, ck,
       graft.streaming.StreamIngest.scrapeSamples("http://127.0.0.1:1/federate"),
       intervalMs = 200L)
     try {
       val deadline = System.currentTimeMillis() + 20000
-      // wait until at least two batches have RUN (and failed)
-      while (System.currentTimeMillis() < deadline && q.lastProgress == null)
+      // wait until at least three batches have RUN (each scrape failed)
+      while (System.currentTimeMillis() < deadline && q.recentProgress.length < 3)
         Thread.sleep(100)
-      Thread.sleep(600)
+      assert(q.recentProgress.length >= 3, "the pull loop stopped ticking")
       assert(q.isActive, "a transient scrape failure must not kill the pull loop")
       assert(q.exception.isEmpty, q.exception.toString)
     } finally q.stop()
@@ -173,7 +173,7 @@ class FederationSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(dirB, "live"), Array[Byte](1))
     val ck = java.nio.file.Files.createTempDirectory("graft_scrape_fault_ck").toString
     val q = graft.streaming.StreamIngest.startStoreSink(
-      spark.readStream.format("rate").load(), b, ck,
+      spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 1).load(), b, ck,
       graft.streaming.StreamIngest.scrapeSamples(
         s"http://127.0.0.1:${target.getAddress.getPort}/metrics"),
       intervalMs = 200L)
@@ -212,7 +212,7 @@ class FederationSpec extends SparkSpec {
       val b = new ChunkStore(spark, dirB, chunkMs = 86400000L)
       val ck = java.nio.file.Files.createTempDirectory("graft_scrape_ck").toString
       val q = graft.streaming.StreamIngest.startStoreSink(
-        spark.readStream.format("rate").load(), b, ck,
+        spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 1).load(), b, ck,
         graft.streaming.StreamIngest.scrapeSamples(url), intervalMs = 300L)
       try {
         val deadline = System.currentTimeMillis() + 30000
