@@ -32,13 +32,16 @@ import graft.tsdb.ChunkStore
   * lock. [[start]] launches [[drain]], a `binaryFile` stream over the
   * spool into [[graft.streaming.StreamIngest.startStoreSink]]
   * (checkpoint `<store.path>/_spool_checkpoint`): ONE batch-scoped chunk
-  * append per micro-batch, whatever the request count. A 200 means the
-  * batch is accepted and durable in the spool; it becomes visible to
-  * reads after the drain's next micro-batch (a caller that needs
-  * read-after-write calls `drain.processAllAvailable()`). The
-  * checkpoint plus the replay-idempotent batch appends play the
-  * reference's WAL: a new endpoint on the same store resumes from the
-  * checkpoint and drains what an earlier one accepted exactly once.
+  * append per micro-batch, whatever the request count. The drain runs
+  * in a session of its own, which lists one trigger's spool files on
+  * the driver, with no Spark job; so its query is in `drain`, not in
+  * `spark.streams`. A 200 means the batch is accepted and durable in
+  * the spool; it becomes visible to reads after the drain's next
+  * micro-batch (a caller that needs read-after-write calls
+  * `drain.processAllAvailable()`). The checkpoint plus the
+  * replay-idempotent batch appends play the reference's WAL: a new
+  * endpoint on the same store resumes from the checkpoint and drains
+  * what an earlier one accepted exactly once.
   * One streaming checkpoint and one writer at a time per store path:
   * while an endpoint serves a store, nothing else writes it; once the
   * endpoint has stopped, the store takes direct [[ChunkStore.append]]
@@ -126,13 +129,18 @@ final class HttpEndpoint(
     // = delete` removes committed spool files, so the directory stays
     // bounded by (in-flight batches × request rate), not uptime; the
     // per-trigger file cap keeps one catch-up batch after downtime from
-    // monopolizing the cluster
-    val spooled = spark.readStream
+    // monopolizing the cluster; as the drain session's parallel-listing
+    // threshold it keeps the source's re-listing of a batch's files on
+    // the driver, not in a Spark job with a task per file
+    val drainSession = spark.newSession()
+    drainSession.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      HttpEndpoint.MaxFilesPerTrigger.toLong)
+    val spooled = drainSession.readStream
       .format("binaryFile")
       // the streaming source demands an explicit schema; binaryFile's
       // is fixed by the format — restate it verbatim
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .option("maxFilesPerTrigger", 4096)
+      .option("maxFilesPerTrigger", HttpEndpoint.MaxFilesPerTrigger)
       .option("cleanSource", "delete")
       .option("pathGlobFilter", "*.bin") // never a half-renamed temp
       .load(spoolDir)
@@ -770,6 +778,11 @@ final class HttpEndpoint(
     ex.sendResponseHeaders(200, resp.length.toLong)
     ex.getResponseBody.write(resp)
   }
+}
+
+object HttpEndpoint {
+  /** Spool files per drain micro-batch, at most; the drain lists them on the driver. */
+  val MaxFilesPerTrigger = 4096
 }
 
 /** Launchable server — the reference ships its engine AS a server

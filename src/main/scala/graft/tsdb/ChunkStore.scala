@@ -450,20 +450,18 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * makes the checkpoint the WAL: replay converges to exactly-once.
     * One streaming query (one checkpoint) per store path — a fresh
     * checkpoint restarts batch ids at 0 and would overwrite history.
-    * Negative ids belong to direct appends and compaction output. */
+    * Negative ids belong to direct appends and compaction output.
+    * The write is the one Spark action; if it left no `chunk=`
+    * directory (an empty or fully guarded batch), the batch directory
+    * is removed. A crash before that removal leaves a file-less batch
+    * directory, which reads skip and the next [[compactBatches]] removes. */
   def appendBatch(samples: DataFrame, batchId: Long): Unit = {
-    // persisted: the emptiness probe and the write share one
-    // evaluation of the batch's upstream (which may include e.g. the
-    // remote-write proto decode) instead of running it twice
-    val guarded = guardedRouted(samples).persist()
-    try {
-      // watermark-only triggers deliver EMPTY micro-batches; writing
-      // one would only leave a file-less batch directory behind
-      if (!guarded.isEmpty)
-        clustered(guarded)
-          .write.mode("overwrite").partitionBy("chunk")
-          .parquet(s"$livePath/batch=$batchId")
-    } finally guarded.unpersist(blocking = false)
+    val dir = s"$livePath/batch=$batchId"
+    clustered(guardedRouted(samples))
+      .write.mode("overwrite").partitionBy("chunk")
+      .parquet(dir)
+    if (!listNames(dir).exists(_.startsWith("chunk=")))
+      hfs.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 
   /** Cluster on (chunk, salt-of-series) before a partitioned write:

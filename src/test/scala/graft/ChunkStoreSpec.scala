@@ -980,6 +980,44 @@ class ChunkStoreSpec extends SparkSpec {
     assert(answers == quiet)
   }
 
+  test("appendBatch is one write job and leaves no empty batch directory") {
+    val store = batchedStore("graft_one_write", 2)
+    store.closeChunksBelow(day0 + 3 * dayUs) // days 0-2 closed, days 3-4 live
+    val (lo, hi) = (day0, day0 + 10 * dayUs)
+    def answers = Seq(sortedRows(store.queryAll(Nil, lo, hi)), sortedRows(store.catalog()))
+    def batchDir(id: Long) = new java.io.File(s"${store.path}/live/batch=$id")
+    def samples(tsUs: Long, n: Int) = Series.samples(spark.range(n).select($"id".as("event_id"),
+      (lit(tsUs * 1000L) + $"id" * 1000000000L).as("ts"), lit(7L).as("user_id"),
+      lit("late").as("event_type"), $"id".cast("double").as("value")))
+    val sc = spark.sparkContext
+    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
+    // off: adaptive execution runs the write's shuffle map stage as a job of its own
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val persisted = sc.getPersistentRDDs.keySet
+      assert(jobsSubmittedBy(store.appendBatch(samples(day0 + 4 * dayUs, 50), 10L)) == 1)
+      assert(sc.getPersistentRDDs.keySet == persisted)
+      assert(batchDir(10L).isDirectory)
+      val before = answers
+      // every row routed to a closed chunk: the guard drops them all
+      store.appendBatch(samples(day0 + dayUs, 50), 11L)
+      assert(!batchDir(11L).exists())
+      store.appendBatch(samples(day0 + 4 * dayUs, 50).limit(0), 12L)
+      assert(!batchDir(12L).exists())
+      assert(answers == before)
+      // a crash between the write and that removal leaves a committed,
+      // file-less batch directory; the next compaction removes it
+      assert(batchDir(13L).mkdirs())
+      Files.write(new java.io.File(batchDir(13L), "_SUCCESS").toPath, Array.emptyByteArray)
+      store.compactBatches(14L)
+      assert(!batchDir(13L).exists())
+      assert(answers == before)
+    } finally aqe match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
   test("reads racing compactBatches answer as a quiet store or fail retryably") {
     val template = batchedStore("graft_race_template", 16)
     val (lo, hi) = (day0, day0 + 10 * dayUs)

@@ -473,8 +473,10 @@ class HttpEndpointSpec extends SparkSpec {
       assert(post(port, "/api/v1/write", Array[Byte](9, 9, 9))._1 == 400)
       assert(spooled() == 24)
     } finally endpoint.stop()
-    // stop() leaves no query or worker thread behind
-    assert(!spark.streams.active.exists(_.id == endpoint.drain.id))
+    // stop() leaves no query or worker thread behind (the drain's
+    // query lives in a session of its own, not in spark.streams)
+    assert(!endpoint.drain.isActive)
+    assert(endpoint.drain.sparkSession.streams.active.isEmpty)
     assert(endpoint.workersTerminated)
 
     val resumed = new HttpEndpoint(spark, store, workerNum = 8)
@@ -559,10 +561,11 @@ class HttpEndpointSpec extends SparkSpec {
       assert(rows == nReq.toLong * samplesPerReq,
         s"expected ${nReq * samplesPerReq} distinct samples, got $rows")
       assert(store.live().count() == nReq.toLong * samplesPerReq) // no dupes either
-      // job count tracks micro-batches (appendBatch = emptiness probe +
-      // write + source bookkeeping ≈ ≤6 jobs/batch), nowhere near the
-      // request count: 300 request-sized append jobs would dwarf this
-      assert(totalJobs <= 6 * drainedBatches + 12 && totalJobs < nReq,
+      // job count tracks micro-batches: a batch is one appendBatch
+      // write, which adaptive execution (on inside foreachBatch) runs as
+      // two jobs, its shuffle's map stage and the write. No listing or
+      // emptiness job; 300 request-sized append jobs would dwarf this
+      assert(totalJobs <= 2 * drainedBatches && totalJobs < nReq,
         s"$totalJobs jobs for $drainedBatches drained micro-batches ($nReq requests)")
       // spool backlog bounded: the file-source cleaner removes a
       // batch's files when a LATER batch fetches, so nudge one more
@@ -577,6 +580,50 @@ class HttpEndpointSpec extends SparkSpec {
       assert(spooled() <= 8, s"spool not draining: ${spooled()} files left")
       assert(store.live().count() == (nReq + 4).toLong * samplesPerReq)
     } finally endpoint.stop()
+  }
+
+  test("a trigger over more than 32 spooled files lists them without a Spark job") {
+    val storeDir = Files.createTempDirectory("graft_http_listing").toString
+    val store = new ChunkStore(spark, storeDir)
+    val nReq = 40 // above the default parallel-listing threshold of 32
+    val first = new HttpEndpoint(spark, store)
+    val port = first.start()
+    try {
+      first.drain.stop()
+      for (u <- 0 until nReq)
+        assert(post(port, "/api/v1/write", RemoteWrite.encode(Seq(
+          (Map("event_type" -> "spooled", "user_id" -> u.toString), Seq((t0, u * 1.0))))))._1 == 200)
+    } finally first.stop()
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    val resumed = new HttpEndpoint(spark, store)
+    resumed.start()
+    try {
+      resumed.drain.processAllAvailable()
+      // the listener bus delivers in order: once a marker job submitted
+      // after the drain shows, every drain job has shown
+      val marker = s"graft-marker-${java.util.UUID.randomUUID()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!descriptions.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(descriptions.contains(marker), "the marker job never reached the listener")
+      val listings = descriptions.toArray.map(_.toString)
+        .filter(_.startsWith("Listing leaf files and directories"))
+      assert(listings.isEmpty, listings.mkString("; "))
+      assert(store.queryAll(Seq(MatchEq("event_type", "spooled")), t0 * 1000L,
+        (t0 + 60000L) * 1000L).count() == nReq)
+    } finally {
+      sc.removeSparkListener(listener)
+      resumed.stop()
+    }
   }
 
   test("a spool that cannot take a write answers 500 and logs it, so the client retries; garbage still answers 400") {
