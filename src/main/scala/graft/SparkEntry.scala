@@ -985,7 +985,7 @@ object SparkEntry {
       // matcher+range query federated across closed (compressed) and
       // live chunks. The oracle is a plain filter over the source
       // events — hash-equality proves chunk routing, the ingest guard,
-      // the codec round-trip, catalog matcher resolution, and the
+      // the codec round-trip, label matchers on closed rows, and the
       // live∪closed federation in one shot.
       // filesPerChunkPerAppend=2: a BULK backfill spanning ~31 daily
       // chunks gets its parallelism from the chunk count (31×2 write
@@ -1001,7 +1001,7 @@ object SparkEntry {
     // one event type's samples for days 1-3 → federated read-back.
     // The oracle recomputes the store's post-delete truth from the raw
     // events, so hash-equality proves the chunk-rewrite surgery
-    // (payload unpack/re-pack, catalog shrink, emptied-partition
+    // (payload unpack/re-pack, labels carried, emptied-partition
     // removal) loses exactly the matched range and nothing else
     "ts_delete_series" -> ((s, dir) => {
       // the verb mutates, so it runs on a hardlink CLONE of the shared
@@ -1021,8 +1021,8 @@ object SparkEntry {
     // would drop them — the reference's db.rs ingest-guard reject) →
     // backfill the withheld slice → federated read-back. The oracle is
     // the view series over ALL events, so hash-equality proves the
-    // closed-chunk merge surgery (payload decode/union/re-pack, catalog
-    // growth for series newly appearing in a chunk, staged swap) loses
+    // closed-chunk merge surgery (payload decode/union/re-pack, labeled
+    // rows for series newly appearing in a chunk, staged swap) loses
     // nothing and the live/closed routing split lands every late row
     "ts_backfill" -> ((s, dir) => {
       val store = new ChunkStore(s,
@@ -1040,7 +1040,7 @@ object SparkEntry {
     // → destructive delete → RESTORE from the snapshot → federated
     // read-back. The oracle is the plain PRE-delete truth recomputed
     // from raw events, so hash-equality proves the snapshot captured
-    // the whole closed tier (payloads + catalog) and restore swapped
+    // the whole closed tier (labeled payloads) and restore swapped
     // it back losslessly
     "ts_snapshot_restore" -> ((s, dir) => {
       val store = sharedStore(s, dir, "closed").cloneTo(

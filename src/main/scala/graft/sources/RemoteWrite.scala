@@ -463,7 +463,7 @@ object RemoteRead {
       val capped = seriesFrame(store, q).limit(seriesCap + 1).collect()
       if (capped.length > seriesCap)
         throw new TooManySeriesException(seriesCap, "remote-read query")
-      capped
+      capped.sortBy(_.getString(0))
         .map { r =>
           val labels = Map(
             "event_type" -> r.getString(1),
@@ -478,7 +478,9 @@ object RemoteRead {
 
   /** One sampled remote-read query's answer as a frame: one row per
     * series (series_id, event_type, user_id, pts), pts the
-    * time-ascending (ts_us, value) points, ordered by series_id. */
+    * time-ascending (ts_us, value) points. Unordered: [[serve]] sorts
+    * the at most cap+1 rows it collects by series_id, which costs no
+    * range-partition shuffle. */
   private[graft] def seriesFrame(store: ChunkStore, q: Query): DataFrame = {
     val (sMs, eMs, ms) = q
     // the wire is ms-grain: [sMs, eMs] covers those WHOLE
@@ -488,7 +490,6 @@ object RemoteRead {
     store.queryAll(ms, sMs * 1000, eMs * 1000 + 999)
       .groupBy(col("series_id"), col("event_type"), col("user_id"))
       .agg(sort_array(collect_list(struct(col("ts_us"), col("value")))).as("pts"))
-      .orderBy(col("series_id"))
   }
 
   // ──────────── streamed responses (accepted_response_types) ────────────

@@ -15,12 +15,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, S
   *    `chunk` directory column — metadata-only, scales to 100 TB;
   *  - "closing" a chunk (reference: compress on swap,
   *    src/chunk/chunk.rs `close`) = rewriting its rows as one Gorilla
-  *    payload per series ([[Gorilla.pack]]) plus a per-chunk series
-  *    catalog (series_id → labels), mirroring the reference's
-  *    per-chunk indexer (src/indexer/sled_indexer.rs mappings 1-3);
+  *    payload per series ([[Gorilla.packBy]]); each payload row keeps
+  *    its series' labels (`event_type`, `user_id`), as live rows do,
+  *    so label matchers filter the closed tier's own rows;
   *  - queries federate live ∪ closed chunks and merge per series —
   *    the reference's read path walks the current chunk then the
-  *    secondary chunks and merges by label set (db.rs:205-263).
+  *    secondary chunks and merges by label set (db.rs:205-263). A read
+  *    plans only the tiers holding a chunk that overlaps its range.
   *
   * The live tier has one layout, `live/batch=<id>/chunk=<c>`: every
   * write is a batch directory. A streaming micro-batch takes its batch
@@ -58,22 +59,22 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   val chunkUs: Long = chunkMs * 1000
   private val livePath = s"$path/live"
   private val closedPath = s"$path/closed"
-  private val catalogPath = s"$path/closed_catalog"
   private val retentionPath = s"$path/_retention"
   private val rawRetentionPath = s"$path/_raw_retention"
   private val rollupPath = s"$path/rollup"
 
   /** Per-(chunk, series) hourly rollup of a raw sample frame — the
     * [[TsOps.downsample]] aggregate shape, keyed by the source chunk
-    * so the write partitions align with the store layout. The
-    * constructor guarantees chunkMs is a whole multiple of one hour,
-    * so every bucket lives entirely inside one chunk and each
-    * (series, bucket) emits exactly one row. */
+    * so the write partitions align with the store layout, with the
+    * series' labels last. The constructor guarantees chunkMs is a
+    * whole multiple of one hour, so every bucket lives entirely inside
+    * one chunk and each (series, bucket) emits exactly one row. */
   private def rollup1h(rows: DataFrame): DataFrame = {
     val bucketUs = 3600000000L
     rows
       .groupBy(col("chunk"), col("series_id"),
-        (expr(s"ts_us div $bucketUs") * 3600000L).as("bucket_ms"))
+        (expr(s"ts_us div $bucketUs") * 3600000L).as("bucket_ms"),
+        col("event_type"), col("user_id"))
       .agg(
         count(lit(1)).as("n_points"),
         min(col("value")).as("min_value"),
@@ -87,17 +88,35 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
         min(struct(col("ts_us"), col("event_id"), col("value"))).as("first_point"),
         max(struct(col("ts_us"), col("event_id"), col("value"))).as("last_point"))
       .withColumn("avg_value", col("sum_value") / col("n_points"))
+      .select(col("chunk"), col("series_id"), col("bucket_ms"), col("n_points"),
+        col("min_value"), col("max_value"), col("sum_value"), col("first_point"),
+        col("last_point"), col("avg_value"), col("event_type"), col("user_id"))
+  }
+
+  /** [[rollup1h]] of closed payload rows, decoded. The event_id
+    * surrogate never decides first/last: sample timestamps are unique
+    * per series. */
+  private def rollupOfPayloads(payloads: DataFrame): DataFrame =
+    rollup1h(samplesOf(payloads).withColumn("event_id", lit(0L)))
+
+  /** Closed payload rows decoded to one row per sample: every column
+    * but `payload` (series_id, labels, chunk) rides along, then ts_us
+    * and value. */
+  private def samplesOf(payloads: DataFrame): DataFrame = {
+    val keys = payloads.columns.toSeq.filterNot(_ == "payload").map(col)
+    payloads.select(keys :+ explode(Gorilla.decodeUdf(col("payload"))).as("p"): _*)
+      .select(keys ++ Seq(col("p._1").as("ts_us"), col("p._2").as("value")): _*)
   }
 
   /** Matcher + range query over the AT-REST ROLLUPS (closed chunks
-    * only): chunk-range partition pruning, matcher resolution against
-    * the per-chunk catalog, and no payload decode at all — the serving
-    * path for dashboard/alert ranges where per-sample resolution is
-    * not needed. Bucket bounds are inclusive of any bucket overlapping
-    * [startUs, endUs]. Output: the rollup columns (series_id,
-    * bucket_ms, n_points, min/max/sum_value, first_point, last_point,
-    * avg_value) then the labels (event_type, user_id), which ride the
-    * matcher join with the per-chunk catalog. */
+    * only): chunk-range partition pruning, the matchers filtering the
+    * rollup rows' own labels inside the parquet scan, and no payload
+    * decode at all — the serving path for dashboard/alert ranges where
+    * per-sample resolution is not needed. Bucket bounds are inclusive
+    * of any bucket overlapping [startUs, endUs]. Output: the rollup
+    * columns (series_id, bucket_ms, n_points, min/max/sum_value,
+    * first_point, last_point, avg_value) then the labels (event_type,
+    * user_id). */
   def queryRollup(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap()
     require(exists(rollupPath),
@@ -121,11 +140,10 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
           "enabled) — run backfillRollups() once, or query raw via queryAll")
     if (rolled.isEmpty) // every closed chunk deleted: no rows
       return rollup1h(emptyOf("chunk" -> LongType, "series_id" -> StringType,
-          "ts_us" -> LongType, "value" -> DoubleType, "event_id" -> LongType))
-        .drop("chunk").withColumn("event_type", lit(null).cast(StringType))
-        .withColumn("user_id", lit(null).cast(LongType))
+          "ts_us" -> LongType, "value" -> DoubleType, "event_id" -> LongType,
+          "event_type" -> StringType, "user_id" -> LongType)).drop("chunk")
     inRange(readTier(rollupPath), startUs, endUs)
-      .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
+      .filter(Matcher.all(ms))
       .filter(col("bucket_ms") * 1000 >= (startUs / 3600000000L) * 3600000000L &&
         col("bucket_ms") * 1000 <= endUs)
       .drop("chunk")
@@ -137,22 +155,11 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   private def inRange(df: DataFrame, startUs: Long, endUs: Long): DataFrame =
     df.filter(col("chunk") >= startUs / chunkUs && col("chunk") <= endUs / chunkUs)
 
-  /** The in-range per-chunk catalog rows whose labels satisfy `ms`:
-    * (chunk, series_id, event_type, user_id). Every writer of the
-    * catalog (close, backfill, delete, restore) keeps one row per
-    * (chunk, series_id), so an inner join on that pair filters a
-    * closed tier exactly as a semi-join would while carrying the
-    * labels along. */
-  private def matchedCatalog(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
-    inRange(readTier(catalogPath), startUs, endUs)
-      .filter(Matcher.all(ms))
-      .select("chunk", "series_id", "event_type", "user_id")
-
-  /** Closed payloads of the series [[matchedCatalog]] selects, with
-    * their labels: (chunk, series_id, payload, event_type, user_id). */
+  /** In-range closed payload rows whose labels satisfy `ms`: (series_id,
+    * event_type, user_id, payload, chunk). The matchers push into the
+    * parquet scan. */
   private def matchedPayloads(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
-    inRange(readTier(closedPath), startUs, endUs)
-      .join(matchedCatalog(ms, startUs, endUs), Seq("chunk", "series_id"))
+    inRange(readTier(closedPath), startUs, endUs).filter(Matcher.all(ms))
 
   /** All store METADATA probes (batch and closed-id listings, raw-dir
     * cleanup) go through the Hadoop FileSystem of `path`, never
@@ -324,12 +331,28 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * verb that worked around another's pending swap would rewrite a
     * half-swapped tier, and the later heal would rename that swap's
     * staged copies over the result. */
-  private def healClosedTier(): Unit = { deleteSwap.complete(); restoreSwap.complete() }
+  private def healClosedTier(): Unit = {
+    assertLabeledClosedTier(path)
+    deleteSwap.complete(); restoreSwap.complete()
+  }
 
-  /** Closed-tier reads refuse while an interrupted delete/restore
-    * swap is pending — partitions may be mid-move; any closed-tier
-    * writer heals ([[healClosedTier]]). */
+  /** A closed tier written by an earlier version keeps its labels in a
+    * `closed_catalog/` beside payload rows that have none. Every
+    * closed-tier read and write refuses such a store (a server fault,
+    * like a file without Spark's row schema) rather than serve null
+    * labels or mix the two formats. */
+  private def assertLabeledClosedTier(root: String): Unit =
+    if (exists(s"$root/closed_catalog"))
+      throw new java.io.IOException(
+        s"ChunkStore at $root: $root/closed_catalog holds the labels of chunks closed by an " +
+          "earlier version of this store, whose payload rows carry none; this version " +
+          "reads labels from the closed rows and cannot serve or change that tier")
+
+  /** Closed-tier reads refuse on an earlier version's closed tier and
+    * while an interrupted delete/restore swap is pending — partitions
+    * may be mid-move; any closed-tier writer heals ([[healClosedTier]]). */
   private def assertNoPendingClosedSwap(): Unit = {
+    assertLabeledClosedTier(path)
     require(!deleteSwap.pending,
       s"ChunkStore at $path: a series deletion was interrupted mid-swap — " +
         "re-run deleteSeries (any arguments) or touch the store with the same " +
@@ -355,7 +378,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * per-chunk PARTITION-DIRECTORY removal — a metadata operation,
     * never a data rewrite: the chunk is the retention grain by design,
     * the same property that makes pruning free. Closed chunks drop
-    * payload + catalog partitions; raw live dirs below the horizon
+    * payload + rollup partitions; raw live dirs below the horizon
     * drop too. The horizon persists (`_retention`, monotone max) so
     * the ingest guard keeps retired history out across restarts. A
     * pending closed-tier plan completes first ([[healClosedTier]]).
@@ -367,12 +390,11 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val fs = hfs
     writeHorizon(retentionPath, newLimit)
     // raw-retired chunks are absent from the closed-id set but still
-    // hold catalog/rollup partitions — full retirement must drop those
-    // too, so the id set unions the rollup-tier listing
+    // hold rollup partitions — full retirement must drop those too, so
+    // the id set unions the rollup-tier listing
     val closedBelow = (chunkIds(closedPath) ++ chunkIds(rollupPath)).filter(_ < newLimit)
     closedBelow.foreach { c =>
-      Seq(s"$closedPath/chunk=$c", s"$catalogPath/chunk=$c",
-        s"$rollupPath/chunk=$c").foreach { p =>
+      Seq(s"$closedPath/chunk=$c", s"$rollupPath/chunk=$c").foreach { p =>
         val hp = new org.apache.hadoop.fs.Path(p)
         if (fs.exists(hp)) fs.delete(hp, true)
       }
@@ -386,10 +408,10 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       if (!listNames(s"$livePath/$b").exists(_.startsWith("chunk=")))
         fs.delete(new org.apache.hadoop.fs.Path(s"$livePath/$b"), true)
     }
-    Seq(closedPath -> "chunk=", catalogPath -> "chunk=", rollupPath -> "chunk=",
-      livePath -> "batch=").foreach { case (dir, child) =>
-      if (exists(dir) && !listNames(dir).exists(_.startsWith(child)))
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    Seq(closedPath -> "chunk=", rollupPath -> "chunk=", livePath -> "batch=").foreach {
+      case (dir, child) =>
+        if (exists(dir) && !listNames(dir).exists(_.startsWith(child)))
+          fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
     closedBelow ++ liveBelow
   }
@@ -397,7 +419,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   /** TIERED retention (the Thanos/Prometheus long-retention model —
     * raw for days, downsampled for years): drop the RAW Gorilla
     * payloads of closed chunks ending strictly below `beforeUs` while
-    * KEEPING their catalog and hourly rollups, so [[queryRollup]] and
+    * KEEPING their hourly rollups (labels included), so [[queryRollup]] and
     * the metadata APIs keep serving the whole history at 1/360th the
     * bytes. Raw reads ([[queryAll]]/[[queryClosed]]) that dip below
     * the horizon refuse LOUDLY with a pointer to the rollup tier —
@@ -608,18 +630,19 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       graft.StagedSwap.Swap(target, s"live/$target"))
   }
 
-  /** Store-wide series catalog (series_id, event_type, user_id): live
-    * rows' labels ∪ the closed chunks' per-chunk catalogs — the
-    * reference indexer's id→labels mapping across both tiers. For the
-    * metadata APIs only (label names and values, series listings,
-    * tsdb status): data reads carry their labels already. Built on
-    * each call, so it shows what is on disk whichever handle wrote
-    * it. */
+  /** Store-wide series catalog (series_id, event_type, user_id): the
+    * label columns of live ∪ closed ∪ rollup rows — the reference
+    * indexer's id→labels mapping across every tier. The rollup tier
+    * counts for the chunks whose payloads [[retireRaw]] dropped, so
+    * their series still list. For the metadata APIs only (label names
+    * and values, series listings, tsdb status): data reads carry their
+    * labels already. Built on each call, so it shows what is on disk
+    * whichever handle wrote it. */
   def catalog(): DataFrame = labelSets(identity)
 
   /** The catalog restricted to series with data in chunks overlapping
     * [startUs, endUs] — the Prometheus series/labels metadata APIs'
-    * time bound. Both tiers are chunk-partitioned, so the bound is
+    * time bound. Every tier is chunk-partitioned, so the bound is
     * partition pruning on each side; chunk grain is the resolution
     * (a series is "active" if its CHUNK overlaps, as in Prometheus's
     * block-grain series listing). */
@@ -627,9 +650,14 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     labelSets(inRange(_, startUs, endUs))
 
   private def labelSets(scope: DataFrame => DataFrame): DataFrame = {
+    assertLabeledClosedTier(path)
+    val closedIds = chunkIds(closedPath)
+    val rawRetired = chunkIds(rollupPath).diff(closedIds)
     // a fully compacted store has no raw files left to read
     val tiers = (if (liveChunkIdsListed().isEmpty) Nil else Seq(live())) ++
-      (if (chunkIds(catalogPath).nonEmpty) Seq(readTier(catalogPath)) else Nil)
+      (if (closedIds.isEmpty) Nil else Seq(readTier(closedPath))) ++
+      (if (rawRetired.isEmpty) Nil
+       else Seq(readTier(rollupPath).filter(col("chunk").isInCollection(rawRetired))))
     tiers.map(t => scope(t).select("series_id", "event_type", "user_id"))
       .reduceOption(_ unionByName _)
       .fold(emptyOf("series_id" -> StringType, "event_type" -> StringType,
@@ -664,10 +692,12 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * `is_with_range` scan skip); the ts filter pushes into parquet. A
     * store with no live chunk answers an empty frame. */
   def query(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame =
-    if (liveChunkIdsListed().isEmpty)
-      emptyOf("series_id" -> StringType, "ts_us" -> LongType, "value" -> DoubleType,
-        "event_type" -> StringType, "user_id" -> LongType)
+    if (liveChunkIdsListed().isEmpty) emptySamples
     else liveMatched(ms, startUs, endUs, Set.empty).select(SampleCols.map(col): _*)
+
+  private def emptySamples: DataFrame =
+    emptyOf("series_id" -> StringType, "ts_us" -> LongType, "value" -> DoubleType,
+      "event_type" -> StringType, "user_id" -> LongType)
 
   /** Live rows in range whose labels satisfy `ms`, outside the chunks
     * in `closedIds` (a closed chunk serves from its payloads; raw dirs
@@ -679,46 +709,38 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     TsOps.rangeBound(open.filter(Matcher.all(ms)), startUs, endUs)
   }
 
-  /** Close one chunk: Gorilla-pack its series into the closed store
-    * and record the chunk's series catalog (id → labels) so closed
-    * chunks remain label-queryable without the raw rows. */
+  /** Close one chunk: Gorilla-pack its series into the closed store,
+    * each payload row keeping its series' labels, so closed chunks
+    * remain label-queryable without the raw rows. */
   def closeChunk(chunk: Long): Unit = closeChunks(Seq(chunk))
 
-  /** Close a SET of chunks in two partitioned jobs (pack + catalog),
-    * not a per-chunk driver loop — a background swap that has fallen
-    * behind (or a bench building history) closes a day in one pass.
-    * `partitionOverwriteMode=dynamic` scopes the overwrite to exactly
-    * the chunk partitions being (re)closed: idempotent re-close,
-    * never wiping previously closed chunks (a static-mode root
-    * overwrite+partitionBy would). */
+  /** Close a SET of chunks in one partitioned pack job (two on a
+    * rollup store), not a per-chunk driver loop — a background swap
+    * that has fallen behind (or a bench building history) closes a day
+    * in one pass. `partitionOverwriteMode=dynamic` scopes the overwrite
+    * to exactly the chunk partitions being (re)closed: idempotent
+    * re-close, never wiping previously closed chunks (a static-mode
+    * root overwrite+partitionBy would). */
   def closeChunks(chunks: Seq[Long]): Unit = {
     if (chunks.isEmpty) return
+    assertLabeledClosedTier(path)
     val rows = live().filter(col("chunk").isInCollection(chunks))
-    // CATALOG first, payload second: the closed-id set (and queryAll's
-    // live-branch exclusion) keys on the PAYLOAD directories, so a
-    // crash between the two writes leaves a catalog without payloads —
-    // harmless (the catalog join finds no payload rows, the raw rows
-    // still serve from live) and self-healing (the chunk is still a
-    // close candidate and the dynamic overwrite rewrites both).
-    // Payload-first would instead hide the raw rows while the catalog
-    // needed to read the payloads is missing.
-    rows.select("chunk", "series_id", "event_type", "user_id").distinct()
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("chunk").parquet(catalogPath)
     // rollups at rest (Prometheus recording rules / Thanos
     // downsampling): each closing chunk also writes its per-series
     // hourly min/max/count/exact-sum — dashboards and alert ranges
     // then serve from ~1 row per series-hour WITHOUT a Gorilla decode.
     // OPT-IN (rollupOnClose), like recording rules themselves: the
     // extra write job per close is the trade for decode-free range
-    // serving. Written before the payload for the same crash reason
-    // as the catalog: a rollup without its payload is unreachable
-    // garbage that the self-healing re-close rewrites.
+    // serving. Written before the payload: the closed-id set (and
+    // queryAll's live-branch exclusion) keys on the PAYLOAD
+    // directories, so a crash between the two writes leaves a rollup
+    // without its payload — unreachable garbage that the self-healing
+    // re-close rewrites — while the raw rows still serve from live.
     if (rollupOnClose)
       rollup1h(rows)
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("chunk").parquet(rollupPath)
-    Gorilla.packWithChunk(rows)
+    Gorilla.packBy(rows, "series_id", "event_type", "user_id", "chunk")
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("chunk").parquet(closedPath)
     // compaction COMPLETES by dropping the raw rows: without this the
@@ -743,17 +765,15 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   }
 
   /** Write the missing rollup partitions for chunks that were closed
-    * before rollupOnClose was enabled: decode only those payloads,
-    * re-derive the chunk id from the timestamp (routing used the same
-    * division), and dynamic-overwrite per chunk partition — idempotent
-    * like closeChunks, so a crash mid-backfill just re-runs. */
+    * before rollupOnClose was enabled: decode only those payloads (each
+    * row keeps its chunk and labels) and dynamic-overwrite per chunk
+    * partition — idempotent like closeChunks, so a crash mid-backfill
+    * just re-runs. */
   def backfillRollups(): Unit = {
+    assertLabeledClosedTier(path)
     val missing = chunkIds(closedPath).diff(chunkIds(rollupPath))
     if (missing.isEmpty) return
-    val payloads = readTier(closedPath)
-      .filter(col("chunk").isInCollection(missing))
-    rollup1h(Gorilla.unpack(payloads)
-      .withColumn("chunk", expr(s"ts_us div $chunkUs")))
+    rollupOfPayloads(readTier(closedPath).filter(col("chunk").isInCollection(missing)))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("chunk").parquet(rollupPath)
   }
@@ -765,7 +785,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   // ─────────────────── snapshots (admin backup verb) ───────────────────
 
   private def snapshotsRoot = s"$path/snapshots"
-  private val SnapTiers = Seq("closed", "closed_catalog", "rollup")
+  private val SnapTiers = Seq("closed", "rollup")
   private val RetentionFiles = Seq("_retention", "_raw_retention")
 
   /** Parallel tree copy for the snapshot/restore verbs. The closed
@@ -886,10 +906,11 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * files are immutable once written and every mutation verb
     * REPLACES files via staged swap rather than editing in place, so
     * links are as safe here as in the snapshot copy; byte-copy on
-    * remote schemes). Covers live + closed + catalog + rollup +
-    * retention metadata; `snapshots/` stays behind (a clone is a
-    * working copy, not a backup of backups). Refuses mid-swap trees —
-    * a clone of a half-swapped store would freeze the corruption. */
+    * remote schemes). Covers live + closed + rollup + retention
+    * metadata; `snapshots/` stays behind (a clone is a working copy,
+    * not a backup of backups). Refuses mid-swap trees — a clone of a
+    * half-swapped store would freeze the corruption — and an earlier
+    * version's closed tier, as the reads do. */
   def cloneTo(destPath: String): ChunkStore = {
     assertNoPendingClosedSwap()
     require(!batchCompactSwap.pending,
@@ -909,8 +930,9 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   /** Point-in-time SNAPSHOT of the closed tier (Prometheus's
     * `POST /api/v1/admin/tsdb/snapshot`, the backup half of the admin
     * family deleteSeries opened): the closed-chunk id set is pinned
-    * FIRST, then exactly those partition directories of
-    * closed/catalog/rollup copy into `snapshots/<name>/` (staged under
+    * FIRST, then exactly those partition directories of closed/ and
+    * rollup/ (payloads and rollups, each row with its labels) copy into
+    * `snapshots/<name>/` (staged under
     * a dot-temp dir, renamed into place — a crashed snapshot leaves
     * only an ignorable temp, never a half-visible name). The closed
     * tier is immutable parquet, so the copy is pure file I/O — no
@@ -924,7 +946,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   def snapshot(name: Option[String] = None): String = {
     assertNoPendingClosedSwap()
     // union with the rollup listing: a tiered store's raw-retired
-    // chunks live only as catalog+rollup partitions, and a backup
+    // chunks live only as rollup partitions, and a backup
     // that silently dropped them would lose the long-retention tier
     val ids = chunkIds(closedPath) ++ chunkIds(rollupPath)
     require(ids.nonEmpty,
@@ -964,24 +986,28 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     listNames(snapshotsRoot).filterNot(_.startsWith(".")).sorted
 
   /** Open a snapshot as a READ-ONLY closed-only store (same chunk
-    * grain; rollup serving iff the snapshot carries rollups). */
+    * grain; rollup serving iff the snapshot carries rollups). A
+    * snapshot an earlier version took refuses, as its store would. */
   def openSnapshot(name: String): ChunkStore = {
     require(exists(s"$snapshotsRoot/$name"), s"no snapshot named $name under $snapshotsRoot")
+    assertLabeledClosedTier(s"$snapshotsRoot/$name")
     new ChunkStore(spark, s"$snapshotsRoot/$name", chunkMs = chunkUs / 1000,
       rollupOnClose = rollupOnClose)
   }
 
   /** Restore the closed tier WHOLESALE from a snapshot: every closed/
-    * catalog/rollup partition currently in the store is replaced by
-    * the snapshot's set (chunks closed after the snapshot are dropped —
+    * and rollup/ partition currently in the store is replaced by the
+    * snapshot's set (chunks closed after the snapshot are dropped —
     * that is what restoring a backup means; live raw chunks are left
     * untouched), and the retention horizons reset to the snapshot's.
     * The copy stages whole, then one [[graft.StagedSwap]] plan swaps
     * whole tiers in and removes what the snapshot does not carry; a
-    * pending closed-tier plan completes first. */
+    * pending closed-tier plan completes first. A snapshot an earlier
+    * version took refuses: its payload rows carry no labels. */
   def restoreSnapshot(name: String): Unit = {
     val snapDir = s"$snapshotsRoot/$name"
     require(exists(snapDir), s"no snapshot named $name under $snapshotsRoot")
+    assertLabeledClosedTier(snapDir)
     healClosedTier()
     val swap = restoreSwap
     val staging = swap.begin()
@@ -1000,19 +1026,14 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   }
 
   /** Matcher + range query over CLOSED chunks: prune by chunk range,
-    * resolve matchers against the per-chunk catalog (label filters run
-    * on the small catalog, never on decoded samples), decode only the
-    * payloads of matching series. Output: (series_id, ts_us, value,
-    * event_type, user_id), the labels carried from the per-chunk
-    * catalog through the decode. */
+    * filter the payload rows' own labels inside the parquet scan
+    * (never on decoded samples), decode only the payloads of matching
+    * series. Output: (series_id, ts_us, value, event_type, user_id),
+    * the labels carried from the payload rows through the decode. */
   def queryClosed(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertRawServable(startUs)
     assertNoPendingClosedSwap()
-    matchedPayloads(ms, startUs, endUs)
-      .select(col("series_id"), explode(Gorilla.decodeUdf(col("payload"))).as("p"),
-        col("event_type"), col("user_id"))
-      .select(col("series_id"), col("p._1").as("ts_us"), col("p._2").as("value"),
-        col("event_type"), col("user_id"))
+    samplesOf(matchedPayloads(ms, startUs, endUs)).select(SampleCols.map(col): _*)
       .filter(col("ts_us") >= startUs && col("ts_us") <= endUs)
   }
 
@@ -1029,30 +1050,45 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * contract and the client trims after decode (the Prometheus
     * streamed-read rule — servers send whole chunks). Output:
     * (series_id, chunk, payload, event_type, user_id), the labels
-    * from the live rows or from the per-chunk catalog; an empty store
-    * answers an empty frame. */
+    * from the live or payload rows, each tier planned only when the
+    * range touches it ([[federated]]); an empty store answers an empty
+    * frame. */
   def queryEncoded(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap()
     assertRawServable(startUs)
     val cols = Seq("series_id", "chunk", "payload", "event_type", "user_id").map(col)
-    val closedIds = chunkIds(closedPath)
-    val closedPart =
-      if (closedIds.isEmpty) None
-      else Some(matchedPayloads(ms, startUs, endUs).select(cols: _*))
-    val livePart =
-      if (liveChunkIdsListed().forall(closedIds)) None
-      else Some(Gorilla.packBy(liveMatched(ms, startUs, endUs, closedIds),
-        "series_id", "event_type", "user_id", "chunk").select(cols: _*))
-    (closedPart ++ livePart).reduceOption(_ unionByName _).getOrElse(
+    federated(startUs, endUs)(matchedPayloads(ms, startUs, endUs).select(cols: _*),
+      closedIds => Gorilla.packBy(liveMatched(ms, startUs, endUs, closedIds),
+        "series_id", "event_type", "user_id", "chunk").select(cols: _*),
       emptyOf("series_id" -> StringType, "chunk" -> LongType, "payload" -> BinaryType,
         "event_type" -> StringType, "user_id" -> LongType))
+  }
+
+  /** The tier choice of the federated reads, from the chunk-id
+    * listings: the `closed` part is planned only when a closed chunk
+    * overlaps [startUs, endUs], the `live` part (given the closed ids
+    * it must leave out) only when a not-yet-closed live chunk does —
+    * the reference's `is_with_range` chunk walk, at tier grain. A range
+    * that overlaps neither plans the tier that exists, pruned to no
+    * partition, so its empty answer keeps the store's own label types;
+    * a store with neither answers `empty`. */
+  private def federated(startUs: Long, endUs: Long)(closed: => DataFrame,
+      live: Set[Long] => DataFrame, empty: => DataFrame): DataFrame = {
+    val closedIds = chunkIds(closedPath)
+    val liveIds = liveChunkIdsListed().diff(closedIds)
+    def overlaps(ids: Set[Long]) = ids.exists(c => c >= startUs / chunkUs && c <= endUs / chunkUs)
+    val parts = (if (overlaps(closedIds)) Seq(closed) else Nil) ++
+      (if (overlaps(liveIds)) Seq(live(closedIds)) else Nil)
+    parts.reduceOption(_ unionByName _).getOrElse(
+      if (liveIds.nonEmpty) live(closedIds) else if (closedIds.nonEmpty) closed else empty)
   }
 
   /** Prometheus's admin deletion verb (POST /api/v1/admin/tsdb/
     * delete_series): drop every sample of the matched series inside
     * [startUs, endUs] from the CLOSED tier, rewriting the affected
-    * chunks' payloads, catalog and rollups from the surviving
-    * samples. Only matched series' payloads decode/re-pack; untouched
+    * chunks' payloads and rollups from the surviving samples. The
+    * matchers select on the payload rows' own labels. Only matched
+    * series' payloads decode/re-pack; untouched
     * series' payloads and rollup rows carry over byte-identical. A
     * chunk left with no samples loses its partition directories
     * entirely (dynamic overwrite cannot erase a partition that
@@ -1081,7 +1117,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
         s"delete_series range touches live (not yet closed) chunks " +
           s"${liveOnly.toSeq.sorted.mkString(",")} — close them first " +
           "(closeChunksBelow); live deletion is the head-block case Prometheus tombstones")
-    // raw-retired chunks live only as catalog+rollup partitions — this
+    // raw-retired chunks live only as rollup partitions — this
     // verb rewrites from raw payloads, so the matched samples in that
     // range CANNOT be deleted here and silently skipping them would
     // leave the "deleted" series serving from the rollup tier (the
@@ -1094,73 +1130,45 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
             "retire(beforeUs) the rollup-only history, or start the delete at the horizon")
     }
     if (affected.isEmpty) return
-    val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
-    val cat = inAffected(readTier(catalogPath))
-      .select("chunk", "series_id", "event_type", "user_id")
-    val doomed = cat.filter(Matcher.all(ms)).select("chunk", "series_id")
-    val payloads = inAffected(readTier(closedPath))
-    val untouched = payloads.join(doomed, Seq("chunk", "series_id"), "left_anti")
-      .select("series_id", "chunk", "payload")
+    val payloads = readTier(closedPath).filter(col("chunk").isInCollection(affected))
+    val doomed = coalesce(Matcher.all(ms), lit(false))
     // matched series: decode, drop the range, re-pack the survivors
-    // (chunk re-derives from ts — samples never cross their chunk)
-    val surviving = Gorilla.unpack(
-        payloads.join(doomed, Seq("chunk", "series_id"), "left_semi"))
+    val surviving = samplesOf(payloads.filter(doomed))
       .filter(!(col("ts_us") >= startUs && col("ts_us") <= endUs))
-      .withColumn("chunk", expr(s"ts_us div $chunkUs"))
-    val newPayloads = untouched
-      .unionByName(Gorilla.packWithChunk(surviving)
-        .select("series_id", "chunk", "payload"))
-    // catalog = surviving series per chunk, labels from the old rows
-    restageClosed(affected, newPayloads, cat)
+    restageClosed(affected, payloads.filter(!doomed)
+      .unionByName(Gorilla.packBy(surviving, "series_id", "event_type", "user_id", "chunk")))
   }
 
   /** The closed-tier rewrite [[deleteSeries]] and [[backfill]] share:
-    * the affected chunks' new payloads, then their catalog (the staged
-    * series re-joined with `labels`, rows of (chunk, series_id,
-    * event_type, user_id)), then — on a rollup store — their rollups
-    * rebuilt wholesale from the staged payloads, all written to staging
-    * first and committed as one [[graft.StagedSwap]] plan.
+    * the affected chunks' new payload rows (series_id, labels, payload,
+    * chunk), then — on a rollup store — their rollups rebuilt wholesale
+    * from the staged payloads, both written to staging first and
+    * committed as one [[graft.StagedSwap]] plan.
     *
     * Staging first means every read of the directories being replaced
     * completes before any of them is touched: overwriting them in place
     * behind an in-memory cache would recompute from a half-overwritten
-    * source on cache eviction. The catalog and rollups derive from the
-    * staged payloads re-read from disk, not from lineage over the
-    * replaced directories. Rollups rebuild wholesale rather than keep
-    * untouched rows and recompute the rest: that split re-derives the
-    * matched set from the catalog, which a crash between the catalog
-    * and rollup swaps has already rewritten, so a re-run would keep
-    * stale rows; a pure function of the staged payloads heals every
-    * crash state, at the cost of decoding the affected chunks' other
-    * series too. The plan swaps payloads before catalog — a crash
-    * between them leaves the catalog still naming the old series, so a
-    * re-run can re-match, where the reverse order would orphan payload
-    * rows — and removes the partitions of chunks left with no series. */
-  private def restageClosed(affected: Set[Long], newPayloads: DataFrame,
-                            labels: DataFrame): Unit = {
+    * source on cache eviction. The rollups derive from the staged
+    * payloads re-read from disk, not from lineage over the replaced
+    * directories. They rebuild wholesale rather than keep untouched
+    * rows and recompute the rest: a pure function of the staged
+    * payloads heals every crash state, including payloads swapped with
+    * the rollups still old, at the cost of decoding the affected
+    * chunks' other series too. The plan removes the partitions of
+    * chunks left with no series. */
+  private def restageClosed(affected: Set[Long], newPayloads: DataFrame): Unit = {
     val swap = deleteSwap
     val staging = swap.begin()
     newPayloads.write.partitionBy("chunk").parquet(s"$staging/closed")
     val withRollups = rollupOnClose && exists(rollupPath)
     // a delete that empties every affected chunk stages no partition
     // and leaves no schema to read back: its plan is removes only
-    if (chunkIds(s"$staging/closed").nonEmpty) {
-      val stagedPayloads = readTier(s"$staging/closed")
-      stagedPayloads.select("chunk", "series_id").distinct()
-        .join(labels, Seq("chunk", "series_id"))
-        .write.partitionBy("chunk").parquet(s"$staging/closed_catalog")
-      if (withRollups)
-        // event_id surrogate — sample timestamps are unique per series,
-        // so first/last struct order never consults it
-        rollup1h(
-          Gorilla.unpack(stagedPayloads)
-            .withColumn("chunk", expr(s"ts_us div $chunkUs"))
-            .withColumn("event_id", lit(0L)))
-          .write.partitionBy("chunk").parquet(s"$staging/rollup")
-    }
+    if (withRollups && chunkIds(s"$staging/closed").nonEmpty)
+      rollupOfPayloads(readTier(s"$staging/closed"))
+        .write.partitionBy("chunk").parquet(s"$staging/rollup")
     val fs = hfs
     swap.commit(for {
-      tier <- Seq("closed", "closed_catalog") ++ (if (withRollups) Seq("rollup") else Nil)
+      tier <- "closed" +: (if (withRollups) Seq("rollup") else Nil)
       c <- affected.toSeq.sorted
       d = s"$tier/chunk=$c"
     } yield
@@ -1176,8 +1184,9 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * chunks take the NORMAL append path; samples routed to
     * already-CLOSED chunks merge into the at-rest tier by rewriting
     * only the receiving (chunk, series) payloads — untouched series'
-    * payloads carry over byte-identical, new series join the chunk
-    * catalog, and affected chunks' rollups rebuild wholesale
+    * payloads carry over byte-identical, a series new to its chunk
+    * gets a payload row with the late rows' labels, and affected
+    * chunks' rollups rebuild wholesale
     * ([[restageClosed]], the rewrite [[deleteSeries]] uses). In the
     * closed-chunk merge exact duplicate samples collapse, so re-running
     * the same backfill of late data is a no-op; rows routed to live
@@ -1199,7 +1208,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     val closedIds = chunkIds(closedPath)
     if (closedIds.isEmpty) return
     // persisted for the verb's duration: the affected-chunk collect,
-    // the touched semi/anti joins and both unions below each re-ran
+    // the touched semi/anti joins and the union below each re-ran
     // the source scan + routing otherwise (5 passes; r12 optimization)
     val late = routed.filter(col("chunk").isInCollection(closedIds))
       .select("series_id", "event_type", "user_id", "chunk", "ts_us", "value")
@@ -1209,53 +1218,30 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
       val affected = late.select("chunk").distinct()
         .collect().map(_.getLong(0)).toSet
       if (affected.isEmpty) return
-      val inAffected = (df: DataFrame) => df.filter(col("chunk").isInCollection(affected))
       val touched = late.select("chunk", "series_id").distinct()
-      val payloads = inAffected(readTier(closedPath))
-      val untouched = payloads.join(touched, Seq("chunk", "series_id"), "left_anti")
-        .select("series_id", "chunk", "payload")
+      val payloads = readTier(closedPath).filter(col("chunk").isInCollection(affected))
       // receiving series: decode, union the late rows, collapse exact
-      // duplicates (idempotence), re-pack (chunk re-derives from ts —
-      // samples never cross their chunk)
-      val merged = Gorilla.unpack(
-          payloads.join(touched, Seq("chunk", "series_id"), "left_semi"))
-        .withColumn("chunk", expr(s"ts_us div $chunkUs"))
-        .select("series_id", "chunk", "ts_us", "value")
-        .unionByName(late.select("series_id", "chunk", "ts_us", "value"))
-        .distinct()
-      val newPayloads = untouched
-        .unionByName(Gorilla.packWithChunk(merged)
-          .select("series_id", "chunk", "payload"))
-      // labels from the old catalog rows ∪ the late rows' own (a
-      // backfilled series may be NEW to its chunk); label tuples
-      // determine series_id, so the union-distinct is exactly one row
-      // per (chunk, series)
-      val labels = inAffected(readTier(catalogPath))
-        .select("chunk", "series_id", "event_type", "user_id")
-        .unionByName(late.select("chunk", "series_id", "event_type", "user_id"))
-        .distinct()
-      restageClosed(affected, newPayloads, labels)
+      // duplicates (idempotence; label tuples determine series_id), re-pack
+      val merged = samplesOf(payloads.join(touched, Seq("chunk", "series_id"), "left_semi"))
+        .unionByName(late).distinct()
+      restageClosed(affected, payloads.join(touched, Seq("chunk", "series_id"), "left_anti")
+        .unionByName(Gorilla.packBy(merged, "series_id", "event_type", "user_id", "chunk")))
     } finally late.unpersist(false)
   }
 
   /** Federated query: closed chunks (compressed) ∪ live chunks not
     * yet closed — the reference's merge across current + secondary
-    * chunks. Output: (series_id, ts_us, value, event_type, user_id);
-    * live rows carry their own labels and closed rows take theirs
-    * from the per-chunk catalog, so no store-wide catalog is read. An
-    * empty store answers an empty frame. */
+    * chunks, each tier planned only when the range touches one of its
+    * chunks ([[federated]]). Output: (series_id, ts_us, value,
+    * event_type, user_id); live and closed rows both carry their own
+    * labels, so no catalog is read. An empty store answers an empty
+    * frame. */
   def queryAll(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap() // before the listing — a mid-swap crash can
     // leave the whole closed dir in staging, which would misread as live-only
     assertRawServable(startUs)
-    val closedIds = chunkIds(closedPath)
-    if (closedIds.isEmpty) return query(ms, startUs, endUs)
-    // fully compacted stores have no raw files left — reading the
-    // empty live root has no footer to plan from, and lingering raw
-    // dirs of closed chunks are excluded anyway
-    if (liveChunkIdsListed().forall(closedIds)) return queryClosed(ms, startUs, endUs)
-    liveMatched(ms, startUs, endUs, closedIds).select(SampleCols.map(col): _*)
-      .unionByName(queryClosed(ms, startUs, endUs))
+    federated(startUs, endUs)(queryClosed(ms, startUs, endUs),
+      liveMatched(ms, startUs, endUs, _).select(SampleCols.map(col): _*), emptySamples)
   }
 }
 

@@ -161,11 +161,7 @@ object Gorilla {
     * ([[ChunkStore.closeChunk]] packs one chunk's rows at a time) and
     * the only safe one for an unbounded-retention series at 100 TB. */
   def packChunked(samples: DataFrame, chunkUs: Long): DataFrame =
-    packWithChunk(samples.withColumn("chunk", expr(s"ts_us div $chunkUs")))
-
-  /** [[packChunked]] for rows that already carry a `chunk` column
-    * (e.g. the live store): one payload per (series, chunk). */
-  def packWithChunk(samples: DataFrame): DataFrame = packBy(samples, "series_id", "chunk")
+    packBy(samples.withColumn("chunk", expr(s"ts_us div $chunkUs")), "series_id", "chunk")
 
   /** One payload per distinct `keys` tuple: (keys…, payload). */
   def packBy(samples: DataFrame, keys: String*): DataFrame =

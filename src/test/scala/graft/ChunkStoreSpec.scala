@@ -321,10 +321,14 @@ class ChunkStoreSpec extends SparkSpec {
     // raw-retire days 0 and 1
     val retired = store.retireRaw(t0 + 2 * dayUs)
     assert(retired == Set(c0, c0 + 1), retired)
-    // payload dirs GONE; catalog and rollup partitions SURVIVE
+    // payload dirs GONE; rollup partitions SURVIVE with their labels,
+    // and the catalog still lists a series only the retired days hold
     assert(!new java.io.File(s"$dir/closed/chunk=$c0").exists())
-    assert(new java.io.File(s"$dir/closed_catalog/chunk=$c0").exists())
     assert(new java.io.File(s"$dir/rollup/chunk=$c0").exists())
+    assert(spark.read.parquet(s"$dir/rollup").filter(col("chunk") === c0)
+      .select("event_type", "user_id").as[(String, Long)].collect().toSet == Set(("click", 1L)))
+    assert(store.catalog().filter(col("event_type") === "purchase")
+      .select("user_id").as[Long].collect().toSeq == Seq(1L))
     // rollup tier serves the WHOLE history, including retired days
     val roll = store.queryRollup(Seq(MatchEq("event_type", "click")), t0, t0 + 3 * dayUs)
     assert(roll.agg(sum(col("sum_value"))).collect()(0).getDouble(0) == 70.0)
@@ -355,7 +359,7 @@ class ChunkStoreSpec extends SparkSpec {
     // full retirement still removes the rollup-only partitions
     reopened.retire(t0 + dayUs)
     assert(!new java.io.File(s"$dir/rollup/chunk=$c0").exists())
-    assert(!new java.io.File(s"$dir/closed_catalog/chunk=$c0").exists())
+    assert(reopened.catalogInRange(t0, t0 + dayUs - 1).count() == 0)
   }
 
   test("cloneTo: a hardlink clone mutates independently of its source") {
@@ -430,6 +434,9 @@ class ChunkStoreSpec extends SparkSpec {
     java.nio.file.Files.write(crcSkip.toPath, Array[Byte](1, 2, 3))
     val snap = store.snapshot(Some("pre-delete"))
     assert(snap == "pre-delete" && store.listSnapshots() == Seq("pre-delete"))
+    // the snapshot holds the two closed tiers and its manifest
+    assert(new java.io.File(s"$dir/snapshots/pre-delete").list().filterNot(_.startsWith(".")).toSet ==
+      Set("closed", "rollup", "manifest.json"))
     val snapChunk = new java.io.File(
       s"$dir/snapshots/pre-delete/closed/${chunkDir.getName}")
     assert(new java.io.File(snapChunk, ".meta-marker").exists(),
@@ -544,7 +551,7 @@ class ChunkStoreSpec extends SparkSpec {
     assert(rows(store).size == 4)
     val swap = swapAt(dir, "restore")
     val staging = swap.begin()
-    val tiers = Seq("closed", "closed_catalog", "rollup")
+    val tiers = Seq("closed", "rollup")
     tiers.foreach(t => org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(s"$dir/snapshots/s/$t"), new java.io.File(s"$staging/$t")))
     val plan = tiers.map(t => StagedSwap.Swap(t, t))
@@ -730,19 +737,18 @@ class ChunkStoreSpec extends SparkSpec {
     assert(!new java.io.File(dirM, "_delete_pending").exists())
 
     // 2) crash-state matrix: stage completed, swap interrupted after
-    //    each tier of the day-1 chunk (payloads → catalog → rollup, the
-    //    code's swap order). Build each state by snapshotting the
-    //    pre-delete partition dirs, running the real delete, then
-    //    restoring the not-yet-swapped tiers — re-running the SAME
-    //    delete must heal every state.
+    //    each tier of the day-1 chunk (payloads → rollup, the code's
+    //    swap order). Build each state by snapshotting the pre-delete
+    //    partition dirs, running the real delete, then restoring the
+    //    not-yet-swapped tiers — re-running the SAME delete must heal
+    //    every state.
     for (restoredTiers <- Seq(
-        Seq("closed", "closed_catalog", "rollup"), // crashed before any swap of this chunk
-        Seq("closed_catalog", "rollup"),           // payloads swapped, rest old
-        Seq("rollup"))) {                          // payloads+catalog swapped, rollup old
+        Seq("closed", "rollup"), // crashed before any swap of this chunk
+        Seq("rollup"))) {        // payloads swapped, rollup old
       val (dir, store) = freshStore()
       val c1 = (t0 + dayUs) / dayUs // the day-1 chunk's absolute id
       val snap = Files.createTempDirectory("graft_delete_snap").toString
-      for (t <- Seq("closed", "closed_catalog", "rollup")) {
+      for (t <- Seq("closed", "rollup")) {
         val src = new java.io.File(s"$dir/$t/chunk=$c1")
         assert(src.exists(), s"expected pre-delete $t/chunk=$c1")
         org.apache.commons.io.FileUtils.copyDirectory(src, new java.io.File(s"$snap/$t"))
@@ -865,21 +871,39 @@ class ChunkStoreSpec extends SparkSpec {
     assert(a == Seq(10.0, 20.0, 30.0), a)
   }
 
-  test("remote-read and range-query plans scan the live root once on a mixed store") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+  /** Every node of a physical plan: adaptive stages, cached relations
+    * and planned subqueries (a dynamic-pruning scan included) opened up. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
+      // before preparation a subquery can still hold a logical plan
+      case other => other +: (other.children ++ other.subqueries.asInstanceOf[Seq[Any]]
+        .collect { case q: org.apache.spark.sql.execution.SparkPlan => q }).flatMap(planNodes)
     }
+  }
+
+  /** The tier roots (`live`, `closed`, `rollup`) a frame's physical
+    * plan scans, as planned: before adaptive execution drops a branch
+    * that ran empty. */
+  private def scannedTiers(df: org.apache.spark.sql.DataFrame): Set[String] =
+    planNodes(df.queryExecution.sparkPlan).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.getName)
+    }.flatten.toSet
+
+  test("remote-read and range-query plans scan the live root once on a mixed store") {
     def liveScans(df: org.apache.spark.sql.DataFrame): Int = {
       assert(df.collect().nonEmpty)
-      scans(df.queryExecution.executedPlan)
-        .count(_.relation.location.rootPaths.exists(_.getName == "live"))
+      planNodes(df.queryExecution.executedPlan).count {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.getName == "live")
+        case _ => false
+      }
     }
     val store = labeledStore("graft_lbl_plan", 3)
     val read = graft.sources.RemoteRead.seriesFrame(store,
@@ -889,6 +913,108 @@ class ChunkStoreSpec extends SparkSpec {
       """sum by (event_type) (sum_over_time({event_type=~"click|purchase"}[1d]))""",
       day0 + dayUs, day0 + 5 * dayUs, dayUs)
     assert(liveScans(range) == 1)
+  }
+
+  test("a read plans only the tiers its range touches, and a closed read joins nothing") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val store = labeledStore("graft_tier_skip", 3) // days 0-2 closed, day 4 live
+    val full = store.queryAll(Nil, day0, day0 + 10 * dayUs)
+    val ms = Seq[Matcher](MatchRe("event_type", "click|view"))
+    val liveDay = (day0 + 4 * dayUs, day0 + 5 * dayUs - 1)
+    val closedDays = (day0, day0 + 3 * dayUs - 1)
+    for (((lo, hi), tiers) <- Seq(liveDay -> Set("live"), closedDays -> Set("closed"),
+           (day0 + dayUs, day0 + 5 * dayUs) -> Set("live", "closed"))) {
+      assert(scannedTiers(store.queryAll(ms, lo, hi)) == tiers, (lo, hi))
+      assert(scannedTiers(store.queryEncoded(ms, lo, hi)) == tiers, (lo, hi))
+    }
+    for ((lo, hi) <- Seq(liveDay, closedDays, (day0 + dayUs, day0 + 5 * dayUs),
+           (day0 + 20 * dayUs, day0 + 21 * dayUs), (day0 + 30 * dayUs, day0 + 70 * dayUs / 2)))
+      assertSameRows(store.queryAll(Nil, lo, hi), full.filter($"ts_us".between(lo, hi)))
+    // a closed read filters the payload and rollup rows' own labels
+    for (df <- Seq(store.queryAll(ms, closedDays._1, closedDays._2),
+           store.queryRollup(ms, closedDays._1, closedDays._2))) {
+      assert(!df.isEmpty)
+      val nodes = planNodes(df.queryExecution.executedPlan)
+      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), nodes.mkString("\n"))
+      assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]), nodes.mkString("\n"))
+    }
+    // an out-of-range read answers empty in the store's own label types
+    val recorded = new ChunkStore(spark, Files.createTempDirectory("graft_tier_rule").toString,
+      chunkMs = 86400000L, rollupOnClose = true)
+    assert(graft.promql.PromQL.recordRule(labeledStore("graft_tier_src", 0), recorded,
+      "job:hits:sum1d", """sum by (user_id) (sum_over_time({event_type=~"click|purchase"}[1d]))""",
+      day0 + dayUs, day0 + 5 * dayUs, dayUs) > 0)
+    for (closeBelow <- Seq(day0 + 3 * dayUs, day0 + 10 * dayUs)) { // mixed, then closed only
+      recorded.closeChunksBelow(closeBelow)
+      for (df <- Seq(recorded.queryAll(Nil, day0 + 20 * dayUs, day0 + 21 * dayUs),
+             recorded.queryEncoded(Nil, day0 + 20 * dayUs, day0 + 21 * dayUs))) {
+        assert(df.isEmpty)
+        assert(df.schema("user_id").dataType == StringType)
+      }
+    }
+  }
+
+  test("backfillRollups gives chunks closed before rollupOnClose labeled rollups") {
+    val plain = labeledStore("graft_backfill_rollups", 0)
+    val dir = plain.path
+    new ChunkStore(spark, dir, chunkMs = 86400000L).closeChunksBelow(day0 + 3 * dayUs)
+    assert(!new java.io.File(s"$dir/rollup").exists())
+    val ms = Seq[Matcher](MatchEq("event_type", "click"))
+    val missing = intercept[IllegalArgumentException](plain.queryRollup(ms, day0, day0 + 3 * dayUs))
+    assert(missing.getMessage.contains("no rollups"), missing.getMessage)
+    plain.backfillRollups()
+    // the same answer as a store that wrote its rollups on close, but
+    // for the event_id inside first/last_point, which a decode cannot
+    // recover
+    val closedWithRollups = labeledStore("graft_rollups_on_close", 3)
+    def served(s: ChunkStore) =
+      s.queryRollup(ms, day0, day0 + 3 * dayUs).drop("first_point", "last_point")
+    assert(!served(plain).isEmpty)
+    assertSameRows(served(plain), served(closedWithRollups))
+  }
+
+  /** Rewrite closed chunk `c` of the store at `dir` in the layout an
+    * earlier version wrote: payload rows without labels, and the labels
+    * in `closed_catalog/chunk=<c>`. */
+  private def toEarlierClosedFormat(dir: String, c: Long): Unit = {
+    val onDisk = spark.read.parquet(s"$dir/closed/chunk=$c")
+    val labeled = spark.createDataFrame(onDisk.collectAsList(), onDisk.schema) // off disk before the delete
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/closed/chunk=$c"))
+    labeled.select("series_id", "payload").write.parquet(s"$dir/closed/chunk=$c")
+    labeled.select("series_id", "event_type", "user_id").write.parquet(s"$dir/closed_catalog/chunk=$c")
+  }
+
+  test("a store or snapshot an earlier version closed chunks in refuses reads, writes and restores") {
+    import Days._
+    def refuses(root: String)(body: => Any): Unit = {
+      val e = intercept[java.io.IOException](body)
+      assert(e.getMessage.contains(s"$root/closed_catalog") &&
+        e.getMessage.contains("earlier version"), e.getMessage)
+    }
+    val (dir, store) = Days.build("graft_old_format")
+    toEarlierClosedFormat(dir, t0 / dayUs) // day 0 old, days 1-2 as this version writes them
+    val (lo, hi) = (t0, t0 + 4 * dayUs)
+    refuses(dir)(store.queryAll(Nil, lo, hi))
+    refuses(dir)(store.queryAll(Nil, t0 + dayUs, t0 + 2 * dayUs)) // a new-format chunk only
+    refuses(dir)(store.queryEncoded(Nil, lo, hi))
+    refuses(dir)(store.queryRollup(Nil, lo, hi))
+    refuses(dir)(store.catalog())
+    refuses(dir)(store.deleteSeries(Seq(MatchEq("event_type", "click")), lo, hi))
+    refuses(dir)(store.backfill(Series.samples(Seq((9L, (t0 + 2 * hUs) * 1000L, 1L, "click", 3.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value"))))
+    refuses(dir)(store.snapshot(Some("s")))
+    assert(!new java.io.File(dir, "_delete_staging").exists() && store.listSnapshots().isEmpty)
+    // a snapshot an earlier version took: open and restore refuse, and
+    // the restore leaves the store as it was
+    val (dir2, current) = Days.build("graft_old_snapshot")
+    val before = rows(current)
+    current.snapshot(Some("old"))
+    toEarlierClosedFormat(s"$dir2/snapshots/old", t0 / dayUs)
+    refuses(s"$dir2/snapshots/old")(current.openSnapshot("old"))
+    refuses(s"$dir2/snapshots/old")(current.restoreSnapshot("old"))
+    assert(noSwapLeft(dir2))
+    assert(rows(current) == before)
   }
 
   /** The Spark jobs the calling thread submits while `body` runs. */
