@@ -1,10 +1,11 @@
 package graft.sources
 
 import java.net.InetSocketAddress
+import java.nio.file.{Files, StandardCopyOption}
 import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -27,10 +28,15 @@ import graft.tsdb.ChunkStore
   *
   * **Write path.** A remote-write request is decoded once at the
   * boundary (a malformed payload answers 400 before anything durable
-  * happens), then its raw bytes are renamed atomically into the spool
-  * `<store.path>/_spool` — O(payload) per request, no Spark work, no
-  * lock. [[start]] launches [[drain]], a `binaryFile` stream over the
-  * spool into [[graft.streaming.StreamIngest.startStoreSink]]
+  * happens), then its raw bytes become one file in the spool
+  * `<store.path>/_spool`: a `java.nio` write to a hidden temp name,
+  * then one atomic rename into place — O(payload) per request, no
+  * Spark work, no lock, no child process. The store path must be on
+  * the local filesystem (the constructor refuses any other): the
+  * server, the spool and the drain are one process. Neither the write
+  * nor the drain's appends fsync. [[start]] launches [[drain]], a
+  * `binaryFile` stream over the spool into
+  * [[graft.streaming.StreamIngest.startStoreSink]]
   * (checkpoint `<store.path>/_spool_checkpoint`): ONE batch-scoped chunk
   * append per micro-batch, whatever the request count. The drain runs
   * in a session of its own, which lists one trigger's spool files on
@@ -80,28 +86,33 @@ final class HttpEndpoint(
   /** Where accepted writes wait for [[drain]]: under the store path, so
     * the whole durable state moves as one directory. */
   val spoolDir: String = s"${store.path}/_spool"
+  // the handler writes the spool through java.nio, not Hadoop's local
+  // create, which without the native library forks `chmod` for the file
+  // and again for its .crc sidecar on every request; a schemeless path
+  // is on the default filesystem. Checked before the server binds.
+  private val spool: java.nio.file.Path = {
+    val uri = new Path(spoolDir).toUri
+    val scheme = Option(uri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    require(scheme == "file",
+      s"HttpEndpoint serves a store on the local filesystem only, not ${store.path}")
+    java.nio.file.Paths.get(uri.getPath)
+  }
   private val spoolSeq = new java.util.concurrent.atomic.AtomicLong()
-  // Hadoop FS, not java.nio: the spool rides the same filesystem
-  // abstraction as the store, so an hdfs:///s3a:// spool dir works on
-  // a real cluster (rename is atomic on HDFS/local; an object store
-  // would want a direct-write-with-unique-name variant)
-  private lazy val spoolFs =
-    new Path(spoolDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Spool one validated payload: write to a dot-prefixed temp name
     * (hidden from Spark's file listing) then atomically rename into
     * place — the file source must never observe a half-written file.
     * Names are unique (time + sequence + random) and lexically
     * time-ordered for human debugging; the source tracks files by
-    * path, so uniqueness is what prevents replay confusion. */
+    * path, so uniqueness is what prevents replay confusion. A failed
+    * write or move is an IOException: a 500 the client retries. */
   private def spoolWrite(body: Array[Byte]): Unit = {
     val name = f"w-${System.currentTimeMillis()}%013d-${spoolSeq.incrementAndGet()}%06d-" +
       java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(spoolDir, s".$name.tmp")
-    val out = spoolFs.create(tmp, true)
-    try out.write(body) finally out.close()
-    if (!spoolFs.rename(tmp, new Path(spoolDir, s"$name.bin")))
-      throw new java.io.IOException(s"spool rename failed for $name under $spoolDir")
+    val tmp = spool.resolve(s".$name.tmp")
+    Files.write(tmp, body)
+    Files.move(tmp, spool.resolve(s"$name.bin"), StandardCopyOption.ATOMIC_MOVE)
   }
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val workers = Executors.newFixedThreadPool(workerNum)
@@ -123,7 +134,12 @@ final class HttpEndpoint(
   def start(): Int = {
     // the source lists the directory immediately; make it exist before
     // the first request ever spools a file
-    spoolFs.mkdirs(new Path(spoolDir))
+    Files.createDirectories(spool)
+    // a crash between a write and its rename leaves a hidden temp file
+    // that the drain never reads (and, from an earlier version's Hadoop
+    // write, its .crc); one endpoint per store path, so none is in flight
+    val leftovers = Files.newDirectoryStream(spool, ".*.{tmp,tmp.crc}")
+    try leftovers.forEach(f => Files.delete(f)) finally leftovers.close()
     // Exactly-once: the file source records processed files in the
     // checkpoint and the batch append is replay-idempotent. `cleanSource
     // = delete` removes committed spool files, so the directory stays

@@ -119,16 +119,14 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * user_id). */
   def queryRollup(ms: Seq[Matcher], startUs: Long, endUs: Long): DataFrame = {
     assertNoPendingClosedSwap()
-    require(exists(rollupPath),
-      s"ChunkStore at $path has no rollups — they are written on chunk close " +
-        "when the store is built with rollupOnClose=true; for raw-resolution " +
-        "data use queryAll")
     // mixed-generation guard: a store whose chunks were closed BEFORE
     // rollupOnClose was enabled has closed payloads with no rollup
     // partition — serving the range would silently omit that history
     // (the same silent-partial-answer class the MinhashStore parameter
     // stamp exists to prevent). Both id sets are directory listings,
-    // never a Spark job, so the check is O(chunks) metadata.
+    // never a Spark job, so the check is O(chunks) metadata. It runs
+    // first: a store whose every closed chunk predates its rollups has
+    // no rollup tier at all, and backfillRollups() is its fix.
     val rolled = chunkIds(rollupPath)
     val missing = chunkIds(closedPath)
       .filter(c => c >= startUs / chunkUs && c <= endUs / chunkUs)
@@ -138,6 +136,10 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
         s"ChunkStore at $path: closed chunks ${missing.toSeq.sorted.mkString(",")} " +
           "in the query range have no rollups (closed before rollupOnClose was " +
           "enabled) — run backfillRollups() once, or query raw via queryAll")
+    require(exists(rollupPath),
+      s"ChunkStore at $path has no rollups — they are written on chunk close " +
+        "when the store is built with rollupOnClose=true; for raw-resolution " +
+        "data use queryAll")
     if (rolled.isEmpty) // every closed chunk deleted: no rows
       return rollup1h(emptyOf("chunk" -> LongType, "series_id" -> StringType,
           "ts_us" -> LongType, "value" -> DoubleType, "event_id" -> LongType,

@@ -961,8 +961,9 @@ class ChunkStoreSpec extends SparkSpec {
     new ChunkStore(spark, dir, chunkMs = 86400000L).closeChunksBelow(day0 + 3 * dayUs)
     assert(!new java.io.File(s"$dir/rollup").exists())
     val ms = Seq[Matcher](MatchEq("event_type", "click"))
-    val missing = intercept[IllegalArgumentException](plain.queryRollup(ms, day0, day0 + 3 * dayUs))
-    assert(missing.getMessage.contains("no rollups"), missing.getMessage)
+    // every closed chunk lacks its rollups: the refusal names the fix
+    val missing = intercept[IllegalStateException](plain.queryRollup(ms, day0, day0 + 3 * dayUs))
+    assert(missing.getMessage.contains("backfillRollups()"), missing.getMessage)
     plain.backfillRollups()
     // the same answer as a store that wrote its rollups on close, but
     // for the event_id inside first/last_point, which a decode cannot

@@ -650,6 +650,57 @@ class HttpEndpointSpec extends SparkSpec {
     } finally endpoint.stop()
   }
 
+  test("a spooled write is one file holding the request body; a store off the local filesystem is refused") {
+    val storeDir = Files.createTempDirectory("graft_http_onefile").toString
+    val endpoint = new HttpEndpoint(spark, new ChunkStore(spark, storeDir))
+    val port = endpoint.start()
+    try {
+      endpoint.drain.stop()
+      val spool = new java.io.File(endpoint.spoolDir)
+      val before = spool.list().toSet
+      val body = RemoteWrite.encode(Seq(
+        (Map("event_type" -> "click", "user_id" -> "1"), Seq((t0, 1.0), (t0 + 60000L, 2.0)))))
+      assert(post(port, "/api/v1/write", body)._1 == 200)
+      val added = spool.listFiles().filterNot(f => before(f.getName))
+      assert(added.length == 1 && added.head.getName.endsWith(".bin"), added.mkString(","))
+      assert(java.util.Arrays.equals(Files.readAllBytes(added.head.toPath), body))
+      assert(!spool.list().exists(n => n.endsWith(".crc") || n.endsWith(".tmp")), spool.list().mkString(","))
+    } finally endpoint.stop()
+
+    // refused at construction, before the listener binds its port
+    val free = new java.net.ServerSocket(0)
+    val port2 = try free.getLocalPort finally free.close()
+    val remote = "hdfs://nowhere/graft_store"
+    val e = intercept[IllegalArgumentException](
+      new HttpEndpoint(spark, new ChunkStore(spark, remote), port = port2))
+    assert(e.getMessage.contains(remote), e.getMessage)
+    val rebind = new java.net.ServerSocket(port2, 0, java.net.InetAddress.getByName("127.0.0.1"))
+    rebind.close()
+  }
+
+  test("start() sweeps the temp files a crash left in the spool; writes still drain and read back") {
+    val storeDir = Files.createTempDirectory("graft_http_sweep").toString
+    val spool = new java.io.File(storeDir, "_spool")
+    assert(spool.mkdirs())
+    // a kill between the temp write and its rename, under this version
+    // and under an earlier one whose Hadoop write left a .crc beside it
+    val leftovers = Seq(".w-0000000000001-000001-deadbeef.tmp", "..w-0000000000001-000001-deadbeef.tmp.crc")
+      .map(new java.io.File(spool, _))
+    leftovers.foreach(f => Files.write(f.toPath, Array[Byte](1, 2, 3)))
+    val store = new ChunkStore(spark, storeDir)
+    val endpoint = new HttpEndpoint(spark, store)
+    val port = endpoint.start()
+    try {
+      assert(leftovers.forall(!_.exists()), spool.list().mkString(","))
+      for (u <- 0 until 3)
+        assert(post(port, "/api/v1/write", RemoteWrite.encode(Seq(
+          (Map("event_type" -> "swept", "user_id" -> u.toString), Seq((t0, u * 1.0))))))._1 == 200)
+      endpoint.drain.processAllAvailable()
+      assert(store.queryAll(Seq(MatchEq("event_type", "swept")), t0 * 1000L,
+        (t0 + 60000L) * 1000L).count() == 3)
+    } finally endpoint.stop()
+  }
+
   test("format_query pretty-prints; status flags/runtimeinfo answer the handshake shapes") {
     val storeDir = Files.createTempDirectory("graft_http_fmt").toString
     val store = new ChunkStore(spark, storeDir, chunkMs = 86400000L)
