@@ -987,11 +987,9 @@ object SparkEntry {
       // events — hash-equality proves chunk routing, the ingest guard,
       // the codec round-trip, label matchers on closed rows, and the
       // live∪closed federation in one shot.
-      // filesPerChunkPerAppend=2: a BULK backfill spanning ~31 daily
-      // chunks gets its parallelism from the chunk count (31×2 write
-      // tasks); the salt knob exists for the streaming case where one
-      // micro-batch spans 1-2 chunks (default 8). Fewer salts here =
-      // fewer, bigger parquet files — the bulk-load discipline.
+      // filesPerChunkPerAppend=2: the BULK load over ~31 daily chunks
+      // writes in 2 tasks, one file per chunk each — fewer, bigger
+      // parquet files (default 8, for micro-batches over 1-2 chunks).
       val store = sharedStore(s, dir, "closed")
       store.queryAll(Seq(MatchEq("event_type", "view")), 1704067200000000L, T2)
         .select("series_id", "ts_us", "value")

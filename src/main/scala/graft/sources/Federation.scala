@@ -2,7 +2,7 @@ package graft.sources
 
 import java.net.{HttpURLConnection, URI}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tsdb.Matcher
@@ -65,12 +65,7 @@ object Federation {
     * surrogate — directly consumable by TsOps / PromQL. */
   def readSamples(spark: SparkSession, url: String, ms: Seq[Matcher],
                   startUs: Long, endUs: Long, timeSlices: Int = 1): DataFrame =
-    read(spark, url, ms, startUs, endUs, timeSlices)
-      .withColumn("series_id", canonicalSeriesId("labels"))
-      .withColumn("event_type", coalesce(col("labels")("event_type"), lit("")))
-      .withColumn("user_id", coalesce(col("labels")("user_id"), lit("")))
-      .withColumn("event_id", lit(0L))
-      .select("series_id", "event_type", "user_id", "ts_us", "event_id", "value")
+    asSamples(read(spark, url, ms, startUs, endUs, timeSlices))
 
   /** [[read]] over the STREAMED wire: each slice task negotiates
     * `accepted_response_types` and decodes the chunked Gorilla frames
@@ -105,12 +100,7 @@ object Federation {
     * [[readSamples]] twin at full us resolution. */
   def readSamplesStreamed(spark: SparkSession, url: String, ms: Seq[Matcher],
                           startUs: Long, endUs: Long, timeSlices: Int = 1): DataFrame =
-    readStreamed(spark, url, ms, startUs, endUs, timeSlices)
-      .withColumn("series_id", canonicalSeriesId("labels"))
-      .withColumn("event_type", coalesce(col("labels")("event_type"), lit("")))
-      .withColumn("user_id", coalesce(col("labels")("user_id"), lit("")))
-      .withColumn("event_id", lit(0L))
-      .select("series_id", "event_type", "user_id", "ts_us", "event_id", "value")
+    asSamples(readStreamed(spark, url, ms, startUs, endUs, timeSlices))
 
   /** Scrape a Prometheus TEXT-EXPOSITION target once (`/federate`, a
     * node exporter, any /metrics page) — the PULL half of the
@@ -134,8 +124,12 @@ object Federation {
   /** [[scrape]] projected onto the engine's sample model (the
     * [[readSamples]] twin). */
   def scrapeSamples(spark: SparkSession, url: String, defaultTsUs: Long): DataFrame =
-    scrape(spark, url, defaultTsUs)
-      .withColumn("series_id", canonicalSeriesId("labels"))
+    asSamples(scrape(spark, url, defaultTsUs))
+
+  /** Fetched (labels, ts_us, value) rows as the engine's sample frame. */
+  private def asSamples(fetched: DataFrame): DataFrame =
+    fetched
+      .withColumn("series_id", RemoteWrite.seriesIdOfLabels(col("labels")))
       .withColumn("event_type", coalesce(col("labels")("event_type"), lit("")))
       .withColumn("user_id", coalesce(col("labels")("user_id"), lit("")))
       .withColumn("event_id", lit(0L))
@@ -280,13 +274,6 @@ object Federation {
       }
       .collect().sum // one count per partition — bounded by task count
   }
-
-  /** md5 over the sorted `k=v` join — the dynamic-map twin of
-    * [[graft.tsdb.Series.canonical]] (same bytes, same id, so
-    * federated series ids equal the local store's). */
-  def canonicalSeriesId(labelsCol: String): Column =
-    md5(concat_ws(",",
-      expr(s"transform(array_sort(map_entries($labelsCol)), e -> concat(e.key, '=', e.value))")))
 
   /** One slice fetch: POST the snappy/protobuf ReadRequest, decode
     * the response, flatten to samples. Runs INSIDE an executor task.

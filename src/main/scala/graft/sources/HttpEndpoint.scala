@@ -140,6 +140,9 @@ final class HttpEndpoint(
     // write, its .crc); one endpoint per store path, so none is in flight
     val leftovers = Files.newDirectoryStream(spool, ".*.{tmp,tmp.crc}")
     try leftovers.forEach(f => Files.delete(f)) finally leftovers.close()
+    // a crash inside a drain compaction's commit would leave live reads
+    // refusing until the drain's next compaction; finish it now
+    store.healBatchCompaction()
     // Exactly-once: the file source records processed files in the
     // checkpoint and the batch append is replay-idempotent. `cleanSource
     // = delete` removes committed spool files, so the directory stays

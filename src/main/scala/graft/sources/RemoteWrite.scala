@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * protobuf runtime is needed; snappy block decompression comes from
   * snappy-java, already on the Spark classpath. Decoding is a
   * per-payload closure at the ingest boundary (genuinely imperative
-  * byte work, the same placement as the Gorilla codec), after which
-  * everything is columnar: explode to samples, derive the canonical
-  * series id, and the rows are [[graft.tsdb.Series.samples]]-shaped —
-  * ready for a [[graft.tsdb.ChunkStore]].
+  * byte work, the same placement as the Gorilla codec) that emits
+  * [[graft.tsdb.Series.samples]]-shaped rows with the canonical series
+  * id — ready for a [[graft.tsdb.ChunkStore]].
   */
 object RemoteWrite {
 
@@ -220,8 +219,6 @@ object RemoteWrite {
 
   // ──────────────────────── DataFrame side ────────────────────────
 
-  private val decodeUdf = udf { (payload: Array[Byte]) => decode(payload) }
-
   /** Canonical sorted `k=v` series identity of a label MAP column —
     * the same hash [[graft.tsdb.Series.seriesId]] derives from fixed
     * label columns (reference src/common/label.rs get_hash). */
@@ -230,32 +227,38 @@ object RemoteWrite {
       transform(array_sort(map_entries(labels)),
         e => concat(e.getField("key"), lit("="), e.getField("value"))), ","))
 
-  /** payloads(`payloadCol` BINARY) → generic sample rows:
-    * (series_id, labels MAP, ts_us, value). Decode is one bounded
-    * closure per payload; everything after is columnar explodes. */
-  def toSamples(payloads: DataFrame, payloadCol: String = "payload"): DataFrame =
-    payloads
-      .select(explode(decodeUdf(col(payloadCol))).as("t"))
-      .select(col("t._1").as("labels"), explode(col("t._2")).as("s"))
-      .select(
-        seriesIdOfLabels(col("labels")).as("series_id"),
-        col("labels"),
-        (col("s._1") * 1000L).as("ts_us"), // remote-write carries ms
-        col("s._2").as("value"))
+  /** [[seriesIdOfLabels]] of one label set, in process: keys sort by
+    * their UTF-8 bytes, as Spark's string order does (not UTF-16's). */
+  def seriesIdOf(labels: Map[String, String]): String = {
+    val byKey = labels.toSeq.sortWith((a, b) =>
+      java.util.Arrays.compareUnsigned(a._1.getBytes("UTF-8"), b._1.getBytes("UTF-8")) < 0)
+    org.apache.commons.codec.digest.DigestUtils.md5Hex(
+      byKey.map { case (k, v) => s"$k=$v" }.mkString(",").getBytes("UTF-8"))
+  }
 
-  /** Specialization onto this repo's event label schema
-    * (event_type, user_id): exactly [[graft.tsdb.Series.samples]]'s
-    * shape, so matchers, ChunkStore and every TSDB operator work
-    * unchanged on remote-written data. The synthetic event_id is a
-    * deterministic row hash (remote-write has no event id). */
-  def toEventSamples(payloads: DataFrame, payloadCol: String = "payload"): DataFrame =
-    toSamples(payloads, payloadCol)
+  /** payloads(`payloadCol` BINARY) → exactly [[graft.tsdb.Series.samples]]'s
+    * shape, so ChunkStore and every TSDB operator work unchanged on
+    * remote-written data. One bounded closure per payload emits flat
+    * rows, hashing each series id once; the `user_id` cast and the
+    * ms → µs scale stay in Catalyst, so bad input fails as an ANSI cast
+    * or multiply does. The synthetic event_id is a deterministic row
+    * hash (remote-write has no event id). */
+  def toEventSamples(payloads: DataFrame, payloadCol: String = "payload"): DataFrame = {
+    import payloads.sparkSession.implicits._
+    payloads.select(col(payloadCol)).as[Array[Byte]]
+      .flatMap(p => decode(p).iterator.flatMap { case (labels, samples) =>
+        val id = seriesIdOf(labels)
+        val (et, uid) = (labels.get("event_type").orNull, labels.get("user_id").orNull)
+        samples.iterator.map { case (tms, v) => (id, et, uid, tms, v) }
+      }).toDF("series_id", "event_type", "user_id", "ts_ms", "value")
       .select(
         col("series_id"),
-        col("labels").getItem("event_type").as("event_type"),
-        col("labels").getItem("user_id").cast("long").as("user_id"),
-        col("ts_us"), col("value"),
-        xxhash64(col("series_id"), col("ts_us"), col("value")).as("event_id"))
+        col("event_type"),
+        col("user_id").cast("long").as("user_id"),
+        (col("ts_ms") * 1000L).as("ts_us"), // remote-write carries ms
+        col("value"))
+      .withColumn("event_id", xxhash64(col("series_id"), col("ts_us"), col("value")))
+  }
 }
 
 /** Prometheus remote-READ — the other direction of the reference's

@@ -68,12 +68,12 @@ object StreamIngest {
     *     ([[graft.tsdb.Series.samples]] for event rows,
     *     [[graft.sources.RemoteWrite.toEventSamples]] for payloads,
     *     [[scrapeSamples]] for a pull loop);
-    *  2. [[graft.tsdb.ChunkStore.appendBatch]] under the batch id. It
-    *     overwrites a batch-scoped directory, so an at-least-once replay
-    *     after a crash rewrites the same directory instead of
-    *     duplicating rows: the checkpoint plays the WAL, and
-    *     restart-from-checkpoint converges to the one-shot batch result
-    *     (StreamRecoverySpec);
+    *  2. [[graft.tsdb.ChunkStore.appendBatch]] under the batch id, one
+    *     Spark job with no shuffle. It overwrites a batch-scoped
+    *     directory, so an at-least-once replay after a crash rewrites
+    *     the same directory instead of duplicating rows: the checkpoint
+    *     plays the WAL, and restart-from-checkpoint converges to the
+    *     one-shot batch result (StreamRecoverySpec);
     *  3. [[graft.tsdb.ChunkStore.compactBatches]] every
     *     `compactEveryBatches` batches (0 = never), so a seconds-trigger
     *     sink keeps (cadence × salts) live files per chunk instead of

@@ -41,6 +41,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, S
   * column rides the live rows. A tier of more than 32 partition
   * directories still pays Spark's parallel-listing job
   * (`spark.sql.sources.parallelPartitionDiscovery.threshold`).
+  * `filesPerChunkPerAppend` bounds the files an append or a
+  * compaction leaves per chunk.
   */
 final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 3600000L,
                        filesPerChunkPerAppend: Int = 8,
@@ -325,6 +327,8 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   private def swap(name: String) =
     new graft.StagedSwap(spark.sparkContext.hadoopConfiguration, path, name)
   private def batchCompactSwap = swap("batch_compact")
+  /** Finish a [[compactBatches]] swap a crash interrupted. */
+  private[graft] def healBatchCompaction(): Unit = batchCompactSwap.complete()
   private def deleteSwap = swap("delete")
   private def restoreSwap = swap("restore")
 
@@ -475,27 +479,28 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
     * One streaming query (one checkpoint) per store path — a fresh
     * checkpoint restarts batch ids at 0 and would overwrite history.
     * Negative ids belong to direct appends and compaction output.
-    * The write is the one Spark action; if it left no `chunk=`
-    * directory (an empty or fully guarded batch), the batch directory
-    * is removed. A crash before that removal leaves a file-less batch
-    * directory, which reads skip and the next [[compactBatches]] removes. */
+    * The write is the one Spark job, with no shuffle: at most
+    * `filesPerChunkPerAppend` tasks, each writing one file per chunk
+    * (so a bulk append over many chunks runs in those few tasks). If
+    * it left no `chunk=` directory (an empty or fully guarded batch),
+    * the batch directory is removed. A crash before that removal leaves
+    * a file-less batch directory, which reads skip and the next
+    * [[compactBatches]] removes. */
   def appendBatch(samples: DataFrame, batchId: Long): Unit = {
     val dir = s"$livePath/batch=$batchId"
-    clustered(guardedRouted(samples))
+    guardedRouted(samples)
+      .coalesce(math.min(spark.sparkContext.defaultParallelism, filesPerChunkPerAppend))
       .write.mode("overwrite").partitionBy("chunk")
       .parquet(dir)
     if (!listNames(dir).exists(_.startsWith("chunk=")))
       hfs.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 
-  /** Cluster on (chunk, salt-of-series) before a partitioned write:
-    * `chunk` alone is a low-cardinality hash key that collapses a
-    * day's ingest into ONE task per chunk (the write-path scale
-    * killer at 100 TB/day); the salt spreads each chunk over up to
-    * `filesPerChunkPerAppend` tasks while keeping the small-files
-    * discipline (≤ salts files per chunk per append, never
-    * tasks × chunks). Explicit numPartitions pins the exchange so
-    * AQE can't coalesce a small batch back into one write task. */
+  /** Cluster [[compactBatches]]' long-lived output on (chunk,
+    * salt-of-series): `chunk` alone would collapse a day into ONE task;
+    * the salt spreads each chunk over up to `filesPerChunkPerAppend`
+    * tasks and keeps a series in one file per chunk. Explicit
+    * numPartitions stops AQE coalescing it back into one write task. */
   private def clustered(df: DataFrame): DataFrame =
     df.repartition(spark.sparkContext.defaultParallelism, col("chunk"),
       pmod(hash(col("series_id")), lit(filesPerChunkPerAppend)))
@@ -601,8 +606,7 @@ final class ChunkStore(spark: SparkSession, val path: String, chunkMs: Long = 36
   /** Compact the live tier: merge every `batch=<id>` directory with id
     * strictly below `upToBatchId` — including direct appends and the
     * output of earlier compactions, which carry NEGATIVE ids — into
-    * one consolidated `batch=-<upToBatchId>` directory (≤ salts files
-    * per chunk, the same `clustered` write discipline as an append).
+    * one consolidated `batch=-<upToBatchId>` directory, `clustered`.
     *
     * Why this is replay-safe where a blanket merge is not: foreachBatch
     * is at-least-once, but Structured Streaming runs batch N only after

@@ -1117,32 +1117,68 @@ class ChunkStoreSpec extends SparkSpec {
       (lit(tsUs * 1000L) + $"id" * 1000000000L).as("ts"), lit(7L).as("user_id"),
       lit("late").as("event_type"), $"id".cast("double").as("value")))
     val sc = spark.sparkContext
-    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
-    // off: adaptive execution runs the write's shuffle map stage as a job of its own
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val persisted = sc.getPersistentRDDs.keySet
-      assert(jobsSubmittedBy(store.appendBatch(samples(day0 + 4 * dayUs, 50), 10L)) == 1)
-      assert(sc.getPersistentRDDs.keySet == persisted)
-      assert(batchDir(10L).isDirectory)
-      val before = answers
-      // every row routed to a closed chunk: the guard drops them all
-      store.appendBatch(samples(day0 + dayUs, 50), 11L)
-      assert(!batchDir(11L).exists())
-      store.appendBatch(samples(day0 + 4 * dayUs, 50).limit(0), 12L)
-      assert(!batchDir(12L).exists())
-      assert(answers == before)
-      // a crash between the write and that removal leaves a committed,
-      // file-less batch directory; the next compaction removes it
-      assert(batchDir(13L).mkdirs())
-      Files.write(new java.io.File(batchDir(13L), "_SUCCESS").toPath, Array.emptyByteArray)
-      store.compactBatches(14L)
-      assert(!batchDir(13L).exists())
-      assert(answers == before)
-    } finally aqe match {
-      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    // under the session default, adaptive execution on
+    val persisted = sc.getPersistentRDDs.keySet
+    assert(jobsSubmittedBy(store.appendBatch(samples(day0 + 4 * dayUs, 50), 10L)) == 1)
+    assert(sc.getPersistentRDDs.keySet == persisted)
+    assert(batchDir(10L).isDirectory)
+    val before = answers
+    // every row routed to a closed chunk: the guard drops them all
+    store.appendBatch(samples(day0 + dayUs, 50), 11L)
+    assert(!batchDir(11L).exists())
+    store.appendBatch(samples(day0 + 4 * dayUs, 50).limit(0), 12L)
+    assert(!batchDir(12L).exists())
+    assert(answers == before)
+    // a crash between the write and that removal leaves a committed,
+    // file-less batch directory; the next compaction removes it
+    assert(batchDir(13L).mkdirs())
+    Files.write(new java.io.File(batchDir(13L), "_SUCCESS").toPath, Array.emptyByteArray)
+    store.compactBatches(14L)
+    assert(!batchDir(13L).exists())
+    assert(answers == before)
+  }
+
+  test("an append of 16 partitions over 3 chunks writes at most filesPerChunkPerAppend files per chunk, with no shuffle") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_coalesced").toString
+    val store = new ChunkStore(spark, dir, chunkMs = 86400000L, filesPerChunkPerAppend = 2)
+    // 3,000 events, one every 86.4 s: days 0-2, in 16 input partitions
+    val samples = Series.samples(spark.range(0, 3000, 1, 16).select($"id".as("event_id"),
+      (lit(day0 * 1000L) + $"id" * 86400000000L).as("ts"), ($"id" % 7).as("user_id"),
+      lit("click").as("event_type"), $"id".cast("double").as("value")))
+    assert(samples.rdd.getNumPartitions == 16)
+    // the write's executed plan, delivered on the listener bus
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.executedPlan match {
+          case w: DataWritingCommandExec if w.cmd.toString.contains(dir) => writes.add(w)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      assert(jobsSubmittedBy(store.appendBatch(samples, 0L)) == 1)
+      val deadline = System.currentTimeMillis() + 30000
+      while (writes.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, "the append's write plan never reached the listener")
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(writes.peek()) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.isEmpty, writes.peek().toString)
+    for (c <- 0L to 2L) {
+      val dirs = liveChunkDirs(dir, day0 / dayUs + c)
+      assert(dirs.size == 1, s"chunk day $c")
+      val files = dirs.head.list().filter(_.endsWith(".parquet"))
+      assert(files.nonEmpty && files.length <= 2, files.mkString(","))
+    }
+    assert(store.live().count() == 3000L)
   }
 
   test("reads racing compactBatches answer as a quiet store or fail retryably") {

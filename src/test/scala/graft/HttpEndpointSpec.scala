@@ -562,10 +562,10 @@ class HttpEndpointSpec extends SparkSpec {
         s"expected ${nReq * samplesPerReq} distinct samples, got $rows")
       assert(store.live().count() == nReq.toLong * samplesPerReq) // no dupes either
       // job count tracks micro-batches: a batch is one appendBatch
-      // write, which adaptive execution (on inside foreachBatch) runs as
-      // two jobs, its shuffle's map stage and the write. No listing or
-      // emptiness job; 300 request-sized append jobs would dwarf this
-      assert(totalJobs <= 2 * drainedBatches && totalJobs < nReq,
+      // write with no shuffle, so one job even with adaptive execution
+      // on inside foreachBatch. No listing or emptiness job; 300
+      // request-sized append jobs would dwarf this
+      assert(totalJobs <= drainedBatches && totalJobs < nReq,
         s"$totalJobs jobs for $drainedBatches drained micro-batches ($nReq requests)")
       // spool backlog bounded: the file-source cleaner removes a
       // batch's files when a LATER batch fetches, so nudge one more
@@ -698,6 +698,41 @@ class HttpEndpointSpec extends SparkSpec {
       endpoint.drain.processAllAvailable()
       assert(store.queryAll(Seq(MatchEq("event_type", "swept")), t0 * 1000L,
         (t0 + 60000L) * 1000L).count() == 3)
+    } finally endpoint.stop()
+  }
+
+  test("start() completes a batch compaction a crash interrupted: a remote-read answers 200 at once") {
+    import spark.implicits._
+    val storeDir = Files.createTempDirectory("graft_http_heal").toString
+    val store = new ChunkStore(spark, storeDir, filesPerChunkPerAppend = 2)
+    for (b <- 0L to 3L)
+      store.appendBatch(RemoteWrite.toEventSamples(Seq(RemoteWrite.encode(Seq(
+        (Map("event_type" -> "healed", "user_id" -> b.toString),
+          (0 until 5).map(i => (t0 + b * 60000L + i * 1000L, i * 1.0)))))).toDF("payload")), b)
+    store.compactBatches(3L) // batch=-3 holds batches 0-2, batch=3 stays
+    // a kill inside the next compaction's commit: its staged copy holds
+    // batch=-3's rows, the plan is marked, and the source is gone (as
+    // StreamCompactionSpec plants it)
+    val swap = new StagedSwap(spark.sparkContext.hadoopConfiguration, storeDir, "batch_compact")
+    new java.io.File(swap.begin()).mkdirs()
+    assert(new java.io.File(s"$storeDir/live/batch=-3")
+      .renameTo(new java.io.File(s"${swap.staging}/batch=-4")))
+    swap.mark(Seq(StagedSwap.Remove("live/batch=-3"), StagedSwap.Swap("batch=-4", "live/batch=-4")))
+    assert(swap.pending)
+    val endpoint = new HttpEndpoint(spark, store)
+    val port = endpoint.start()
+    try {
+      assert(!swap.pending)
+      // a pending swap would hold the read for ChunkStore's 5 s settle,
+      // then answer 400
+      val started = System.currentTimeMillis()
+      val (code, body) = post(port, "/api/v1/read", RemoteRead.encodeRequest(Seq(
+        (t0, t0 + 3600000L, Seq(MatchEq("event_type", "healed"))))))
+      assert(code == 200, new String(body, "UTF-8"))
+      assert(System.currentTimeMillis() - started < 5000)
+      val series = RemoteRead.decodeResponse(body).head
+      assert(series.map(_._1("user_id")).toSet == (0 to 3).map(_.toString).toSet)
+      assert(series.map(_._2.size).sum == 20)
     } finally endpoint.stop()
   }
 

@@ -3,7 +3,9 @@ package graft
 import graft.sources.{RemoteRead, RemoteWrite}
 import graft.streaming.StreamIngest
 import graft.tsdb.{ChunkStore, MatchEq, MatchRe, Series}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Remote-write ingest drill: synthetic snappy+protobuf payloads all
@@ -37,6 +39,85 @@ class RemoteWriteSpec extends SparkSpec {
         .toDF("event_id", "ts", "user_id", "event_type", "value"))
       .select("series_id").distinct().as[String].head()
     assert(viaRemote == viaColumns)
+  }
+
+  /** The Catalyst decode `toEventSamples` replaced, kept as its
+    * reference: a UDF to a label MAP, two explodes, and the series id
+    * derived per sample by [[RemoteWrite.seriesIdOfLabels]]. */
+  private val decodeUdf = udf((p: Array[Byte]) => RemoteWrite.decode(p))
+  private def catalystEventSamples(payloads: DataFrame): DataFrame =
+    payloads
+      .select(explode(decodeUdf(col("payload"))).as("t"))
+      .select(col("t._1").as("labels"), explode(col("t._2")).as("s"))
+      .select(
+        RemoteWrite.seriesIdOfLabels(col("labels")).as("series_id"),
+        col("labels").getItem("event_type").as("event_type"),
+        col("labels").getItem("user_id").cast("long").as("user_id"),
+        (col("s._1") * 1000L).as("ts_us"),
+        col("s._2").as("value"))
+      .withColumn("event_id", xxhash64(col("series_id"), col("ts_us"), col("value")))
+
+  /** Seeded label sets of 5+ labels: `__name__`, non-ASCII names, and
+    * a BMP name above the surrogates (U+FB00) beside a
+    * supplementary-plane one (U+1D4B3), which UTF-8 and UTF-16 order
+    * differently; some series lack `event_type` or `user_id`. */
+  private def randomLabelSets(rnd: scala.util.Random, n: Int): Seq[Map[String, String]] = {
+    val names = Seq("__name__", "job", "instance", "é", "\uFB00", "\uD835\uDCB3", "zone", "Ω")
+    (0 until n).map { _ =>
+      val extra = rnd.shuffle(names).take(3 + rnd.nextInt(names.size - 2))
+        .map(k => k -> s"v${rnd.nextInt(50)}\u00e9\uD83D\uDE00").toMap
+      val et = if (rnd.nextInt(6) == 0) Map.empty else Map("event_type" -> s"e${rnd.nextInt(4)}")
+      val uid = if (rnd.nextInt(6) == 0) Map.empty else Map("user_id" -> rnd.nextInt(100).toString)
+      extra ++ et ++ uid
+    }
+  }
+
+  test("the typed decode equals the Catalyst decode row for row; seriesIdOf is the column id") {
+    val rnd = new scala.util.Random(12)
+    val specials = Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, -1.5e17)
+    val payloads = (0 until 120).map { _ =>
+      RemoteWrite.encode(randomLabelSets(rnd, 1 + rnd.nextInt(6)).map { labels =>
+        labels -> (0 until rnd.nextInt(12)).map { i =>
+          (t0 + rnd.nextInt(1 << 30), if (i % 5 == 0) specials(rnd.nextInt(specials.size))
+          else rnd.nextGaussian() * 1e3)
+        }
+      })
+    }.toDF("payload")
+    val typed = RemoteWrite.toEventSamples(payloads)
+    val ref = catalystEventSamples(payloads)
+    def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(shape(typed) == shape(ref))
+    val n = ref.count()
+    assert(n > 1000 && typed.count() == n)
+    assert(typed.exceptAll(ref).isEmpty && ref.exceptAll(typed).isEmpty)
+
+    // the row-side id is the column-side id over the same map …
+    val maps = randomLabelSets(rnd, 200) ++ Seq(Map.empty[String, String],
+      Map("\uFB00" -> "a", "\uD835\uDCB3" -> "b"))
+    val byColumn = maps.toDF("labels")
+      .select(RemoteWrite.seriesIdOfLabels(col("labels"))).as[String].collect().toSeq
+    assert(maps.map(RemoteWrite.seriesIdOf) == byColumn)
+    // … and the fixed-column id of {event_type, user_id}
+    val fixed = spark.range(1).select(Series.seriesId(
+      Seq("user_id" -> lit(7L), "event_type" -> lit("purchase")))).as[String].head()
+    assert(RemoteWrite.seriesIdOf(Map("event_type" -> "purchase", "user_id" -> "7")) == fixed)
+  }
+
+  test("a non-numeric user_id or an overflowing timestamp fails the typed decode as the Catalyst one") {
+    def conditions(df: DataFrame): Seq[String] = {
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collect {
+        case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+      }.toSeq.distinct
+    }
+    for ((labels, tms, condition) <- Seq(
+      (Map("event_type" -> "click", "user_id" -> "u-7"), t0, "CAST_INVALID_INPUT"),
+      (Map("event_type" -> "click", "user_id" -> "7"), Long.MaxValue / 10, "ARITHMETIC_OVERFLOW"))) {
+      val payloads = Seq(RemoteWrite.encode(Seq(labels -> Seq((tms, 1.0))))).toDF("payload")
+      val typed = conditions(RemoteWrite.toEventSamples(payloads))
+      assert(typed.contains(condition), typed)
+      assert(typed == conditions(catalystEventSamples(payloads)))
+    }
   }
 
   test("streamed remote-write payloads land in a ChunkStore and answer matcher queries") {
